@@ -433,20 +433,19 @@ class Engine:
           intersecting files (r10).
         * single-table aggregates: same range clustering on the GROUP BY
           keys (delta tombstones key on them).
-        * two-table inner-join SPJ (r11): storage rows remember the
-          (rid_a, rid_b) of the source-row PAIR that produced them —
-          an inner join emits one row per matching pair, so the pair is a
-          KEY of the view multiset; changelog maintenance eq-deletes on it
-          and the storage range-clusters on rid_a (disjoint per-file rid_a
-          ranges → bounds-pruned victim application), closing the O(|V|)
-          content-join read the multiset fallback paid per delta refresh.
+        * inner-join SPJ chains (2..n relations) and two-table LEFT-join
+          SPJ: storage rows remember the rid tuple of the source rows that
+          produced them — an inner join emits one row per matching tuple,
+          so the tuple is a KEY of the view multiset; changelog maintenance
+          eq-deletes on it and the storage range-clusters on rid_a
+          (disjoint per-file rid_a ranges → bounds-pruned victim
+          application), closing the O(|V|) content-join read the multiset
+          fallback paid per delta refresh.
         * everything else: engine defaults."""
         import pyspark.sql.types as _T
 
         from iceberg_rust_custom_spark.views.incremental import (
             SRC_ROW_ID,
-            SRC_ROW_ID_A,
-            SRC_ROW_ID_B,
             classify_view_sql,
             src_row_id_cols,
         )
@@ -462,16 +461,6 @@ class Engine:
             sort_by = [SRC_ROW_ID]
             props = {"write.distribution-mode": "range"}
         elif self._mv_lineage_join_sql(sql, plan):
-            result_schema = _T.StructType(
-                list(result_schema.fields)
-                + [
-                    _T.StructField(SRC_ROW_ID_A, _T.LongType(), True),
-                    _T.StructField(SRC_ROW_ID_B, _T.LongType(), True),
-                ]
-            )
-            sort_by = [SRC_ROW_ID_A, SRC_ROW_ID_B]
-            props = {"write.distribution-mode": "range"}
-        elif self._mv_lineage_joinN_sql(sql, plan):
             rid = src_row_id_cols(len(plan.relations))
             result_schema = _T.StructType(
                 list(result_schema.fields)
@@ -483,11 +472,11 @@ class Engine:
             out_names = {f.name for f in result_schema.fields}
             if (
                 plan is not None
-                and plan.mode in ("aggregate", "join_agg", "joinN_agg", "agg_recompute")
+                and plan.mode in ("aggregate", "joinN_agg", "agg_recompute")
                 and plan.group_keys
                 and all(k in out_names for k in plan.group_keys)
             ):
-                # group-keyed storage (join_agg r12): refreshes eq-delete
+                # group-keyed storage (r12): refreshes eq-delete
                 # by group key, so clustering on it bounds-prunes victims
                 sort_by = list(plan.group_keys)
                 props = {"write.distribution-mode": "range"}
@@ -561,55 +550,27 @@ class Engine:
             return None
 
     def _mv_lineage_join_sql(self, sql: str, plan=None) -> str | None:
-        """The pair-lineage-instrumented rewrite of a two-table join SPJ
-        view SQL — inner (views/incremental.py::join_lineage_sql) or LEFT
-        outer (r13, ::left_join_lineage_sql; rid_b is naturally NULL on
-        null-extended rows) — or None when the shape or either source
-        (both must be plain tables) rules it out. Pass an
-        already-classified ``plan`` to skip re-parsing (review r11: one
-        refresh was classifying the same SQL four times and loading both
-        sources twice)."""
+        """The slot-lineage-instrumented rewrite of a join SPJ view SQL —
+        an inner-join chain (views/incremental.py::joinN_lineage_sql) or a
+        two-table LEFT join (::left_join_lineage_sql; rid_b is naturally
+        NULL on null-extended rows) — or None when the shape or any source
+        (all must be plain tables) rules it out. Pass an
+        already-classified ``plan`` to skip re-parsing."""
         from iceberg_rust_custom_spark.views.incremental import (
             classify_view_sql,
-            join_lineage_sql,
+            joinN_lineage_sql,
             left_join_lineage_sql,
         )
 
         if plan is None:
             plan = classify_view_sql(sql)
-        if plan is None or plan.mode not in ("join", "left_join"):
+        if plan is None or plan.mode not in ("joinN", "left_join"):
             return None
         lsql = (
-            join_lineage_sql(sql)
-            if plan.mode == "join"
+            joinN_lineage_sql(sql)
+            if plan.mode == "joinN"
             else left_join_lineage_sql(sql)
         )
-        if lsql is None:
-            return None
-        for rel in (plan.relation, plan.relation_b):
-            rel_cat, ident = self.resolve(rel)
-            if not rel_cat.tabular_exists(ident):
-                return None
-            _, kind = rel_cat.load(ident)
-            if kind != "table":
-                return None
-        return lsql
-
-    def _mv_lineage_joinN_sql(self, sql: str, plan=None) -> str | None:
-        """The slot-lineage-instrumented rewrite of an n-relation
-        inner-join SPJ view SQL (views/incremental.py::joinN_lineage_sql),
-        or None when the shape or any source (all must be plain tables)
-        rules it out."""
-        from iceberg_rust_custom_spark.views.incremental import (
-            classify_view_sql,
-            joinN_lineage_sql,
-        )
-
-        if plan is None:
-            plan = classify_view_sql(sql)
-        if plan is None or plan.mode != "joinN":
-            return None
-        lsql = joinN_lineage_sql(sql)
         if lsql is None:
             return None
         for rel in plan.relations:
@@ -621,29 +582,10 @@ class Engine:
                 return None
         return lsql
 
-    def _sql_with_joinN_lineage(self, sql: str):
-        """Run the slot-lineage join rewrite with all n sources
-        registered as row-lineage scans; None → caller uses the plain SQL
-        (and null-fills the hidden rid columns)."""
-        from iceberg_rust_custom_spark.views.incremental import classify_view_sql
-
-        plan = classify_view_sql(sql)
-        lsql = self._mv_lineage_joinN_sql(sql, plan)
-        if lsql is None:
-            return None
-        try:
-            for rel in plan.relations:
-                self.load_table(rel).scan(row_lineage=True).drop(
-                    "_last_updated_sequence_number"
-                ).createOrReplaceTempView(transform_name(rel))
-            return self.spark.sql(transform_relations(lsql))
-        except Exception:
-            return None
-
     def _sql_with_join_lineage(self, sql: str):
-        """Run the pair-lineage-instrumented join rewrite with BOTH sources
-        registered as row-lineage scans; None → caller uses the plain SQL
-        (and null-fills the hidden pair columns)."""
+        """Run the slot-lineage join rewrite with every source registered
+        as a row-lineage scan; None → caller uses the plain SQL (and
+        null-fills the hidden rid columns)."""
         from iceberg_rust_custom_spark.views.incremental import classify_view_sql
 
         plan = classify_view_sql(sql)
@@ -651,7 +593,7 @@ class Engine:
         if lsql is None:
             return None
         try:
-            for rel in (plan.relation, plan.relation_b):
+            for rel in plan.relations:
                 self.load_table(rel).scan(row_lineage=True).drop(
                     "_last_updated_sequence_number"
                 ).createOrReplaceTempView(transform_name(rel))
@@ -792,7 +734,21 @@ class Engine:
         materialized_view.rs:147-159).
 
         Returns False when already fresh, else the refresh flavor that ran:
-        "full" | "incremental-append" | "incremental-aggregate"."""
+
+        * ``"full"`` — full recompute (forced, or incremental ruled out);
+        * ``"incremental-noop"`` — the delta touched no group: state only;
+        * single-table SPJ: ``"incremental-append"`` (appends-only
+          history), ``"incremental-changelog"`` (MoR row-level ops);
+        * single-table GROUP BY: ``"incremental-aggregate"`` (partial
+          merge), ``"incremental-changelog-aggregate"`` (MoR row-level
+          ops), ``"incremental-agg-recompute"`` (non-decomposable
+          aggregates or expression keys);
+        * two-table inner-join SPJ: ``"incremental-join"`` (appends-only
+          history), ``"incremental-changelog-join"`` (MoR row-level ops);
+          n ≥ 3 relations: ``"incremental-join{n}"``;
+        * inner-join GROUP BY: ``"incremental-join-aggregate"`` (two
+          tables), ``"incremental-join{n}-aggregate"`` (n ≥ 3);
+        * LEFT-join SPJ: ``"incremental-left-join"``."""
         md = self._load_view_metadata(name)
         freshness = self.materialized_view_freshness(name)
         if freshness and all(v == "fresh" for v in freshness.values()):
@@ -822,11 +778,7 @@ class Engine:
                 # shuffle everything into ONE task — keep the plan's layout
                 null_rid_fill = True
         elif _INC.SRC_ROW_ID_A in storage_cols:
-            result = (
-                self._sql_with_joinN_lineage(md.current_sql())
-                if _INC.SRC_ROW_ID_C in storage_cols  # n >= 3 slots
-                else self._sql_with_join_lineage(md.current_sql())
-            )
+            result = self._sql_with_join_lineage(md.current_sql())
             if result is None:  # same null-fill contract as the SPJ shape
                 from pyspark.sql import functions as _F
 
@@ -905,10 +857,6 @@ class Engine:
             == "false"
         ):
             return False
-        if plan.mode == "join":
-            return self._incremental_join_refresh(md, plan, storage)
-        if plan.mode == "join_agg":
-            return self._incremental_join_agg_refresh(md, plan, storage)
         if plan.mode == "joinN":
             return self._incremental_joinN_refresh(md, plan, storage)
         if plan.mode == "joinN_agg":
@@ -1530,335 +1478,84 @@ class Engine:
         )
         return True
 
-    def _incremental_join_refresh(self, md, plan, storage=None):
-        """Delta-join maintenance for two-table inner-join views:
-
-            Δ(A ⋈ B) = ΔA ⋈ B_new  ∪  A_old ⋈ ΔB
-
-        (B_new = B_old ∪ ΔB absorbs the ΔA ⋈ ΔB cross term). Sound for any
-        inner-join condition and WHERE clause because ⋈ and σ distribute
-        over ∪; requires appends-only history on BOTH sources. At scale the
-        deltas are day-sized while A_old/B_new scans still prune by the
-        join's pushed-down predicates — refresh cost tracks |ΔA|·|B| join
-        work, not a full V recompute, and the storage commit is an APPEND,
-        not a rewrite.
-
-        When either source's history contains MoR row-level ops (but is
-        still changelog-replayable — ``history_kind`` == 'changelog'), the
-        same identity runs over SIGNED deltas from ``Table.changes`` —
-        see ``_changelog_join_refresh``."""
+    def _join_refresh_sources(self, plan, storage):
+        """(sources, anchor snapshot ids, history kinds) of a join MV's
+        relations, or None — full refresh — when a relation is not a plain
+        table, has no anchor in the storage's refresh state, or saw a
+        file-set replacement since it (``history_kind``)."""
         from iceberg_rust_custom_spark.views.incremental import history_kind
 
-        rels = (plan.relation, plan.relation_b)
-        sources = []
-        for rel in rels:
+        stored = self._storage_refresh_state(storage).get("source-table-states", {})
+        sources, anchors, kinds = [], [], []
+        for rel in plan.relations:
             rel_cat, ident = self.resolve(rel)
             if not rel_cat.tabular_exists(ident):
-                return False
+                return None
             _, kind = rel_cat.load(ident)
             if kind != "table":
-                return False
-            sources.append(self.load_table(rel))
-        storage = storage or self.load_table(md.storage_table)
-        stored = self._storage_refresh_state(storage).get("source-table-states", {})
-        anchors, kinds = [], []
-        for src in sources:
+                return None
+            src = self.load_table(rel)
             sid = stored.get(src.metadata.table_uuid)
             hist = history_kind(src.metadata, sid) if sid is not None else None
             if hist is None:
-                return False  # no anchor, or file-set replacement in range
+                return None
+            sources.append(src)
             anchors.append(sid)
             kinds.append(hist)
-        if "changelog" in kinds:
-            return self._changelog_join_refresh(md, plan, rels, sources, anchors, storage)
+        return sources, anchors, kinds
 
-        a, b = sources
-        a_sid, b_sid = anchors
-        sql = md.current_sql()
-        out_cols = [f.name for f in storage.metadata.current_schema().fields]
-        lsql = (
-            self._mv_lineage_join_sql(sql, plan) if _INC.SRC_ROW_ID_A in out_cols else None
-        )
-
-        if lsql is not None:
-            # pair-lineage storage (r11): the delta rows carry both source
-            # rids so later changelog refreshes can eq-delete by pair.
-            # Appends-only history means the changelog is pure inserts.
-            run_sql = transform_relations(lsql)
-            # persist: each delta feeds the key-probe job AND its join arm
-            # (the SPJ path's same caching rationale — changes() plans MoR
-            # tombstones; running those jobs twice wastes the pruning win)
-            da = a.changes(
-                a.metadata.snapshots[a_sid].sequence_number, with_lineage=True
-            ).drop("_change_type").persist()
-            db = b.changes(
-                b.metadata.snapshots[b_sid].sequence_number, with_lineage=True
-            ).drop("_change_type").persist()
-            try:
-                b_pred = a_pred = None
-                ekeys = _INC.join_equi_keys(sql)
-                if ekeys:  # file-prune the full-side arms (r11; compound r12)
-                    try:
-                        b_pred = self._join_delta_key_predicate(
-                            da, [(bc, ac) for ac, bc in ekeys]
-                        )
-                        a_pred = self._join_delta_key_predicate(
-                            db, [(ac, bc) for ac, bc in ekeys]
-                        )
-                    except Exception:
-                        b_pred = a_pred = None
-                da.createOrReplaceTempView(transform_name(rels[0]))
-                b.scan(predicate=b_pred, row_lineage=True).drop(
-                    "_last_updated_sequence_number"
-                ).createOrReplaceTempView(transform_name(rels[1]))
-                part1 = self.spark.sql(run_sql)
-                a.scan(predicate=a_pred, snapshot_id=a_sid, row_lineage=True).drop(
-                    "_last_updated_sequence_number"
-                ).createOrReplaceTempView(transform_name(rels[0]))
-                db.createOrReplaceTempView(transform_name(rels[1]))
-                part2 = self.spark.sql(run_sql)
-                delta_result = part1.unionByName(part2).select(*out_cols).localCheckpoint()
-            finally:
-                da.unpersist()
-                db.unpersist()
-        else:
-            da = a.incremental_scan(a.metadata.snapshots[a_sid].sequence_number).persist()
-            db = b.incremental_scan(b.metadata.snapshots[b_sid].sequence_number).persist()
-            try:
-                b_pred = a_pred = None
-                ekeys = _INC.join_equi_keys(sql)
-                if ekeys:  # file-prune the full-side arms (r11; compound r12)
-                    try:
-                        b_pred = self._join_delta_key_predicate(
-                            da, [(bc, ac) for ac, bc in ekeys]
-                        )
-                        a_pred = self._join_delta_key_predicate(
-                            db, [(ac, bc) for ac, bc in ekeys]
-                        )
-                    except Exception:
-                        b_pred = a_pred = None
-                # part 1: ΔA ⋈ B_new
-                da.createOrReplaceTempView(transform_name(rels[0]))
-                b.scan(predicate=b_pred).createOrReplaceTempView(transform_name(rels[1]))
-                part1 = self.spark.sql(transform_relations(sql))
-                # part 2: A_old ⋈ ΔB (spark.sql binds views eagerly, so
-                # re-registering the same names here does not disturb part1's
-                # resolved plan)
-                a.scan(predicate=a_pred, snapshot_id=a_sid).createOrReplaceTempView(
-                    transform_name(rels[0])
-                )
-                db.createOrReplaceTempView(transform_name(rels[1]))
-                part2 = self.spark.sql(transform_relations(sql))
-                delta_result = part1.unionByName(part2).localCheckpoint()
-            finally:
-                da.unpersist()
-                db.unpersist()
-
-        new_state = {
-            "refresh-version-id": md.current_version_id,
-            "source-table-states": {
-                src.metadata.table_uuid: src.metadata.current_snapshot_id for src in sources
-            },
-        }
-        data_dir = os.path.join(storage.metadata.location, "data", _uuid.uuid4().hex[:12])
-        files = write_partitioned(delta_result, storage.metadata, data_dir, small_hint=True)
-        storage.metadata = (
-            storage.new_transaction().append_with_lineage(files, new_state).commit()
-        )
-        return "incremental-join"
-
-    def _changelog_join_refresh(self, md, plan, rels, sources, anchors, storage):
-        """Delta-join maintenance under MoR row-level ops on either source:
-        the same identity as ``_incremental_join_refresh`` but over SIGNED
-        multiset deltas (ΔX = Δ⁺X − Δ⁻X from the row-level changelog):
-
-            Δ⁺V = Δ⁺A ⋈ B_new  ∪  A_old ⋈ Δ⁺B
-            Δ⁻V = Δ⁻A ⋈ B_new  ∪  A_old ⋈ Δ⁻B
-
-        Exact because ⋈/σ/π are linear over signed multisets:
-        ΔA⋈B_new + A_old⋈ΔB = A_new⋈B_new − A_old⋈B_old.
-
-        **Pair-lineage storage commit (r11, VERDICT r10 #2).** An inner
-        join emits one output row per matching (a-row, b-row) pair, so
-        (rid_a, rid_b) is a KEY of the view multiset. When the storage
-        carries the hidden pair columns and all row ids are non-null, the
-        net sides are delta-sized exceptAlls and the commit is
-        ``_commit_storage_delta``: Δ⁻ as ONE MoR equality-delete set on the
-        two long rid keys (storage range-clusters on rid_a, so application
-        bounds-prunes to the few intersecting files), Δ⁺ as an append —
-        no pre-existing storage file is read OR rewritten. Cross terms net
-        out exactly: a pair in both Δ⁺V and Δ⁻V (e.g. A-row deleted
-        in-range joining a B-row inserted in-range) cancels before the
-        commit, and an updated pair (same rids, new content) eq-deletes
-        its old row while the same-commit append — which equality deletes
-        never touch (sequence gating) — lands the new version.
-
-        Legacy storages (no pair columns), NULL row ids, or unjoinable
-        output types fall back to the multiset content commit
-        (``_multiset_delta_commit`` — position tombstones discovered by a
-        range-pruned content join; delta-sized writes, storage-sized reads
-        in the worst case), never a wrong answer."""
-        from pyspark.sql import functions as F  # noqa: F401  (parity with siblings)
-
-        a, b = sources
-        a_sid, b_sid = anchors
-        sql = md.current_sql()
-        out_cols = [f.name for f in storage.metadata.current_schema().fields]
-        rid_cols = [_INC.SRC_ROW_ID_A, _INC.SRC_ROW_ID_B]
-        has_pair = all(c in out_cols for c in rid_cols)
-        lsql = self._mv_lineage_join_sql(sql, plan) if has_pair else None
-
-        new_state = {
-            "refresh-version-id": md.current_version_id,
-            "source-table-states": {
-                src.metadata.table_uuid: src.metadata.current_snapshot_id for src in sources
-            },
-        }
-        data_dir = os.path.join(storage.metadata.location, "data", _uuid.uuid4().hex[:12])
-
-        def run(run_sql, df_a, df_b, cols):
-            # spark.sql binds temp views eagerly, so sequential
-            # re-registration under the same names is safe (see sibling)
-            df_a.createOrReplaceTempView(transform_name(rels[0]))
-            df_b.createOrReplaceTempView(transform_name(rels[1]))
-            return self.spark.sql(run_sql).select(*cols)
-
-        if lsql is not None and self._storage_cols_joinable(storage, out_cols):
-            # the rid fast path needs non-null pair ids on BOTH sides —
-            # same probe contract as the SPJ changelog path (ADVICE r8);
-            # metadata-first via footer null counts (r11)
-            if self._storage_rids_ok(storage, rid_cols):
-                deltas, cached = [], []
-                try:
-                    for src, sid in zip(sources, anchors):
-                        deltas.append(
-                            src.changes(
-                                src.metadata.snapshots[sid].sequence_number,
-                                with_lineage=True,
-                            ).persist()
-                        )
-                except ValueError:
-                    for d in deltas:
-                        d.unpersist()
-                    return False  # commit shape the changelog cannot replay
-                try:
-                    if all(
-                        d.where("_row_id IS NULL").limit(1).count() == 0 for d in deltas
-                    ):
-                        (a_ins, a_del), (b_ins, b_del) = (
-                            (
-                                ch.where(
-                                    "_change_type IN ('insert', 'update_after')"
-                                ).drop("_change_type"),
-                                ch.where(
-                                    "_change_type IN ('delete', 'update_before')"
-                                ).drop("_change_type"),
-                            )
-                            for ch in deltas
-                        )
-                        run_sql = transform_relations(lsql)
-                        # equi-join: file-prune the FULL-side arms by the
-                        # delta's key values (r11 — the full scans dominate
-                        # refresh wall at x1000 storage scale)
-                        b_pred = a_pred = None
-                        ekeys = _INC.join_equi_keys(sql)
-                        if ekeys:
-                            try:
-                                b_pred = self._join_delta_key_predicate(
-                                    deltas[0], [(bc, ac) for ac, bc in ekeys]
-                                )
-                                a_pred = self._join_delta_key_predicate(
-                                    deltas[1], [(ac, bc) for ac, bc in ekeys]
-                                )
-                            except Exception:
-                                b_pred = a_pred = None
-                        b_new = b.scan(predicate=b_pred, row_lineage=True).drop(
-                            "_last_updated_sequence_number"
-                        )
-                        a_old = a.scan(
-                            predicate=a_pred, snapshot_id=a_sid, row_lineage=True
-                        ).drop("_last_updated_sequence_number")
-                        # persist both sides: the commit runs TWO actions
-                        # (eq-delete write, then the append) — without this
-                        # each re-evaluates all four join arms (review r12)
-                        pos = run(run_sql, a_ins, b_new, out_cols).unionByName(
-                            run(run_sql, a_old, b_ins, out_cols)
-                        ).persist()
-                        neg = run(run_sql, a_del, b_new, out_cols).unionByName(
-                            run(run_sql, a_old, b_del, out_cols)
-                        ).persist()
-                        cached.extend((pos, neg))
-                        # NET both sides: intermediate versions and
-                        # cross-term pairs cancel (see docstring); the
-                        # delete keys come from the NETTED side only
-                        net_ins = pos.exceptAll(neg)
-                        net_del = neg.exceptAll(pos)
-                        del_keys = net_del.select(*rid_cols).distinct()
-                        self._commit_storage_delta(
-                            storage, del_keys, net_ins, new_state, data_dir
-                        )
-                        return "incremental-changelog-join"
-                finally:
-                    for d in deltas + cached:
-                        d.unpersist()
-                # NULL source row ids (pre-lineage rows): fall through to
-                # the multiset path — never a wrong answer
-
-        # multiset content fallback: plain (no-lineage) changelog deltas,
-        # visible columns only; any rid columns null-fill on the inserts
+    @staticmethod
+    def _persisted_deltas(sources, anchors, kinds, fn):
+        """``fn(src, anchor sequence number, history kind)`` per source,
+        persisted — each delta feeds its key-probe jobs AND its join arms.
+        None when the changelog cannot replay a commit shape in range."""
         deltas = []
         try:
-            for src, sid in zip(sources, anchors):
-                deltas.append(
-                    src.changes(src.metadata.snapshots[sid].sequence_number).persist()
-                )
+            for src, sid, hist in zip(sources, anchors, kinds):
+                seq = src.metadata.snapshots[sid].sequence_number
+                deltas.append(fn(src, seq, hist).persist())
         except ValueError:
             for d in deltas:
                 d.unpersist()
-            return False  # commit shape the changelog cannot replay
-        (a_ins, a_del), (b_ins, b_del) = (
-            (
-                ch.where("_change_type = 'insert'").drop("_change_type"),
-                ch.where("_change_type = 'delete'").drop("_change_type"),
-            )
-            for ch in deltas
+            return None
+        return deltas
+
+    @staticmethod
+    def _slot_pairs(ekeys):
+        """``pairs_between(x, y)`` over an {(i, j): [(col on slot i, col on
+        slot j)]} map (i < j): the pairs oriented (col on x, col on y), or
+        None."""
+
+        def pairs_between(x: int, y: int):
+            p = ekeys.get((min(x, y), max(x, y)))
+            if not p:
+                return None
+            return list(p) if x < y else [(cy, cx) for cx, cy in p]
+
+        return pairs_between
+
+    def _delta_arm_preds(self, sources, anchors, pairs_between, delta, i: int) -> dict:
+        """Scan predicates for delta arm i's full slots: direct pairs prune
+        by the delta's keys, then one propagation wave prunes slots
+        reachable through an already-pruned slot (slots before i stage at
+        their anchor snapshot)."""
+        preds: dict[int, object] = {}
+        for j in range(len(sources)):
+            if j == i:
+                continue
+            pj = pairs_between(j, i)
+            if pj:
+                try:
+                    preds[j] = self._join_delta_key_predicate(delta, pj)
+                except Exception:
+                    pass
+        return self._propagate_equi_preds(
+            sources,
+            preds,
+            pairs_between,
+            lambda k: anchors[k] if k < i else None,
+            forbidden={i},
         )
-        vis = [c for c in out_cols if c not in rid_cols]
-        plain_sql = transform_relations(sql)
-        b_pred = a_pred = None
-        ekeys = _INC.join_equi_keys(sql)
-        if ekeys:
-            try:
-                b_pred = self._join_delta_key_predicate(
-                    deltas[0], [(bc, ac) for ac, bc in ekeys]
-                )
-                a_pred = self._join_delta_key_predicate(
-                    deltas[1], [(ac, bc) for ac, bc in ekeys]
-                )
-            except Exception:
-                b_pred = a_pred = None
-        b_new = b.scan(predicate=b_pred)
-        a_old = a.scan(predicate=a_pred, snapshot_id=a_sid)
-        pos = run(plain_sql, a_ins, b_new, vis).unionByName(
-            run(plain_sql, a_old, b_ins, vis)
-        ).persist()
-        neg = run(plain_sql, a_del, b_new, vis).unionByName(
-            run(plain_sql, a_old, b_del, vis)
-        ).persist()
-        # delta-sized multiset commit (position tombstones + append); the
-        # truncating identity (V ∪ Δ⁺) ∖ Δ⁻ = (V ∖ (Δ⁻ ∖ Δ⁺)) ∪ (Δ⁺ ∖ Δ⁻)
-        # keeps cross-term rows exact without unioning positives first (r9
-        # — previously this path rewrote the full storage every refresh)
-        try:
-            ran = self._multiset_delta_commit(
-                storage, pos, neg, vis, new_state, data_dir, null_rid=has_pair
-            )
-            # unjoinable column types → None: exceptAll would hit the same
-            # restriction; full refresh is the always-correct fallback
-            return "incremental-changelog-join" if ran is not None else False
-        finally:
-            for d in deltas + [pos, neg]:
-                d.unpersist()
 
     @staticmethod
     def _propagate_equi_preds(sources, preds, pairs_between, snap_for, forbidden=frozenset()):
@@ -1896,11 +1593,10 @@ class Engine:
         return preds
 
     def _incremental_joinN_refresh(self, md, plan, storage=None):
-        """Delta maintenance for n-relation inner-join SPJ views (r12:
-        n=3 with hard-coded slots; r13 generalizes to the relation list,
-        VERDICT r12 #1) via the telescoping identity over signed multiset
-        deltas (⋈/σ/π are linear, so the n=2 algebra generalizes) — for
-        n=3:
+        """Delta maintenance for n-relation inner-join SPJ views (n ≥ 2)
+        via the telescoping identity over signed multiset deltas (⋈/σ/π
+        are linear) — for n=2 it is the delta-join identity
+        Δ(A ⋈ B) = ΔA ⋈ B_new ∪ A_old ⋈ ΔB, and for n=3:
 
             V_new − V_old = ΔA ⋈ B_new ⋈ C_new
                           ∪ A_old ⋈ ΔB ⋈ C_new
@@ -1910,8 +1606,12 @@ class Engine:
         cross terms land exactly once; with signed deltas the positive
         side uses each slot's insert events and the negative side its
         delete events, and the two sides NET via exceptAll before
-        committing (intermediate versions and cross-term tuples cancel,
-        same as the 2-table path).
+        committing (intermediate versions and cross-term tuples cancel).
+
+        **Appends-only history** on every source: the deltas are pure
+        inserts, so only the insert arms run and the result commits as a
+        plain append (``append_with_lineage``) — no signed deltas, no
+        exceptAll, no eq-delete write.
 
         **Slot-lineage commit**: an inner join emits one output row per
         matching (r_0, …, r_{n-1}) source-row tuple, so the rid tuple is
@@ -1933,36 +1633,25 @@ class Engine:
         Legacy storages, NULL rids, or unjoinable output types fall back
         to the multiset content commit; a non-replayable commit shape or
         file-set replacement falls back to a full refresh — never a wrong
-        answer."""
+        answer. Labels: "incremental-join" (appends-only) and
+        "incremental-changelog-join" for n=2, "incremental-join{n}" for
+        n ≥ 3."""
         from functools import reduce
 
-        from iceberg_rust_custom_spark.views.incremental import history_kind
-
+        storage = storage or self.load_table(md.storage_table)
+        found = self._join_refresh_sources(plan, storage)
+        if found is None:
+            return False
+        sources, anchors, kinds = found
         rels = plan.relations
         n = len(rels)
-        sources = []
-        for rel in rels:
-            rel_cat, ident = self.resolve(rel)
-            if not rel_cat.tabular_exists(ident):
-                return False
-            _, kind = rel_cat.load(ident)
-            if kind != "table":
-                return False
-            sources.append(self.load_table(rel))
-        storage = storage or self.load_table(md.storage_table)
-        stored = self._storage_refresh_state(storage).get("source-table-states", {})
-        anchors = []
-        for src in sources:
-            sid = stored.get(src.metadata.table_uuid)
-            if sid is None or history_kind(src.metadata, sid) is None:
-                return False  # no anchor, or file-set replacement in range
-            anchors.append(sid)
         sql = md.current_sql()
         out_cols = [f.name for f in storage.metadata.current_schema().fields]
         rid_cols = _INC.src_row_id_cols(n)
+        vis = [c for c in out_cols if c not in rid_cols]
         has_rids = all(c in out_cols for c in rid_cols)
-        lsql = self._mv_lineage_joinN_sql(sql, plan) if has_rids else None
-        ekeys = _INC.joinN_equi_keys(sql) or {}
+        lsql = self._mv_lineage_join_sql(sql, plan) if has_rids else None
+        pairs_between = self._slot_pairs(_INC.joinN_equi_keys(sql) or {})
         new_state = {
             "refresh-version-id": md.current_version_id,
             "source-table-states": {
@@ -1971,43 +1660,15 @@ class Engine:
             },
         }
         data_dir = os.path.join(storage.metadata.location, "data", _uuid.uuid4().hex[:12])
-
-        def pairs_between(x: int, y: int):
-            """[(col on rel_x, col on rel_y)] or None."""
-            p = ekeys.get((min(x, y), max(x, y)))
-            if not p:
-                return None
-            return list(p) if x < y else [(cy, cx) for cx, cy in p]
-
-        def arm_preds(delta_all, i: int) -> dict:
-            """Scan predicates for arm i's full slots: direct pairs prune
-            by the delta's keys, then one propagation wave prunes slots
-            reachable through an already-pruned slot."""
-            preds: dict[int, object] = {}
-            for j in range(n):
-                if j == i:
-                    continue
-                pj = pairs_between(j, i)
-                if pj:
-                    try:
-                        preds[j] = self._join_delta_key_predicate(delta_all, pj)
-                    except Exception:
-                        pass
-            return self._propagate_equi_preds(
-                sources,
-                preds,
-                pairs_between,
-                lambda k, _i=i: anchors[k] if k < _i else None,
-                forbidden={i},
-            )
+        label = f"incremental-join{n}" if n > 2 else "incremental-changelog-join"
 
         def run_arms(run_sql, deltas_split, cols, row_lineage: bool):
-            """pos/neg DataFrames from the n telescoped arms.
-            deltas_split[i] = (all_events, ins_events, del_events)."""
-            pos_parts, neg_parts = [], []
+            """One DataFrame per event sign from the n telescoped arms.
+            deltas_split[i] = (all_events, signed_events, …)."""
+            parts = [[] for _ in deltas_split[0][1:]]
             for i in range(n):
-                all_i, ins_i, del_i = deltas_split[i]
-                preds = arm_preds(all_i, i)
+                all_i, *signed_i = deltas_split[i]
+                preds = self._delta_arm_preds(sources, anchors, pairs_between, all_i, i)
                 fulls = {}
                 for j in range(n):
                     if j == i:
@@ -2020,32 +1681,53 @@ class Engine:
                     if row_lineage:
                         df = df.drop("_last_updated_sequence_number")
                     fulls[j] = df
-                for sign_df, parts in ((ins_i, pos_parts), (del_i, neg_parts)):
+                for sign_df, out in zip(signed_i, parts):
                     for j in range(n):
                         (sign_df if j == i else fulls[j]).createOrReplaceTempView(
                             transform_name(rels[j])
                         )
-                    parts.append(self.spark.sql(run_sql).select(*cols))
-            return (
-                reduce(lambda x, y: x.unionByName(y), pos_parts),
-                reduce(lambda x, y: x.unionByName(y), neg_parts),
+                    out.append(self.spark.sql(run_sql).select(*cols))
+            return [reduce(lambda x, y: x.unionByName(y), p) for p in parts]
+
+        if all(k == "appends" for k in kinds):
+            # pure-insert deltas; on a lineage storage the changelog of the
+            # range carries each inserted row's _row_id
+            deltas = self._persisted_deltas(
+                sources,
+                anchors,
+                kinds,
+                lambda src, seq, _: src.changes(seq, with_lineage=True).drop("_change_type")
+                if lsql is not None
+                else src.incremental_scan(seq),
             )
+            if deltas is None:
+                return False
+            try:
+                (delta_result,) = run_arms(
+                    transform_relations(lsql or sql),
+                    [(d, d) for d in deltas],
+                    out_cols if lsql is not None else vis,
+                    lsql is not None,
+                )
+                delta_result = delta_result.localCheckpoint()
+            finally:
+                for d in deltas:
+                    d.unpersist()
+            files = write_partitioned(delta_result, storage.metadata, data_dir, small_hint=True)
+            storage.metadata = (
+                storage.new_transaction().append_with_lineage(files, new_state).commit()
+            )
+            return f"incremental-join{n}" if n > 2 else "incremental-join"
 
         if lsql is not None and self._storage_cols_joinable(storage, out_cols):
             if self._storage_rids_ok(storage, rid_cols):
-                deltas, cached = [], []
-                try:
-                    for src, sid in zip(sources, anchors):
-                        deltas.append(
-                            src.changes(
-                                src.metadata.snapshots[sid].sequence_number,
-                                with_lineage=True,
-                            ).persist()
-                        )
-                except ValueError:
-                    for d in deltas:
-                        d.unpersist()
-                    return False  # commit shape the changelog cannot replay
+                deltas = self._persisted_deltas(
+                    sources, anchors, kinds,
+                    lambda src, seq, _: src.changes(seq, with_lineage=True),
+                )
+                if deltas is None:
+                    return False
+                cached = []
                 try:
                     if all(
                         d.where("_row_id IS NULL").limit(1).count() == 0
@@ -2066,7 +1748,7 @@ class Engine:
                         # persist both sides: the commit runs TWO actions
                         # (eq-delete write from del_keys, then the append
                         # from net_ins) — without this each re-evaluates
-                        # all six join arms from scratch (review r12)
+                        # every join arm from scratch (review r12)
                         pos, neg = (
                             df.persist()
                             for df in run_arms(
@@ -2080,24 +1762,19 @@ class Engine:
                         self._commit_storage_delta(
                             storage, del_keys, net_ins, new_state, data_dir
                         )
-                        return f"incremental-join{n}"
+                        return label
                 finally:
                     for d in deltas + cached:
                         d.unpersist()
                 # NULL source row ids: fall through to the multiset path
 
-        deltas, cached = [], []
-        try:
-            for src, sid in zip(sources, anchors):
-                deltas.append(
-                    src.changes(src.metadata.snapshots[sid].sequence_number).persist()
-                )
-        except ValueError:
-            for d in deltas:
-                d.unpersist()
+        deltas = self._persisted_deltas(
+            sources, anchors, kinds, lambda src, seq, _: src.changes(seq)
+        )
+        if deltas is None:
             return False
+        cached = []
         try:
-            vis = [c for c in out_cols if c not in rid_cols]
             split = [
                 (
                     ch.drop("_change_type"),
@@ -2114,76 +1791,66 @@ class Engine:
             ran = self._multiset_delta_commit(
                 storage, pos, neg, vis, new_state, data_dir, null_rid=has_rids
             )
-            return f"incremental-join{n}" if ran is not None else False
+            return label if ran is not None else False
         finally:
             for d in deltas + cached:
                 d.unpersist()
 
     def _incremental_joinN_agg_refresh(self, md, plan, storage=None):
-        """Delta maintenance for n-relation inner-join GROUP BY views —
-        the REAL TPC-H q5 is the n=6 member (customer ⋈ orders ⋈
+        """Delta maintenance for n-relation inner-join GROUP BY views
+        (n ≥ 2) — the two-table star rollup is the most common production
+        MV, and the REAL TPC-H q5 is the n=6 member (customer ⋈ orders ⋈
         lineitem ⋈ supplier ⋈ nation ⋈ region + region filter + GROUP BY
-        nation; r12 landed n=3 with hard-coded slots, r13 generalizes the
-        slot loop, VERDICT r12 #1). Same composition as the 2-table
-        ``_incremental_join_agg_refresh``: affected groups from the
-        group-key projection run over the n telescoped delta arms (all
-        change events; full slots staged OLD before the delta slot, NEW
-        after, pruned by the delta's equi keys with one propagation wave
-        through the equi graph), exact recompute of ONLY those groups
-        (group-key values pushed into whichever slot owns each key
-        column, then propagated across the equi graph — in the q5 star
-        the affected nation names prune suppliers/customers, customers
-        prune orders, orders prune lineitem), and a delta-sized commit:
-        group-keyed MoR equality deletes + an append."""
+        nation). The reference registers empty ``__delta__`` placeholders
+        for exactly this (materialized_view.rs:147-159).
+
+        1. **Affected groups** come from the group-key projection
+           (``plan.probe_sql``) run over the n telescoped delta arms — all
+           change events (sign is irrelevant: a deleted row still marks its
+           group, and a vanished tuple surfaces in an arm whose earlier
+           slots stage OLD); full slots staged OLD before the delta slot,
+           NEW after, pruned by the delta's equi keys with one propagation
+           wave through the equi graph.
+        2. **Recompute only those groups**: the affected-key values push
+           into whichever slot owns each key column, then propagate across
+           the equi graph (in the q5 star the affected nation names prune
+           suppliers/customers, customers prune orders, orders prune
+           lineitem; in a two-table star the restricted dim prunes the
+           fact). The view SQL re-runs and a post-aggregate semi-join trims
+           to exactly the affected groups — so ANY deterministic aggregate
+           works, and group disappearance (COUNT→0) falls out naturally.
+        3. **Delta-sized commit**: group-keyed MoR equality deletes + an
+           append; untouched groups' files are never read or rewritten.
+
+        NULL or >10k affected group keys fall back to a full refresh.
+        Labels: "incremental-join-aggregate" for n=2,
+        "incremental-join{n}-aggregate" for n ≥ 3."""
         from pyspark.sql import functions as F
 
         from iceberg_rust_custom_spark.metadata.expressions import And as _And
         from iceberg_rust_custom_spark.table.runtime_filter import join_key_predicate
-        from iceberg_rust_custom_spark.views.incremental import history_kind
 
+        storage = storage or self.load_table(md.storage_table)
+        found = self._join_refresh_sources(plan, storage)
+        if found is None:
+            return False
+        sources, anchors, kinds = found
         rels = plan.relations
         n = len(rels)
-        sources = []
-        for rel in rels:
-            rel_cat, ident = self.resolve(rel)
-            if not rel_cat.tabular_exists(ident):
-                return False
-            _, kind = rel_cat.load(ident)
-            if kind != "table":
-                return False
-            sources.append(self.load_table(rel))
-        storage = storage or self.load_table(md.storage_table)
-        stored = self._storage_refresh_state(storage).get("source-table-states", {})
-        anchors, kinds = [], []
-        for src in sources:
-            sid = stored.get(src.metadata.table_uuid)
-            hist = history_kind(src.metadata, sid) if sid is not None else None
-            if hist is None:
-                return False
-            anchors.append(sid)
-            kinds.append(hist)
         sql = md.current_sql()
         out_cols = [f.name for f in storage.metadata.current_schema().fields]
         keys = list(plan.group_keys)
-        ekeys = dict(plan.equi_keys)
+        pairs_between = self._slot_pairs(dict(plan.equi_keys))
 
-        def pairs_between(x: int, y: int):
-            p = ekeys.get((min(x, y), max(x, y)))
-            if not p:
-                return None
-            return list(p) if x < y else [(cy, cx) for cx, cy in p]
-
-        deltas = []
-        try:
-            for src, sid, hist in zip(sources, anchors, kinds):
-                seq = src.metadata.snapshots[sid].sequence_number
-                if hist == "appends":
-                    deltas.append(src.incremental_scan(seq).persist())
-                else:
-                    deltas.append(src.changes(seq).drop("_change_type").persist())
-        except ValueError:
-            for d in deltas:
-                d.unpersist()
+        deltas = self._persisted_deltas(
+            sources,
+            anchors,
+            kinds,
+            lambda src, seq, hist: src.incremental_scan(seq)
+            if hist == "appends"
+            else src.changes(seq).drop("_change_type"),
+        )
+        if deltas is None:
             return False
         try:
             from functools import reduce as _reduce
@@ -2191,23 +1858,7 @@ class Engine:
             probe = transform_relations(plan.probe_sql)
             parts = []
             for i in range(n):
-                preds: dict[int, object] = {}
-                for j in range(n):
-                    if j == i:
-                        continue
-                    pj = pairs_between(j, i)
-                    if pj:
-                        try:
-                            preds[j] = self._join_delta_key_predicate(deltas[i], pj)
-                        except Exception:
-                            pass
-                self._propagate_equi_preds(
-                    sources,
-                    preds,
-                    pairs_between,
-                    lambda k, _i=i: anchors[k] if k < _i else None,
-                    forbidden={i},
-                )
+                preds = self._delta_arm_preds(sources, anchors, pairs_between, deltas[i], i)
                 for j in range(n):
                     df = (
                         deltas[i]
@@ -2272,191 +1923,15 @@ class Engine:
             storage.metadata.location, "data", _uuid.uuid4().hex[:12]
         )
         self._commit_storage_delta(storage, aff.select(*keys), recomputed, new_state, data_dir)
-        return f"incremental-join{n}-aggregate"
-
-    def _incremental_join_agg_refresh(self, md, plan, storage=None):
-        """Delta maintenance for two-table inner-join GROUP BY views (r12,
-        VERDICT r11 #2 — the TPC-H q5 star shape, the most common
-        production MV; the reference registers empty ``__delta__``
-        placeholders for exactly this, materialized_view.rs:147-159).
-
-        Composes the join and aggregate machineries:
-
-        1. **Affected groups** come from the delta-join identity run over
-           the GROUP-KEY PROJECTION of the view's SPJ part
-           (``plan.probe_sql``): keys(ΔV) ⊆ keys(ΔA ⋈ B_new) ∪
-           keys(A_old ⋈ ΔB), where ΔA/ΔB carry ALL change events (sign is
-           irrelevant — a deleted row still marks its group, and a
-           vanished (a,b) pair surfaces in the A_old ⋈ ΔB arm because
-           A_old still holds the deleted A-row). The full-side arms
-           file-prune by the delta's join-key values exactly like the SPJ
-           join path (compound keys included, r12).
-        2. **Recompute only those groups**: both sources scan with the
-           affected-key values pushed down (per-key runtime-filter
-           predicates on whichever source physically owns the key column
-           — a superset restriction, exact because a group's aggregate
-           depends only on its own rows), the view SQL re-runs, and a
-           post-aggregate semi-join trims to exactly the affected groups.
-           Because groups are recomputed rather than merged, ANY
-           deterministic aggregate works — AVG/STDDEV/MEDIAN included,
-           unlike the single-table partial-merge path — and group
-           disappearance (COUNT→0) falls out naturally.
-        3. **Delta-sized commit**: affected groups eq-delete from storage
-           (group-keyed MoR equality deletes with footer bounds), the
-           recomputed rows append — one atomic commit; untouched groups'
-           files are never read or rewritten (``_commit_storage_delta``).
-
-        NULL or >10k affected group keys fall back to a full refresh
-        (mirrors the single-table aggregate path's guard)."""
-        from pyspark.sql import functions as F
-
-        from iceberg_rust_custom_spark.metadata.expressions import And as _And
-        from iceberg_rust_custom_spark.table.runtime_filter import join_key_predicate
-        from iceberg_rust_custom_spark.views.incremental import history_kind
-
-        rels = (plan.relation, plan.relation_b)
-        sources = []
-        for rel in rels:
-            rel_cat, ident = self.resolve(rel)
-            if not rel_cat.tabular_exists(ident):
-                return False
-            _, kind = rel_cat.load(ident)
-            if kind != "table":
-                return False
-            sources.append(self.load_table(rel))
-        storage = storage or self.load_table(md.storage_table)
-        stored = self._storage_refresh_state(storage).get("source-table-states", {})
-        anchors = []
-        for src in sources:
-            sid = stored.get(src.metadata.table_uuid)
-            hist = history_kind(src.metadata, sid) if sid is not None else None
-            if hist is None:
-                return False  # no anchor, or file-set replacement in range
-            anchors.append((sid, hist))
-        a, b = sources
-        (a_sid, _), (b_sid, _) = anchors
-        sql = md.current_sql()
-        out_cols = [f.name for f in storage.metadata.current_schema().fields]
-        keys = list(plan.group_keys)
-
-        deltas = []
-        try:
-            for src, (sid, hist) in zip(sources, anchors):
-                seq = src.metadata.snapshots[sid].sequence_number
-                if hist == "appends":
-                    deltas.append(src.incremental_scan(seq))
-                else:
-                    deltas.append(src.changes(seq).drop("_change_type"))
-        except ValueError:
-            return False  # commit shape the changelog cannot replay
-        da = deltas[0].persist()
-        db = deltas[1].persist()
-        try:
-            b_pred = a_pred = None
-            if plan.equi_keys:  # file-prune the full-side arms
-                try:
-                    b_pred = self._join_delta_key_predicate(
-                        da, [(bc, ac) for ac, bc in plan.equi_keys]
-                    )
-                    a_pred = self._join_delta_key_predicate(
-                        db, [(ac, bc) for ac, bc in plan.equi_keys]
-                    )
-                except Exception:
-                    b_pred = a_pred = None
-            probe = transform_relations(plan.probe_sql)
-            da.createOrReplaceTempView(transform_name(rels[0]))
-            b.scan(predicate=b_pred).createOrReplaceTempView(transform_name(rels[1]))
-            part1 = self.spark.sql(probe)
-            a.scan(predicate=a_pred, snapshot_id=a_sid).createOrReplaceTempView(
-                transform_name(rels[0])
-            )
-            db.createOrReplaceTempView(transform_name(rels[1]))
-            part2 = self.spark.sql(probe)
-            affected = part1.unionByName(part2).distinct()
-            rows = affected.limit(10_001).collect()
-        finally:
-            da.unpersist()
-            db.unpersist()
-        if len(rows) > 10_000 or any(r[k] is None for r in rows for k in keys):
-            return False  # huge or NULL-keyed group set → full refresh
-        new_state = {
-            "refresh-version-id": md.current_version_id,
-            "source-table-states": {
-                src.metadata.table_uuid: src.metadata.current_snapshot_id
-                for src in sources
-            },
-        }
-        if not rows:
-            return (
-                "incremental-noop"
-                if self._commit_state_only(storage, new_state)
-                else False
-            )
-        aff = local_rows_df(self.spark, rows, affected.schema)
-
-        # recompute: push the affected-key set into whichever source owns
-        # each group-key column (superset restriction — per-column IN sets
-        # admit every row of an affected group, extra groups trim below)
-        src_preds: dict[str, object] = {"a": None, "b": None}
-        for ks, key in zip(plan.key_sources, keys):
-            if ks is None:
-                continue  # unqualified key: recompute reads that side fully
-            if len(ks) == 3:  # date_trunc key (r13): raw-column envelope
-                side, col, unit = ks
-                p = self._dtrunc_envelope_predicate(
-                    aff, key, col, unit, a if side == "a" else b
-                )
-                if p is None:
-                    continue
-            else:
-                side, col = ks
-                try:
-                    p = join_key_predicate(aff, [(col, key)])
-                except Exception:
-                    continue
-            src_preds[side] = p if src_preds[side] is None else _And(src_preds[side], p)
-        a_pred2, b_pred2 = src_preds["a"], src_preds["b"]
-        # second-level runtime filter (star-join pruning): when only one
-        # side carries the group keys (the q5 shape — keys on the dim),
-        # probe THAT restricted scan for its join-key values and
-        # file-prune the other side. Without this the recompute reads the
-        # FULL fact table per refresh — the exact O(|A|) cost the delta
-        # arms just avoided. Sound: a fact row outside the restricted
-        # side's key set can only contribute to unaffected groups, which
-        # the post-aggregate semi-join drops anyway.
-        if plan.equi_keys and (a_pred2 is None) != (b_pred2 is None):
-            try:
-                if a_pred2 is None:
-                    a_pred2 = join_key_predicate(
-                        b.scan(predicate=b_pred2),
-                        [(ac, bc) for ac, bc in plan.equi_keys],
-                    )
-                else:
-                    b_pred2 = join_key_predicate(
-                        a.scan(predicate=a_pred2),
-                        [(bc, ac) for ac, bc in plan.equi_keys],
-                    )
-            except Exception:
-                a_pred2, b_pred2 = src_preds["a"], src_preds["b"]
-        a.scan(predicate=a_pred2).createOrReplaceTempView(transform_name(rels[0]))
-        b.scan(predicate=b_pred2).createOrReplaceTempView(transform_name(rels[1]))
-        full = self.spark.sql(transform_relations(sql))
-        recomputed = full.join(F.broadcast(aff), keys, "left_semi").select(*out_cols)
-        data_dir = os.path.join(
-            storage.metadata.location, "data", _uuid.uuid4().hex[:12]
-        )
-        # affected groups eq-delete from storage; recomputed rows append —
-        # untouched groups' files are never rewritten
-        self._commit_storage_delta(storage, aff.select(*keys), recomputed, new_state, data_dir)
-        return "incremental-join-aggregate"
+        return f"incremental-join{n}-aggregate" if n > 2 else "incremental-join-aggregate"
 
     def _incremental_agg_recompute_refresh(self, md, plan, storage=None):
         """Affected-group recompute for single-table GROUP BY views the
         partial-merge path cannot maintain (r13, VERDICT r12 #3):
         non-decomposable aggregates (AVG/STDDEV/MEDIAN — partials don't
         merge) and expression group keys (``GROUP BY date_trunc('month',
-        ts)``, the standard time-rollup MV). Same strategy the join_agg
-        family proved in r12, minus the join:
+        ts)``, the standard time-rollup MV). Same strategy as the joinN_agg
+        path, minus the join:
 
         1. **Affected groups** = the group-key projection
            (``plan.probe_sql``) over the source delta — ALL change events
@@ -2623,26 +2098,13 @@ class Engine:
         from pyspark.sql import functions as F
 
         from iceberg_rust_custom_spark.metadata.expressions import Or as _Or
-        from iceberg_rust_custom_spark.views.incremental import history_kind
 
-        rels = (plan.relation, plan.relation_b)
-        sources = []
-        for rel in rels:
-            rel_cat, ident = self.resolve(rel)
-            if not rel_cat.tabular_exists(ident):
-                return False
-            _, kind = rel_cat.load(ident)
-            if kind != "table":
-                return False
-            sources.append(self.load_table(rel))
         storage = storage or self.load_table(md.storage_table)
-        stored = self._storage_refresh_state(storage).get("source-table-states", {})
-        anchors = []
-        for src in sources:
-            sid = stored.get(src.metadata.table_uuid)
-            if sid is None or history_kind(src.metadata, sid) is None:
-                return False  # no anchor, or file-set replacement in range
-            anchors.append(sid)
+        found = self._join_refresh_sources(plan, storage)
+        if found is None:
+            return False
+        sources, anchors, _ = found
+        rels = plan.relations
         a, b = sources
         a_sid, b_sid = anchors
         sql = md.current_sql()

@@ -2848,7 +2848,7 @@ def iceberg_incremental_mv_refresh(spark, sf_dir):
     """,
 )
 def iceberg_incremental_mv_join(spark, sf_dir):
-    """Incremental JOIN-view maintenance (engine.py::_incremental_join_refresh):
+    """Incremental JOIN-view maintenance (engine.py::_incremental_joinN_refresh):
     the MV is an orders⋈customer join built over half the orders and half
     the customers; the rest of both tables lands later and refresh applies
     the delta-join identity ΔA⋈B_new ∪ A_old⋈ΔB as an APPEND. The oracle is

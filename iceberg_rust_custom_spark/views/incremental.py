@@ -63,38 +63,31 @@ _FORBIDDEN_JOINAGG_RE = re.compile(
     re.IGNORECASE,
 )
 _AGG_CALL_RE = re.compile(r"\b(sum|count|min|max|avg|stddev|var\w*)\s*\(", re.IGNORECASE)
-_JOIN_SHAPE_RE = re.compile(
-    r"^\s*SELECT\s+(?P<select>.*?)\s+FROM\s+"
-    r"(?P<rel_a>[A-Za-z_][\w.]*)(?:\s+(?:AS\s+)?(?!JOIN\b|INNER\b)(?P<alias_a>[A-Za-z_]\w*))?"
-    r"\s+(?:INNER\s+)?JOIN\s+"
-    r"(?P<rel_b>[A-Za-z_][\w.]*)(?:\s+(?:AS\s+)?(?!ON\b)(?P<alias_b>[A-Za-z_]\w*))?"
-    r"\s+ON\s+(?P<cond>.*?)"
-    r"(?:\s+WHERE\s+(?P<where>.*?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
 
 
 @dataclass(frozen=True)
 class IncrementalPlan:
-    mode: str  # "append" | "aggregate" | "join" | "join_agg" | "joinN" | "joinN_agg"
+    # "append" | "aggregate" | "agg_recompute" | "joinN" | "joinN_agg" | "left_join"
+    mode: str
     relation: str
     group_keys: tuple = ()
     merge_ops: dict = field(default_factory=dict)  # output column -> sum|min|max
-    relation_b: str | None = None  # second source of a "join" view
-    relation_c: str | None = None  # third source of an n-relation view
-    # join_agg (r12): the SPJ projection of the group keys over the same
-    # FROM/ON/WHERE — run over the delta arms to find the affected groups
+    # joinN_agg / agg_recompute: the SPJ projection of the group keys over
+    # the same FROM/ON/WHERE — run over the delta arms to find the affected
+    # groups
     probe_sql: str | None = None
-    # join_agg: (col on rel_a, col on rel_b) pairs from the ON condition's
-    # AND-conjoined equalities (pre-parsed — join_equi_keys can't re-derive
-    # them from the full SQL once a GROUP BY tail is present)
+    # joinN_agg: ((i, j), ((col on rel_i, col on rel_j), …)) per slot pair,
+    # from the ON conditions' AND-conjoined equalities; left_join: the
+    # (col on A, col on B) pairs
     equi_keys: tuple = ()
-    # join_agg: per group key, the source column to push the affected-set
-    # filter into: ("a"|"b", column) or None when the key's side is unknown
-    # (joinN_agg: (slot index, column) or None)
+    # joinN_agg: per group key, the slot and source column to push the
+    # affected-set filter into — (slot, column), (slot, column, unit) for a
+    # date_trunc key, or None when the key's slot is unknown;
+    # agg_recompute: the per-key pruning spec
     key_sources: tuple = ()
-    # joinN (r13): ALL relations of an n-relation join chain, in join
-    # order — slot i's delta arm stages slots j<i at OLD, j>i at NEW
+    # joinN / joinN_agg: ALL relations of the join chain (2 ≤ n), in join
+    # order — slot i's delta arm stages slots j<i at OLD, j>i at NEW;
+    # left_join: (A, B)
     relations: tuple = ()
 
 
@@ -123,47 +116,14 @@ def lineage_sql(sql: str) -> str | None:
     )
 
 
-# hidden pair-lineage columns for two-table inner-join SPJ views: an
-# output row is identified by the (rid_a, rid_b) of the source-row pair
-# that produced it, so changelog delete maintenance becomes MoR equality
-# deletes on two long keys (bounds-prunable — storage range-clusters on
+# hidden lineage columns of slots 0 and 1 of a join view: an inner-join
+# output row is identified by the rid tuple of the source rows that
+# produced it, so changelog delete maintenance becomes MoR equality
+# deletes on long keys (bounds-prunable — storage range-clusters on
 # rid_a) instead of a content join against the whole storage (VERDICT r10
 # #2: O(|V|) read per delta refresh of a large join MV).
 SRC_ROW_ID_A = "__sg_src_row_id_a"
 SRC_ROW_ID_B = "__sg_src_row_id_b"
-
-
-def join_lineage_sql(sql: str) -> str | None:
-    """For a two-table inner-join SPJ view: the same SQL with BOTH sources'
-    v3 ``_row_id`` carried through as the hidden pair-lineage storage
-    columns. None when the shape rules it out (must classify as a "join"
-    plan, no SELECT *, and each side needs a usable qualifier — an explicit
-    alias, or an undotted relation name)."""
-    jm = _JOIN_SHAPE_RE.match(sql.strip())
-    if (
-        not jm
-        or _FORBIDDEN_NONJOIN_RE.search(sql)
-        or _AGG_CALL_RE.search(jm.group("select"))
-        or "*" in jm.group("select")
-        or jm.group("rel_a").lower() == jm.group("rel_b").lower()
-        or re.search(
-            r"\bJOIN\b", jm.group("cond") + (jm.group("where") or ""), re.IGNORECASE
-        )
-    ):
-        return None
-    qa = jm.group("alias_a") or ("" if "." in jm.group("rel_a") else jm.group("rel_a"))
-    qb = jm.group("alias_b") or ("" if "." in jm.group("rel_b") else jm.group("rel_b"))
-    if not qa or not qb or qa.lower() == qb.lower():
-        return None
-    aa = f" {jm.group('alias_a')}" if jm.group("alias_a") else ""
-    ab = f" {jm.group('alias_b')}" if jm.group("alias_b") else ""
-    where = f" WHERE {jm.group('where')}" if jm.group("where") else ""
-    return (
-        f"SELECT {jm.group('select')}, {qa}._row_id AS {SRC_ROW_ID_A}, "
-        f"{qb}._row_id AS {SRC_ROW_ID_B} "
-        f"FROM {jm.group('rel_a')}{aa} JOIN {jm.group('rel_b')}{ab} "
-        f"ON {jm.group('cond')}{where}"
-    )
 
 
 _EQUI_COND_RE = re.compile(
@@ -239,8 +199,8 @@ def classify_left_join_sql(sql: str) -> IncrementalPlan | None:
     return IncrementalPlan(
         "left_join",
         jm.group("rel_a"),
-        relation_b=jm.group("rel_b"),
         equi_keys=tuple(pairs),
+        relations=(jm.group("rel_a"), jm.group("rel_b")),
     )
 
 
@@ -262,8 +222,8 @@ def left_join_lineage_sql(sql: str) -> str | None:
         f"ON {jm.group('cond')}{where}"
     )
 
-# n-relation inner-join SPJ views (r12 added n=3; r13 generalizes to a
-# relation LIST, VERDICT r12 #1): row lineage generalizes slot-wise — an
+# n-relation inner-join views (2 ≤ n ≤ MAX_JOIN_RELATIONS, one relation
+# list for every n): row lineage is slot-wise — an
 # inner join emits one output row per matching (r_0, …, r_{n-1}) source-row
 # tuple, so the rid tuple is a key of the view multiset and delete
 # maintenance is MoR equality deletes on the n long columns.
@@ -359,7 +319,7 @@ def parse_join_chain(sql: str) -> JoinChain | None:
 
 
 def _chain_match(sql: str, agg: bool) -> JoinChain | None:
-    """The n-relation (3 ≤ n ≤ MAX_JOIN_RELATIONS) chain match + validity
+    """The n-relation (2 ≤ n ≤ MAX_JOIN_RELATIONS) chain match + validity
     shared by the joinN classifiers, the lineage rewrite, and the
     equi-key extractor. ``agg`` selects the GROUP-BY-permitting forbidden
     set and requires/forbids the GROUP BY tail accordingly."""
@@ -367,7 +327,7 @@ def _chain_match(sql: str, agg: bool) -> JoinChain | None:
     if forbidden.search(sql):
         return None
     ch = parse_join_chain(sql)
-    if ch is None or not 3 <= len(ch.rels) <= MAX_JOIN_RELATIONS:
+    if ch is None or not 2 <= len(ch.rels) <= MAX_JOIN_RELATIONS:
         return None
     if (ch.group is not None) != agg:
         return None
@@ -442,37 +402,32 @@ def joinN_equi_keys(sql: str) -> dict[tuple[int, int], list[tuple[str, str]]] | 
     return _pairs_by_slot(ch.conds, ch.quals) or None
 
 
-# r12 names — the n=3 calls are bit-identical through the general parser
-join3_lineage_sql = joinN_lineage_sql
-join3_equi_keys = joinN_equi_keys
-
-
 def classify_joinN_sql(sql: str) -> IncrementalPlan | None:
-    """n-relation inner-join select-project-filter views (3 ≤ n ≤
+    """n-relation inner-join select-project-filter views (2 ≤ n ≤
     MAX_JOIN_RELATIONS): maintainable via the telescoping delta identity
     (see engine._incremental_joinN_refresh). The reference's __delta__
     placeholders stop at registering source deltas
-    (materialized_view.rs:147-159); r12 implemented the n=3 member with
-    hard-coded slots, r13 generalizes to a relation list."""
+    (materialized_view.rs:147-159)."""
     ch = _chain_match(sql, agg=False)
     if ch is None or _AGG_CALL_RE.search(ch.select):
         return None
     return IncrementalPlan(
         "joinN",
         ch.rels[0],
-        relation_b=ch.rels[1],
-        relation_c=ch.rels[2],
         relations=ch.rels,
     )
 
 
 def classify_joinN_agg_sql(sql: str) -> IncrementalPlan | None:
-    """n-relation inner-join GROUP BY views — the REAL TPC-H q5 is the
-    n=6 member (customer ⋈ orders ⋈ lineitem ⋈ supplier ⋈ nation ⋈
-    region + region filter + GROUP BY nation). Maintenance mirrors the
-    2-table join_agg: affected groups from the group-key projection over
-    the n telescoped delta arms, exact recompute of only those groups,
-    group-keyed eq-delete + append commit. None → full refresh."""
+    """n-relation inner-join GROUP BY views (2 ≤ n ≤ MAX_JOIN_RELATIONS)
+    — the REAL TPC-H q5 is the n=6 member (customer ⋈ orders ⋈ lineitem
+    ⋈ supplier ⋈ nation ⋈ region + region filter + GROUP BY nation).
+    Maintenance: affected groups from the group-key projection over the n
+    telescoped delta arms, exact recompute of only those groups,
+    group-keyed eq-delete + append commit — so any whitelisted
+    deterministic aggregate works (AVG/STDDEV included). Group keys are
+    plain or qualified columns or aliased ``date_trunc`` expressions, each
+    projected in the select list. None → full refresh."""
     from iceberg_rust_custom_spark.ddl import _split_top_level
 
     ch = _chain_match(sql, agg=True)
@@ -524,8 +479,6 @@ def classify_joinN_agg_sql(sql: str) -> IncrementalPlan | None:
         "joinN_agg",
         ch.rels[0],
         group_keys=out_names,
-        relation_b=ch.rels[1],
-        relation_c=ch.rels[2],
         probe_sql=probe_sql,
         equi_keys=tuple((ij, tuple(p)) for ij, p in sorted(pairs.items())),
         key_sources=tuple(key_sources),
@@ -533,19 +486,6 @@ def classify_joinN_agg_sql(sql: str) -> IncrementalPlan | None:
     )
 
 
-# join + GROUP BY views (r12, VERDICT r11 #2 — the TPC-H q5 star shape):
-# same two-relation inner-join FROM clause, mandatory GROUP BY tail
-_JOIN_AGG_SHAPE_RE = re.compile(
-    r"^\s*SELECT\s+(?P<select>.*?)\s+FROM\s+"
-    r"(?P<rel_a>[A-Za-z_][\w.]*)(?:\s+(?:AS\s+)?(?!JOIN\b|INNER\b)(?P<alias_a>[A-Za-z_]\w*))?"
-    r"\s+(?:INNER\s+)?JOIN\s+"
-    r"(?P<rel_b>[A-Za-z_][\w.]*)(?:\s+(?:AS\s+)?(?!ON\b)(?P<alias_b>[A-Za-z_]\w*))?"
-    r"\s+ON\s+(?P<cond>.*?)"
-    r"(?:\s+WHERE\s+(?P<where>.*?))?"
-    r"\s+GROUP\s+BY\s+(?P<group>.*?)"
-    r"(?:\s+HAVING\s+(?P<having>.*?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
 # affected groups are RECOMPUTED exactly (not merged), so any
 # deterministic aggregate qualifies — whitelisted to keep surprises out
 _JOINAGG_ITEM_RE = re.compile(
@@ -595,126 +535,10 @@ def _valid_agg_key_expr(k: str) -> bool:
     )
 
 
-def classify_join_agg_sql(sql: str) -> IncrementalPlan | None:
-    """Shape-match a two-table inner-join GROUP BY view (the most common
-    production MV — the reference registers ``__delta__`` placeholders for
-    exactly this and never implements it, materialized_view.rs:147-159).
-    Maintenance recomputes ONLY the affected groups, so any whitelisted
-    deterministic aggregate works (AVG/STDDEV included — unlike the
-    single-table merge path, nothing needs to be decomposable); group keys
-    must be plain or singly-qualified columns, each projected in the
-    select list. None → full refresh."""
-    from iceberg_rust_custom_spark.ddl import _split_top_level
-
-    jm = _JOIN_AGG_SHAPE_RE.match(sql.strip())
-    if not jm or _FORBIDDEN_JOINAGG_RE.search(sql):
-        return None
-    if jm.group("rel_a").lower() == jm.group("rel_b").lower():
-        return None  # self-join: row identity across sides is ambiguous
-    if re.search(
-        r"\bJOIN\b", jm.group("cond") + (jm.group("where") or ""), re.IGNORECASE
-    ):
-        return None  # 3+ relations
-    key_exprs = tuple(k.strip() for k in _split_top_level(jm.group("group")))
-    if not key_exprs or not all(_valid_agg_key_expr(k) for k in key_exprs):
-        return None
-    qa = (
-        jm.group("alias_a") or ("" if "." in jm.group("rel_a") else jm.group("rel_a"))
-    ).lower()
-    qb = (
-        jm.group("alias_b") or ("" if "." in jm.group("rel_b") else jm.group("rel_b"))
-    ).lower()
-    if qa and qa == qb:
-        return None
-    sel_keys: list[tuple[str, str]] = []  # (source expr, output name)
-    agg_seen = False
-    for item in _split_top_level(jm.group("select")):
-        item = item.strip()
-        if _JOINAGG_ITEM_RE.match(item):
-            agg_seen = True
-            continue
-        parsed = _agg_key_item(item, key_exprs)
-        if parsed is None:
-            return None  # derived/unaliased expression: full refresh
-        sel_keys.append(parsed)
-    if not agg_seen or not sel_keys:
-        return None
-    if {e for e, _ in sel_keys} != set(key_exprs):
-        return None  # a GROUP BY key missing from the projection (or vice
-        # versa): storage couldn't eq-delete by the full group key
-    out_names = tuple(n for _, n in sel_keys)
-    if len(out_names) != len(set(out_names)):
-        return None
-    aa = f" {jm.group('alias_a')}" if jm.group("alias_a") else ""
-    ab = f" {jm.group('alias_b')}" if jm.group("alias_b") else ""
-    where = f" WHERE {jm.group('where')}" if jm.group("where") else ""
-    proj = ", ".join(f"{e} AS {n}" for e, n in sel_keys)
-    probe_sql = (
-        f"SELECT {proj} FROM {jm.group('rel_a')}{aa} JOIN {jm.group('rel_b')}{ab} "
-        f"ON {jm.group('cond')}{where}"
-    )
-    cond = jm.group("cond")
-    pairs = None
-    if qa and qb and "(" not in cond and not re.search(r"\bor\b", cond, re.IGNORECASE):
-        pairs = equi_pairs_between(cond, qa, qb)
-    key_sources: list[tuple | None] = []
-    for expr, _ in sel_keys:
-        dm = _DTRUNC_QUAL_KEY_RE.fullmatch(expr)
-        if dm:
-            q = (dm.group("q") or "").lower()
-            side = "a" if (qa and q == qa) else ("b" if (qb and q == qb) else None)
-            key_sources.append(
-                (side, dm.group("col"), dm.group("unit").lower()) if side else None
-            )
-        elif "." in expr:
-            q, col = expr.split(".", 1)
-            if qa and q.lower() == qa:
-                key_sources.append(("a", col))
-            elif qb and q.lower() == qb:
-                key_sources.append(("b", col))
-            else:
-                key_sources.append(None)
-        else:
-            key_sources.append(None)  # side unknown: recompute without pruning
-    return IncrementalPlan(
-        "join_agg",
-        jm.group("rel_a"),
-        group_keys=out_names,
-        relation_b=jm.group("rel_b"),
-        probe_sql=probe_sql,
-        equi_keys=tuple(pairs or ()),
-        key_sources=tuple(key_sources),
-    )
-
-
-def join_equi_keys(sql: str) -> list[tuple[str, str]] | None:
-    """[(key column on rel_a, key column on rel_b), …] — one pair per
-    two-sided equality in the join's AND-conjoined ON condition — the
-    shape that lets delta-join refresh FILE-PRUNE the full-side arms by
-    the delta's key values (r11: at ×1000 the A_old/B_new scans dominate
-    refresh wall; r12 extends single-key to compound keys, VERDICT r11
-    #1). Conjuncts that are NOT two-sided equalities (theta terms like
-    ``a.x < b.y``) are simply skipped: the equality pairs alone remain a
-    NECESSARY condition for a row to join, so pruning by them stays
-    sound. None when no usable pair exists, or when the condition
-    contains OR / parentheses (a disjunct could join outside any single
-    conjunct's key set — arms then read the full side, correct either
-    way)."""
-    jm = _JOIN_SHAPE_RE.match(sql.strip())
-    if not jm:
-        return None
-    cond = jm.group("cond")
-    if "(" in cond or re.search(r"\bor\b", cond, re.IGNORECASE):
-        return None
-    qa = (jm.group("alias_a") or jm.group("rel_a")).lower()
-    qb = (jm.group("alias_b") or jm.group("rel_b")).lower()
-    return equi_pairs_between(cond, qa, qb)
-
-
 def equi_pairs_between(cond: str, qa: str, qb: str) -> list[tuple[str, str]] | None:
     """The (col on qa, col on qb) pairs from an AND-conjoined condition's
     two-sided equalities between the two given qualifiers (lower-cased).
-    Shared by the 2-table and n-table classifiers. The caller has already
+    Shared by the LEFT-join and n-relation classifiers. The caller has already
     rejected OR / parenthesized conditions."""
     pairs: list[tuple[str, str]] = []
     for conjunct in re.split(r"\bAND\b", cond, flags=re.IGNORECASE):
@@ -764,9 +588,9 @@ def classify_agg_recompute_sql(sql: str) -> IncrementalPlan | None:
     MV). Maintenance recomputes ONLY the affected groups (VERDICT r12
     #3): probe = the group-key projection over the source delta, exact
     recompute of those groups from a key-pruned source scan, group-keyed
-    eq-delete + append commit. The n-table join_agg machinery proved the
-    strategy (engine.py join_agg r12); the single-table case is the same
-    minus the join. None → full refresh."""
+    eq-delete + append commit. The same strategy as the joinN_agg path
+    (engine._incremental_joinN_agg_refresh) minus the join. None → full
+    refresh."""
     from iceberg_rust_custom_spark.ddl import _split_top_level
 
     m = _SHAPE_RE.match(sql.strip())
@@ -823,39 +647,20 @@ def classify_agg_recompute_sql(sql: str) -> IncrementalPlan | None:
 
 def classify_view_sql(sql: str) -> IncrementalPlan | None:
     """Shape-match the view SQL; None means "not incrementally
-    maintainable, do a full refresh". Deliberately conservative: one
-    catalog relation, no joins/set-ops/windows/subqueries; aggregates
-    restricted to the decomposable SUM/COUNT/MIN/MAX (partial merge) —
-    non-decomposable aggregates and expression keys route to the
+    maintainable, do a full refresh". Deliberately conservative: no
+    set-ops/windows/subqueries; inner-join chains route to the joinN
+    classifiers and LEFT joins to the left_join one; single-table
+    aggregates restricted to the decomposable SUM/COUNT/MIN/MAX (partial
+    merge) — non-decomposable aggregates and expression keys route to the
     affected-group recompute classifier (r13)."""
     from iceberg_rust_custom_spark.ddl import _split_top_level
 
     if _FORBIDDEN_RE.search(sql):
-        jm = _JOIN_SHAPE_RE.match(sql.strip())
-        if (
-            jm
-            and not _FORBIDDEN_NONJOIN_RE.search(sql)
-            and not _AGG_CALL_RE.search(jm.group("select"))
-            and jm.group("rel_a").lower() != jm.group("rel_b").lower()
-            and not re.search(  # exactly two relations: no JOIN in the tail
-                r"\bJOIN\b", jm.group("cond") + (jm.group("where") or ""), re.IGNORECASE
-            )
-        ):
-            # two-relation inner equi/theta join, select-project-filter only:
-            # maintainable via the delta-join identity (see join refresh)
-            return IncrementalPlan("join", jm.group("rel_a"), relation_b=jm.group("rel_b"))
-        # n-relation inner join (r12: n=3; r13: relation list up to
-        # MAX_JOIN_RELATIONS): telescoping delta identity
-        planN = classify_joinN_sql(sql)
-        if planN is not None:
-            return planN
-        # join + GROUP BY, 2..n relations: affected-group recompute
-        planNa = classify_joinN_agg_sql(sql)
-        if planNa is not None:
-            return planNa
-        plan2a = classify_join_agg_sql(sql)
-        if plan2a is not None:
-            return plan2a
+        # inner join, 2..n relations: telescoping delta identity (SPJ) or
+        # affected-group recompute (GROUP BY)
+        plan = classify_joinN_sql(sql) or classify_joinN_agg_sql(sql)
+        if plan is not None:
+            return plan
         # LEFT-outer SPJ (r13): affected-A-row recompute
         return classify_left_join_sql(sql)
     m = _SHAPE_RE.match(sql.strip())

@@ -19,3 +19,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+_SLOW_DESELECTED = pytest.StashKey[int]()
+
+
+def pytest_deselected(items):
+    if items:
+        stash = items[0].config.stash
+        stash[_SLOW_DESELECTED] = stash.get(_SLOW_DESELECTED, 0) + sum(
+            1 for it in items if it.get_closest_marker("slow")
+        )
+
+
+def pytest_terminal_summary(terminalreporter, config):
+    """Make the default run's blind spot visible: the `slow` fuzz,
+    differential and ladder tests pytest.ini excludes by default."""
+    n = config.stash.get(_SLOW_DESELECTED, 0)
+    if n:
+        terminalreporter.write_sep(
+            "-", f"{n} slow tests deselected; run them with: pytest -m slow"
+        )

@@ -3,7 +3,7 @@ BY views the partial-merge path cannot maintain — non-decomposable
 aggregates (AVG/STDDEV/MEDIAN) and expression group keys
 (``GROUP BY date_trunc('month', ts)``, the standard time-rollup MV).
 
-The join_agg family proved the strategy in r12 (recompute ONLY the
+The join-aggregate path proved the strategy in r12 (recompute ONLY the
 affected groups, eq-delete + append commit); the single-table case is the
 same minus the join, plus one new pruning shape: a ``date_trunc`` key
 prunes the source by the RAW column envelope

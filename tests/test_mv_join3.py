@@ -27,8 +27,8 @@ from iceberg_rust_custom_spark.views.incremental import (
     SRC_ROW_ID_B,
     SRC_ROW_ID_C,
     classify_view_sql,
-    join3_equi_keys,
-    join3_lineage_sql,
+    joinN_equi_keys,
+    joinN_lineage_sql,
 )
 
 
@@ -43,17 +43,15 @@ def test_join3_classifier_and_lineage_shapes():
         "JOIN t.c c ON o.ck = c.ck WHERE l.lv > 0"
     )
     p = classify_view_sql(sql)
-    assert p.mode == "joinN" and (p.relation, p.relation_b, p.relation_c) == (
-        "t.l", "t.o", "t.c",
-    )
-    lsql = join3_lineage_sql(sql)
+    assert p.mode == "joinN" and p.relations == ("t.l", "t.o", "t.c")
+    lsql = joinN_lineage_sql(sql)
     assert lsql is not None
     for rid, q in ((SRC_ROW_ID_A, "l"), (SRC_ROW_ID_B, "o"), (SRC_ROW_ID_C, "c")):
         assert f"{q}._row_id AS {rid}" in lsql
     assert lsql.endswith("WHERE l.lv > 0")
-    assert join3_equi_keys(sql) == {(0, 1): [("ok", "ok")], (1, 2): [("ck", "ck")]}
+    assert joinN_equi_keys(sql) == {(0, 1): [("ok", "ok")], (1, 2): [("ck", "ck")]}
     # second ON condition may carry pairs to EITHER earlier relation
-    assert join3_equi_keys(
+    assert joinN_equi_keys(
         "SELECT a.x, b.y, c.z FROM ta a JOIN tb b ON a.k = b.k "
         "JOIN tc c ON a.j = c.j AND b.m = c.m"
     ) == {(0, 1): [("k", "k")], (0, 2): [("j", "j")], (1, 2): [("m", "m")]}
@@ -74,11 +72,11 @@ def test_join3_classifier_and_lineage_shapes():
     ]:
         got = classify_view_sql(bad)
         assert got is None or got.mode != "joinN", bad
-    # SELECT * / missing qualifier: classifies join3 but lineage opts out
-    assert join3_lineage_sql(
+    # SELECT * / missing qualifier: classifies joinN but lineage opts out
+    assert joinN_lineage_sql(
         "SELECT * FROM ta a JOIN tb b ON a.k=b.k JOIN tc c ON b.j=c.j"
     ) is None
-    assert join3_lineage_sql(
+    assert joinN_lineage_sql(
         "SELECT x FROM ns.ta JOIN tb ON ta.k=tb.k JOIN tc ON tb.j=tc.j"
     ) is None
 

@@ -29,24 +29,24 @@ def test_classify_join_agg_shapes():
         "SELECT n.nname, sum(o.price) AS revenue FROM t.o o JOIN t.n n "
         "ON o.nk = n.nk WHERE o.price > 0 GROUP BY n.nname"
     )
-    assert p is not None and p.mode == "join_agg"
+    assert p is not None and p.mode == "joinN_agg"
     assert p.group_keys == ("nname",)
-    assert p.equi_keys == (("nk", "nk"),)
-    assert p.key_sources == (("b", "nname"),)
+    assert p.equi_keys == (((0, 1), (("nk", "nk"),)),)
+    assert p.key_sources == ((1, "nname"),)
     assert p.probe_sql.startswith("SELECT n.nname AS nname FROM t.o o JOIN t.n n")
     # compound ON keys + aliased key + aggregates the MERGE path can't do
     p = classify_view_sql(
         "SELECT a.g AS gg, avg(b.v) AS m, stddev(b.v) AS s FROM ta a "
         "JOIN tb b ON a.k = b.k AND a.j = b.j GROUP BY a.g"
     )
-    assert p is not None and p.mode == "join_agg"
-    assert p.group_keys == ("gg",) and p.equi_keys == (("k", "k"), ("j", "j"))
+    assert p is not None and p.mode == "joinN_agg"
+    assert p.group_keys == ("gg",) and p.equi_keys == (((0, 1), (("k", "k"), ("j", "j"))),)
     # HAVING is admitted since r13 — the affected-group recompute path
     # evaluates it (a group failing HAVING is eq-deleted, not re-appended)
     p = classify_view_sql(
         "SELECT a.g, sum(b.v) AS s FROM ta a JOIN tb b ON a.k = b.k GROUP BY a.g HAVING sum(b.v) > 1"
     )
-    assert p is not None and p.mode == "join_agg"
+    assert p is not None and p.mode == "joinN_agg"
     # ruled out: outer join, non-key bare column, derived key,
     # unaliased aggregate, ORDER BY, subquery, self-join
     for bad in [
@@ -59,10 +59,10 @@ def test_classify_join_agg_shapes():
         "SELECT a.g, sum(b.v) AS s FROM ta a JOIN tb b ON a.k = (SELECT max(k) FROM tb) GROUP BY a.g",
     ]:
         got = classify_view_sql(bad)
-        assert got is None or got.mode != "join_agg", bad
+        assert got is None or got.mode != "joinN_agg", bad
     # single-table shapes keep their existing classifications
     assert classify_view_sql("SELECT k, sum(v) AS s FROM t GROUP BY k").mode == "aggregate"
-    assert classify_view_sql("SELECT a.x FROM t1 a JOIN t2 b ON a.k = b.k").mode == "join"
+    assert classify_view_sql("SELECT a.x FROM t1 a JOIN t2 b ON a.k = b.k").mode == "joinN"
 
 
 _SQL = (
@@ -419,8 +419,8 @@ def test_join_rollup_dtrunc_key_refreshes_incrementally(eng, spark):
         "GROUP BY date_trunc('day', f.ts), d.seg"
     )
     p = classify_view_sql(sql)
-    assert p is not None and p.mode == "join_agg"
-    assert p.key_sources == (("a", "ts", "day"), ("b", "seg"))
+    assert p is not None and p.mode == "joinN_agg"
+    assert p.key_sources == ((0, "ts", "day"), (1, "seg"))
     eng.create_materialized_view("jr.mv", sql)
 
     def check(tag):
@@ -464,7 +464,7 @@ def test_join_agg_having_threshold_crossings(eng, spark):
         "FROM jag.o o JOIN jag.n n ON o.nk = n.nk "
         "GROUP BY n.nname HAVING count(o.ok) >= 10"
     )
-    assert classify_view_sql(sql).mode == "join_agg"
+    assert classify_view_sql(sql).mode == "joinN_agg"
     eng.create_materialized_view("jag.hmv", sql)
 
     def check(tag):

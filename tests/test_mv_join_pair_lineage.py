@@ -19,7 +19,8 @@ from iceberg_rust_custom_spark.table.scan import plan_delete_files, plan_files
 from iceberg_rust_custom_spark.views.incremental import (
     SRC_ROW_ID_A,
     SRC_ROW_ID_B,
-    join_lineage_sql,
+    joinN_equi_keys,
+    joinN_lineage_sql,
 )
 
 
@@ -55,20 +56,20 @@ def _mv_rows(eng, name):
     return sorted((r.ak, r.bk) for r in eng.scan_materialized_view(name).collect())
 
 
-def test_join_lineage_sql_shapes():
-    assert join_lineage_sql("SELECT a.x, b.y FROM t1 a JOIN t2 b ON a.k = b.k") == (
+def test_joinN_lineage_sql_two_relation_shapes():
+    assert joinN_lineage_sql("SELECT a.x, b.y FROM t1 a JOIN t2 b ON a.k = b.k") == (
         f"SELECT a.x, b.y, a._row_id AS {SRC_ROW_ID_A}, b._row_id AS {SRC_ROW_ID_B} "
         "FROM t1 a JOIN t2 b ON a.k = b.k"
     )
     # no aliases: undotted relation names qualify
-    got = join_lineage_sql("SELECT x, y FROM t1 JOIN t2 ON t1.k = t2.k WHERE x > 1")
+    got = joinN_lineage_sql("SELECT x, y FROM t1 JOIN t2 ON t1.k = t2.k WHERE x > 1")
     assert got is not None and f"t1._row_id AS {SRC_ROW_ID_A}" in got and got.endswith("WHERE x > 1")
     # ruled out: SELECT *, aggregates, dotted rel without alias, self-join
-    assert join_lineage_sql("SELECT * FROM t1 a JOIN t2 b ON a.k = b.k") is None
-    assert join_lineage_sql("SELECT sum(a.x) AS s FROM t1 a JOIN t2 b ON a.k = b.k") is None
-    assert join_lineage_sql("SELECT x FROM ns.t1 JOIN t2 ON t1.k = t2.k") is None
-    assert join_lineage_sql("SELECT a.x FROM t1 a JOIN t1 b ON a.k = b.k") is None
-    assert join_lineage_sql("SELECT a.x FROM t1 a LEFT JOIN t2 b ON a.k = b.k") is None
+    assert joinN_lineage_sql("SELECT * FROM t1 a JOIN t2 b ON a.k = b.k") is None
+    assert joinN_lineage_sql("SELECT sum(a.x) AS s FROM t1 a JOIN t2 b ON a.k = b.k") is None
+    assert joinN_lineage_sql("SELECT x FROM ns.t1 JOIN t2 ON t1.k = t2.k") is None
+    assert joinN_lineage_sql("SELECT a.x FROM t1 a JOIN t1 b ON a.k = b.k") is None
+    assert joinN_lineage_sql("SELECT a.x FROM t1 a LEFT JOIN t2 b ON a.k = b.k") is None
 
 
 def test_join_mv_storage_has_pair_columns_and_nonnull_rids(eng, spark):
@@ -401,31 +402,33 @@ def test_join_mv_storage_is_changelog_followable(eng, spark):
     assert want.exceptAll(feed).count() == 0
 
 
-def test_join_equi_keys_parsing():
-    from iceberg_rust_custom_spark.views.incremental import join_equi_keys
+def test_joinN_equi_keys_two_relation_parsing():
+    def keys(sql):
+        got = joinN_equi_keys(sql)
+        return None if got is None else got[(0, 1)]
 
-    assert join_equi_keys("SELECT a.x FROM t1 a JOIN t2 b ON a.k = b.fk") == [("k", "fk")]
-    assert join_equi_keys("SELECT a.x FROM t1 a JOIN t2 b ON b.fk = a.k") == [("k", "fk")]
+    assert keys("SELECT a.x FROM t1 a JOIN t2 b ON a.k = b.fk") == [("k", "fk")]
+    assert keys("SELECT a.x FROM t1 a JOIN t2 b ON b.fk = a.k") == [("k", "fk")]
     # unaliased relations qualify by name
-    assert join_equi_keys("SELECT x FROM t1 JOIN t2 ON t1.k = t2.k") == [("k", "k")]
+    assert keys("SELECT x FROM t1 JOIN t2 ON t1.k = t2.k") == [("k", "k")]
     # compound AND-conjoined keys: every pair participates in pruning (r12)
-    assert join_equi_keys(
+    assert keys(
         "SELECT a.x FROM t1 a JOIN t2 b ON a.k = b.k AND a.j = b.j"
     ) == [("k", "k"), ("j", "j")]
-    assert join_equi_keys(
+    assert keys(
         "SELECT a.x FROM t1 a JOIN t2 b ON b.k = a.k AND a.j = b.jj"
     ) == [("k", "k"), ("j", "jj")]
     # mixed equality + theta: the equality pairs alone still prune soundly
-    assert join_equi_keys(
+    assert keys(
         "SELECT a.x FROM t1 a JOIN t2 b ON a.k = b.k AND a.j < b.j"
     ) == [("k", "k")]
     # pure theta: no pruning keys
-    assert join_equi_keys("SELECT a.x FROM t1 a JOIN t2 b ON a.k < b.k") is None
+    assert keys("SELECT a.x FROM t1 a JOIN t2 b ON a.k < b.k") is None
     # OR / parenthesized conditions could join outside any conjunct's set
-    assert join_equi_keys("SELECT a.x FROM t1 a JOIN t2 b ON a.k = b.k OR a.j = b.j") is None
-    assert join_equi_keys("SELECT a.x FROM t1 a JOIN t2 b ON (a.k = b.k)") is None
+    assert keys("SELECT a.x FROM t1 a JOIN t2 b ON a.k = b.k OR a.j = b.j") is None
+    assert keys("SELECT a.x FROM t1 a JOIN t2 b ON (a.k = b.k)") is None
     # one-sided equalities carry no cross-relation key
-    assert join_equi_keys("SELECT a.x FROM t1 a JOIN t2 b ON a.k = a.j") is None
+    assert keys("SELECT a.x FROM t1 a JOIN t2 b ON a.k = a.j") is None
 
 
 def test_join_delta_key_predicate_shapes(eng, spark):
@@ -496,7 +499,7 @@ def test_join_refresh_prunes_full_side_files_by_delta_keys(eng, spark):
 def test_compound_key_join_refresh_prunes_and_stays_exact(eng, spark):
     """r12 (VERDICT r11 #1): an AND-conjoined compound equi-join ON
     condition prunes the full-side arms on EVERY key pair — previously
-    join_equi_keys returned None and each delta refresh re-scanned the
+    the equi-key extractor returned None and each delta refresh re-scanned the
     whole full side. Proven with the refresh's own predicate on the
     table, plus end-to-end refresh correctness and the pair eq-delete
     commit shape."""

@@ -33,7 +33,7 @@ def test_left_join_classifier_and_lineage_shapes():
     sql = "SELECT a.k, a.v, b.w FROM t a LEFT JOIN u b ON a.fk = b.bk WHERE a.v >= 0"
     p = classify_view_sql(sql)
     assert p is not None and p.mode == "left_join"
-    assert (p.relation, p.relation_b) == ("t", "u")
+    assert p.relations == ("t", "u")
     assert p.equi_keys == (("fk", "bk"),)
     lsql = left_join_lineage_sql(sql)
     assert f"a._row_id AS {SRC_ROW_ID_A}" in lsql

@@ -90,6 +90,105 @@ def test_local_rows_df_empty_and_ddl_schema(spark):
     assert df.count() == 0 and df.columns == ["a", "b"]
 
 
+def test_local_rows_df_reads_mappings_by_name_and_rejects_short_rows(spark):
+    st = "a string, b long"
+    got = local_rows_df(spark, [{"b": 2, "a": "x"}, {"a": "y"}], st).collect()
+    assert [(r.a, r.b) for r in got] == [("x", 2), ("y", None)]
+    with pytest.raises(ValueError):
+        local_rows_df(spark, [("x",)], st)
+    with pytest.raises(ValueError):
+        local_rows_df(spark, [("x", 1, 2)], st)
+
+
+_NON_UTC_SCRIPT = r"""
+import datetime as dt
+import sys
+
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from iceberg_rust_custom_spark.engine import Engine
+from iceberg_rust_custom_spark.functions.local_rows import local_rows_df
+from iceberg_rust_custom_spark.session import get_spark
+from iceberg_rust_custom_spark.table.maintenance import delete_where
+
+spark = get_spark("local-rows-tz", shuffle_partitions=4)
+st = T.StructType([T.StructField("ts", T.TimestampType()), T.StructField("n", T.LongType())])
+rows = spark.createDataFrame(
+    [(dt.datetime(2024, 2, 1, 0, 0), 1), (dt.datetime(2024, 3, 10, 10, 30), 2), (None, 3)], st
+).collect()
+got, ref = local_rows_df(spark, rows, st), spark.createDataFrame(rows, st)
+assert got.collect() == ref.collect(), (got.collect(), ref.collect())
+assert got.exceptAll(ref).count() == 0 and ref.exceptAll(got).count() == 0
+
+eng = Engine(spark, warehouse=sys.argv[1])
+f = eng.create_table("tz.f", T.StructType.fromDDL("k long, fk long, ts timestamp, v double"))
+f.append(
+    spark.range(240).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 6).alias("fk"),
+        F.expr("timestampadd(HOUR, CAST(id * 7 AS INT), TIMESTAMP '2024-01-20 00:00:00')").alias("ts"),
+        (F.col("id") * 1.0).alias("v"),
+    )
+)
+d = eng.create_table("tz.d", T.StructType.fromDDL("dk long, seg string"))
+d.append(spark.range(6).select(F.col("id").alias("dk"), F.concat(F.lit("s"), F.col("id") % 2).alias("seg")))
+sql = (
+    "SELECT date_trunc('month', f.ts) AS mon, d.seg, sum(f.v) AS s, count(f.k) AS n "
+    "FROM tz.f f JOIN tz.d d ON f.fk = d.dk GROUP BY date_trunc('month', f.ts), d.seg"
+)
+eng.create_materialized_view("tz.mv", sql)
+
+
+def check(tag):
+    cols = ("mon", "seg", "s", "n")
+    have = sorted(tuple(r[c] for c in cols) for r in eng.scan_materialized_view("tz.mv").collect())
+    want = sorted(tuple(r[c] for c in cols) for r in eng.sql(sql).collect())
+    assert have == want, (tag, have, want)
+
+
+f.append(
+    spark.createDataFrame(
+        [(9000, 1, dt.datetime(2024, 2, 1, 0, 0), 50.0)], "k long, fk long, ts timestamp, v double"
+    )
+)
+flavor = eng.refresh_materialized_view("tz.mv")
+assert flavor == "incremental-join-aggregate", flavor
+check("append")
+delete_where(f, "k % 11 = 0", mode="merge-on-read")
+flavor = eng.refresh_materialized_view("tz.mv")
+assert flavor == "incremental-join-aggregate", flavor
+check("delete")
+print("NON_UTC_OK")
+"""
+
+
+def test_local_rows_df_and_join_agg_mv_exact_on_non_utc_machine(tmp_path):
+    """A naive TimestampType value collected on a machine whose local
+    timezone is not UTC must round-trip through ``local_rows_df`` unshifted
+    — otherwise the affected-group frame of a ``date_trunc`` join-aggregate
+    MV matches no stored group and the delta refresh commits stale rows."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ,
+        TZ="America/Los_Angeles",
+        PYTHONPATH=repo,
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", _NON_UTC_SCRIPT, str(tmp_path / "wh")],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=900,
+    )
+    assert proc.returncode == 0 and "NON_UTC_OK" in proc.stdout, proc.stderr[-4000:]
+
+
 def test_connected_components_star_rounds_path_matches_driver_finish(spark):
     # two chains + a singleton edge; force the distributed star rounds with
     # driver_finish_edges=0 and check it matches the driver union-find

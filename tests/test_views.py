@@ -183,7 +183,7 @@ def test_classifier_shapes():
     # AVG routes to affected-group recompute since r13 (stale r12 pin)
     assert classify_view_sql("SELECT k, AVG(v) AS a FROM ns.t GROUP BY k").mode == "agg_recompute"
     p = classify_view_sql("SELECT a FROM t1 JOIN t2 ON t1.k = t2.k")
-    assert p.mode == "join" and (p.relation, p.relation_b) == ("t1", "t2")
+    assert p.mode == "joinN" and p.relations == ("t1", "t2")
     assert classify_view_sql("SELECT DISTINCT a FROM t") is None
     assert classify_view_sql("SELECT k, SUM(v) AS s FROM t GROUP BY k ORDER BY s") is None
     # unaliased expression key still cannot name its storage column
@@ -191,7 +191,7 @@ def test_classifier_shapes():
 
 
 @pytest.mark.slow
-def test_incremental_join_refresh(engine, spark):
+def test_incremental_two_table_join_view_refresh(engine, spark):
     """Two-table inner-join view: after appends to BOTH sources, refresh
     runs the delta-join identity (ΔA⋈B_new ∪ A_old⋈ΔB) and APPENDS the
     delta — storage is never rewritten, and the result matches a full
@@ -250,7 +250,7 @@ def test_classify_join_view_shapes():
     p = classify_view_sql(
         "SELECT a.x, b.y FROM ns.a a JOIN ns.b b ON a.k = b.k WHERE a.x > 0"
     )
-    assert p is not None and p.mode == "join" and (p.relation, p.relation_b) == ("ns.a", "ns.b")
+    assert p is not None and p.mode == "joinN" and p.relations == ("ns.a", "ns.b")
     # rejected: SELECT * outer join (no lineage columns), self-join
     assert classify_view_sql("SELECT * FROM ns.a a LEFT JOIN ns.b b ON a.k = b.k") is None
     assert classify_view_sql("SELECT a1.x FROM ns.a a1 JOIN ns.a a2 ON a1.k = a2.k") is None
@@ -260,14 +260,14 @@ def test_classify_join_view_shapes():
         "JOIN ns.c c ON b.j = c.j JOIN ns.d d ON c.z = d.z"
     )
     assert p4 is not None and p4.mode == "joinN" and len(p4.relations) == 4
-    # 2-table aggregate join → join_agg (r12); 3 relations → join3 (r12)
+    # 2-table aggregate join → joinN_agg; 3 relations → joinN
     p = classify_view_sql("SELECT b.g, SUM(a.x) AS s FROM ns.a a JOIN ns.b b ON a.k = b.k GROUP BY b.g")
-    assert p is not None and p.mode == "join_agg"
+    assert p is not None and p.mode == "joinN_agg"
     assert classify_view_sql("SELECT SUM(a.x) AS s FROM ns.a a JOIN ns.b b ON a.k = b.k") is None
     p = classify_view_sql(
         "SELECT a.x FROM ns.a a JOIN ns.b b ON a.k = b.k JOIN ns.c c ON b.j = c.j"
     )
-    assert p is not None and p.mode == "joinN" and p.relation_c == "ns.c"
+    assert p is not None and p.mode == "joinN" and p.relations[2] == "ns.c"
 
 
 def test_multi_dialect_view_representations(engine, spark):
@@ -575,7 +575,7 @@ def test_changelog_full_fallback_after_cow(engine, spark):
 
 
 @pytest.mark.slow
-def test_changelog_join_refresh_signed_deltas(engine, spark):
+def test_changelog_two_table_join_signed_deltas(engine, spark):
     """r8: a two-table join MV maintained through MoR row-level ops on
     either source via SIGNED changelog deltas — including the cross-term
     cancellation (an A-row deleted in-range joining a B-row inserted
@@ -634,7 +634,7 @@ def test_changelog_join_refresh_signed_deltas(engine, spark):
 
 
 @pytest.mark.slow
-def test_changelog_join_refresh_delete_on_dim_side(engine, spark):
+def test_changelog_two_table_join_delete_on_dim_side(engine, spark):
     """A MoR delete on the DIMENSION source (B) removes every joined row —
     the A_old ⋈ Δ⁻B term."""
     import pyspark.sql.types as T

@@ -1,6 +1,7 @@
 """A/B two bench JSON outputs: geomean ratio and worst regressions over
 shared per-query keys (steady-state `queries` by default, `--setup` for
-the cold dict).
+the cold dict). Accepts the raw one-line bench output or an artifact that
+nests it under ``"parsed"`` (the committed ``BENCH_rNN.json`` files).
 
 Usage: python tools/bench_compare.py OLD.json NEW.json [--setup]
 """
@@ -21,8 +22,15 @@ def load(path: str, key: str) -> dict:
         doc = json.loads(text)
     except json.JSONDecodeError:
         start = text.find("{")
-        doc = json.loads(text[start:]) if start >= 0 else {}
-    return doc.get(key, {}) or {}
+        try:
+            doc = json.loads(text[start:]) if start >= 0 else {}
+        except json.JSONDecodeError as e:
+            sys.exit(f"{path}: not a bench JSON document ({e})")
+    if isinstance(doc.get("parsed"), dict):
+        doc = doc["parsed"]
+    if not isinstance(doc.get(key), dict):
+        sys.exit(f"{path}: no '{key}' map (top-level keys: {sorted(doc)})")
+    return doc[key]
 
 
 def main() -> None:
@@ -31,8 +39,7 @@ def main() -> None:
     old, new = load(args[0], key), load(args[1], key)
     shared = sorted(set(old) & set(new))
     if not shared:
-        print("no shared keys")
-        return
+        sys.exit(f"no shared '{key}' keys between {args[0]} and {args[1]}")
     ratios = [(new[k] / old[k] if old[k] > 0 else 1.0, k) for k in shared]
     geomean = math.exp(sum(math.log(max(r, 1e-9)) for r, _ in ratios) / len(ratios))
     print(f"{len(shared)} shared '{key}' keys  geomean {geomean:.3f}  "

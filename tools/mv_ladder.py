@@ -221,7 +221,7 @@ def run_rung_join(spark, n_rows: int, n_refreshes: int = 5, compound: bool = Fal
 
     ``compound=True`` (r12, VERDICT r11 #1): the join carries an
     AND-conjoined two-column key (``a.fk = b.fk AND a.g = b.g``). Before
-    multi-pair arm pruning, join_equi_keys returned None for this shape
+    multi-pair arm pruning, the equi-key extractor returned None for this shape
     and every refresh re-scanned the full sides — the exact cost the r11
     single-key rung measured (63.7 s/refresh at the 10M rung) before the
     single-key fix; the compound rung must now be flat too."""
