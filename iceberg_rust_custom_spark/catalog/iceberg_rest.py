@@ -29,10 +29,9 @@ joining levels). Metadata documents live in the warehouse (shared storage,
 as with a real REST catalog over an object store); the service returns
 ``metadata-location`` and clients read the JSON from storage.
 
-The key difference from catalog/rest_catalog.py (pointer-CAS over HTTP):
-here the COMMIT is a first-class protocol operation the server validates,
-which is what the actual Iceberg REST spec does — so `Transaction.commit`
-routes through ``commit_updates`` instead of write-file-then-swap.
+The COMMIT is a first-class protocol operation the server validates, as
+the Iceberg REST spec defines it — so `Transaction.commit` routes through
+``commit_updates`` instead of write-file-then-swap.
 """
 
 from __future__ import annotations

@@ -50,11 +50,7 @@ def compact(
     snap = md.snapshot_for_ref()
     if snap is None:
         return table
-    from iceberg_rust_custom_spark.table.scan import (
-        plan_delete_files,
-        plan_files,
-        scan_to_dataframe,
-    )
+    from iceberg_rust_custom_spark.table.scan import plan_files, scan_to_dataframe
 
     files = plan_files(md, snap)
     if not files:
@@ -64,20 +60,12 @@ def compact(
 
     # v3 row lineage: compaction MUST preserve row identity (spec "Row
     # Lineage" — rewritten rows keep _row_id and _last_updated_sequence_
-    # number). If any live file has lineage, read it through the scan and
-    # materialize the two columns physically into the rewritten files
-    # (write_partitioned marks them first_row_id=-1 = explicit).
-    lineage_live = any(f.first_row_id is not None for f in files)
-    if plan_delete_files(md, snap):
-        # merge-on-read deletes materialize here: the scan applies them,
-        # the rewrite commit drops the delete files with the old data files
-        df = scan_to_dataframe(table.spark, md, snap, row_lineage=lineage_live)
-    elif lineage_live:
-        df = scan_to_dataframe(table.spark, md, snap, row_lineage=True)
-    else:
-        from iceberg_rust_custom_spark.table.scan import read_physical
-
-        df = read_physical(table.spark, md.current_schema(), [f.file_path for f in files])
+    # number): read through the scan and materialize the two columns
+    # physically into the rewritten files (write_partitioned marks them
+    # first_row_id=-1 = explicit). Pending merge-on-read deletes
+    # materialize here too: the scan applies them, the rewrite commit
+    # drops the delete files with the old data files.
+    df = scan_to_dataframe(table.spark, md, snap, row_lineage=True)
     spec = md.default_spec()
     if not spec.is_partitioned:
         df = df.repartition(n_tasks)
@@ -119,17 +107,15 @@ def rewrite_position_deletes(table: Table) -> Table:
     refresh)."""
     from pyspark.sql import functions as F
 
-    from iceberg_rust_custom_spark.table.deletion_vectors import (
-        dv_positions_df,
-        write_deletion_vectors,
-    )
+    from iceberg_rust_custom_spark.table.deletion_vectors import write_deletion_vectors
     from iceberg_rust_custom_spark.table.scan import (
-        _read_with_field_id_resolution,
-        _with_lineage,
         data_file_sequence_numbers,
+        eq_victim_candidates,
         equality_delete_hits,
         plan_delete_files,
         plan_files,
+        position_tombstones,
+        read_data_files,
     )
 
     table._refresh_for_write()
@@ -141,44 +127,18 @@ def rewrite_position_deletes(table: Table) -> Table:
     if not deletes:
         return table
     spark = table.spark
-    pos_parquet = [
-        e.data_file
-        for e in deletes
-        if e.data_file.content == 1 and e.data_file.file_format != "puffin"
-    ]
-    pos_dv = [
-        e.data_file
-        for e in deletes
-        if e.data_file.content == 1 and e.data_file.file_format == "puffin"
-    ]
+    pos_files = [e.data_file for e in deletes if e.data_file.content == 1]
     eq_entries = [e for e in deletes if e.data_file.content == 2]
     carried = plan_files(md, snap)
-    parts = []
-    if pos_parquet:
-        parts.append(
-            spark.read.schema("file_path string, pos long")
-            .parquet(*[d.file_path for d in pos_parquet])
-            .select("file_path", "pos")
-        )
-    if pos_dv:
-        parts.append(dv_positions_df(spark, pos_dv))
+    parts = [position_tombstones(spark, pos_files)] if pos_files else []
     if eq_entries and carried:
-        from iceberg_rust_custom_spark.table.scan import eq_victim_candidates
-
         schema = md.current_schema()
         file_seqs = data_file_sequence_numbers(md, snap)
         # only files whose key bounds a delete can actually touch need the
         # position-conversion scan (r9; scan.eq_delete_can_touch)
         cand = eq_victim_candidates(carried, eq_entries, schema, file_seqs, schemas=md.schemas)
         if cand:
-            if len(md.schemas) > 1:
-                df = _read_with_field_id_resolution(spark, md, schema, cand, lineage=True)
-            else:
-                df = _with_lineage(
-                    spark.read.schema(schema.physical_spark_schema()).parquet(
-                        *[f.file_path for f in cand]
-                    )
-                )
+            df = read_data_files(spark, md, cand, address=True)
             hits = equality_delete_hits(spark, df, eq_entries, file_seqs, schema=schema)
             parts.append(
                 hits.select(F.col("_sg_file").alias("file_path"), F.col("_sg_pos").alias("pos"))
@@ -220,73 +180,6 @@ def maintain(table: Table, small_file_bytes: int | None = None, min_small_files:
     return compact(table, target)
 
 
-def _read_files_applying_deletes(table: Table, md, snap, files: list, lineage_live: bool):
-    """Read specific live data files with every pending merge-on-read
-    delete applied (equality first, then position tombstones — both
-    sequence-gated exactly like the scan), optionally with the v3 lineage
-    columns materialized.
-
-    This is what lets the copy-on-write row-level ops (delete_where /
-    merge_upsert / update_where) keep their rewrite SCOPED when pending
-    MoR deletes exist: the matched files read through the same delete
-    machinery ``scan_to_dataframe`` uses, untouched files that a pending
-    delete references materialize via ``Table._materialize_carried_deletes``
-    (table/table.py), and everything else carries over by reference —
-    work scales with the delete set plus the matched files, never the
-    table (previously these ops fell back to a full-table ``compact()``)."""
-    from iceberg_rust_custom_spark.table.scan import (
-        _apply_equality_deletes,
-        _apply_position_deletes,
-        _read_with_field_id_resolution,
-        _with_lineage,
-        data_file_sequence_numbers,
-        plan_delete_files,
-        read_files_with_lineage,
-        read_physical,
-    )
-
-    spark = table.spark
-    schema = md.current_schema()
-    deletes = plan_delete_files(md, snap)
-    if lineage_live:
-        df = read_files_with_lineage(spark, md, snap, files, keep_address=True)
-    elif len(md.schemas) > 1:
-        df = _read_with_field_id_resolution(spark, md, schema, files, lineage=True)
-    else:
-        df = _with_lineage(read_physical(spark, schema, [f.file_path for f in files]))
-    eq = [e for e in deletes if e.data_file.content == 2]
-    pos = [e.data_file for e in deletes if e.data_file.content == 1]
-    if eq:
-        df = _apply_equality_deletes(
-            spark, df, eq, data_file_sequence_numbers(md, snap), schema=schema
-        )
-    if pos:
-        df = _apply_position_deletes(spark, df, pos)
-    return df.drop("_sg_file", "_sg_pos")
-
-
-def _read_matched_files(table: Table, md, files: list, with_address: bool = False):
-    """Read specific data files under the CURRENT schema, resolving by
-    field id when the table has evolved (a renamed column read by NAME
-    under the current physical schema binds NULL — a row-level op's
-    predicate then silently matches nothing; r9 fix, caught by the
-    evolved-geo changes test). ``with_address=True`` adds the
-    ``_sg_file``/``_sg_pos`` row address for tombstone writers."""
-    from iceberg_rust_custom_spark.table.scan import (
-        _read_with_field_id_resolution,
-        _with_lineage,
-        read_physical,
-    )
-
-    schema = md.current_schema()
-    if len(md.schemas) > 1:
-        return _read_with_field_id_resolution(
-            table.spark, md, schema, files, lineage=with_address
-        )
-    df = read_physical(table.spark, schema, [f.file_path for f in files])
-    return _with_lineage(df) if with_address else df
-
-
 def delete_where(table: Table, predicate, mode: str | None = None) -> Table:
     """Row-level DELETE. The reference *detects* delete files but never
     applies them (table/mod.rs:156-166; README lists delete as
@@ -305,7 +198,11 @@ def delete_where(table: Table, predicate, mode: str | None = None) -> Table:
       materializes the deletes back into pure data files.
     """
     from iceberg_rust_custom_spark.metadata.expressions import parse_predicate
-    from iceberg_rust_custom_spark.table.scan import plan_delete_files, plan_files
+    from iceberg_rust_custom_spark.table.scan import (
+        plan_delete_files,
+        plan_files,
+        read_data_files,
+    )
 
     md = table.metadata
     snap = md.snapshot_for_ref()
@@ -325,23 +222,13 @@ def delete_where(table: Table, predicate, mode: str | None = None) -> Table:
     matched_paths = {f.file_path for f in matched}
     untouched = [f for f in all_files if f.file_path not in matched_paths]
 
-    lineage_live = any(f.first_row_id is not None for f in all_files)
-    if pending:
-        # pending MoR deletes + full-set rewrite would resurrect rows; read
-        # the matched files THROUGH the delete machinery and materialize
-        # only the untouched files a delete actually references (below) —
-        # scoped, never a full-table compact (r8; was the last full-table
-        # rewrite fallback)
-        df = _read_files_applying_deletes(table, md, snap, matched, lineage_live)
-    elif lineage_live:
-        # v3 row lineage: survivors in rewritten files are unchanged rows —
-        # both lineage columns carry over explicitly (spec: rewrites
-        # preserve row identity)
-        from iceberg_rust_custom_spark.table.scan import read_files_with_lineage
-
-        df = read_files_with_lineage(table.spark, md, snap, matched)
-    else:
-        df = _read_matched_files(table, md, matched)
+    # v3 row lineage: survivors in rewritten files are unchanged rows —
+    # both lineage columns carry over explicitly (spec: rewrites preserve
+    # row identity). Pending MoR deletes + a full-set rewrite would
+    # resurrect rows, so the matched files read THROUGH the delete
+    # machinery and only the untouched files a delete actually references
+    # materialize (below) — scoped, never a full-table compact (r8)
+    df = read_data_files(table.spark, md, matched, lineage=True, deletes=pending, snapshot=snap)
     kept = df.filter(f"NOT coalesce(({expr.sql()}), false)")
     data_dir = os.path.join(md.location, "data", "delete-" + _uuid.uuid4().hex[:12])
     new_files = write_partitioned(kept, md, data_dir)
@@ -427,8 +314,9 @@ def _delete_merge_on_read(table: Table, expr, matched) -> Table:
     of candidates, no data rewrite."""
     from pyspark.sql import functions as F
 
-    md = table.metadata
-    src = _read_matched_files(table, md, matched, with_address=True)
+    from iceberg_rust_custom_spark.table.scan import read_data_files
+
+    src = read_data_files(table.spark, table.metadata, matched, address=True)
     hits = (
         src.filter(f"coalesce(({expr.sql()}), false)")
         .select(F.col("_sg_file").alias("file_path"), F.col("_sg_pos").alias("pos"))
@@ -458,7 +346,11 @@ def merge_upsert(table: Table, source, key_cols: list[str], mode: str | None = N
       ``compact()`` folds the tombstones in.
     """
     from iceberg_rust_custom_spark.metadata.expressions import parse_predicate
-    from iceberg_rust_custom_spark.table.scan import plan_delete_files, plan_files
+    from iceberg_rust_custom_spark.table.scan import (
+        plan_delete_files,
+        plan_files,
+        read_data_files,
+    )
 
     md = table.metadata
     snap = md.snapshot_for_ref()
@@ -488,10 +380,8 @@ def merge_upsert(table: Table, source, key_cols: list[str], mode: str | None = N
 
     from pyspark.sql import functions as F
 
-    schema = md.current_schema().spark_schema()
-    lineage_live = any(f.first_row_id is not None for f in all_files)
     data_dir = os.path.join(md.location, "data", "merge-" + _uuid.uuid4().hex[:12])
-    if lineage_live and matched:
+    if matched:
         # v3 row lineage: carried target rows keep both lineage columns; a
         # source row UPDATING an existing key inherits that row's _row_id
         # (with _last_updated_sequence_number nulled → reads as this
@@ -499,12 +389,9 @@ def merge_upsert(table: Table, source, key_cols: list[str], mode: str | None = N
         # write WITHOUT lineage columns so commit assigns them a fresh
         # first_row_id block instead of freezing NULL ids into an
         # explicit-lineage file
-        from iceberg_rust_custom_spark.table.scan import read_files_with_lineage
-
-        if pending:
-            tgt = _read_files_applying_deletes(table, md, snap, matched, True)
-        else:
-            tgt = read_files_with_lineage(table.spark, md, snap, matched)
+        tgt = read_data_files(
+            table.spark, md, matched, lineage=True, deletes=pending, snapshot=snap
+        )
         skeys = source.select(*key_cols).distinct()
         kept = tgt.join(skeys, on=key_cols, how="left_anti")
         # dedup the id donor per key: N target rows sharing a key must not
@@ -522,18 +409,7 @@ def merge_upsert(table: Table, source, key_cols: list[str], mode: str | None = N
         new_files = write_partitioned(kept.unionByName(src_updates), md, data_dir)
         new_files += write_partitioned(src_new, md, data_dir + "-ins")
     else:
-        pieces = []
-        if matched:
-            if pending:
-                tgt = _read_files_applying_deletes(table, md, snap, matched, False)
-            else:
-                tgt = _read_matched_files(table, md, matched)
-            pieces.append(tgt.join(source.select(*key_cols).distinct(), on=key_cols, how="left_anti"))
-        pieces.append(source)
-        out = pieces[0]
-        for p in pieces[1:]:
-            out = out.unionByName(p)
-        new_files = write_partitioned(out, md, data_dir)
+        new_files = write_partitioned(source, md, data_dir)
     if pending and untouched:
         untouched = table._materialize_carried_deletes(untouched, pending, snap, data_dir)
     table.metadata = table.new_transaction().rewrite(untouched + new_files).commit()
@@ -548,7 +424,7 @@ def _merge_upsert_mor(table: Table, source, key_cols: list[str]) -> Table:
     from pyspark.sql import functions as F
 
     from iceberg_rust_custom_spark.metadata.expressions import parse_predicate
-    from iceberg_rust_custom_spark.table.scan import plan_files
+    from iceberg_rust_custom_spark.table.scan import plan_files, read_data_files
 
     md = table.metadata
     snap = md.snapshot_for_ref()
@@ -564,8 +440,7 @@ def _merge_upsert_mor(table: Table, source, key_cols: list[str]) -> Table:
 
     tx = table.new_transaction()
     data_dir = os.path.join(md.location, "data", "merge-" + _uuid.uuid4().hex[:12])
-    lineage_live = matched and any(f.first_row_id is not None for f in matched)
-    if lineage_live:
+    if matched:
         # v3 row lineage: source rows UPDATING an existing key inherit that
         # row's _row_id (explicit, _last_updated_sequence_number nulled →
         # this commit's seq); new keys append separately so commit assigns
@@ -573,9 +448,9 @@ def _merge_upsert_mor(table: Table, source, key_cols: list[str]) -> Table:
         # only — a physically-tombstoned row's id may be re-donated to the
         # same key, which keeps id continuity and can never duplicate a
         # live id.
-        from iceberg_rust_custom_spark.table.scan import read_files_with_lineage
-
-        tgt = read_files_with_lineage(table.spark, md, snap, matched, keep_address=True)
+        tgt = read_data_files(
+            table.spark, md, matched, address=True, lineage=True, snapshot=snap
+        )
         matched_addr = tgt.select(
             F.col("_sg_file").alias("file_path"),
             F.col("_sg_pos").alias("pos"),
@@ -599,20 +474,6 @@ def _merge_upsert_mor(table: Table, source, key_cols: list[str]) -> Table:
             + write_partitioned(src_new, md, data_dir + "-ins")
         )
     else:
-        if matched:
-            tgt = _read_matched_files(table, md, matched, with_address=True)
-            hits = (
-                tgt.select(
-                    F.col("_sg_file").alias("file_path"),
-                    F.col("_sg_pos").alias("pos"),
-                    *key_cols,
-                )
-                .join(F.broadcast(source.select(*key_cols).distinct()), on=key_cols, how="left_semi")
-                .select("file_path", "pos")
-            )
-            del_files = _write_position_deletes(table, hits)
-            if del_files:
-                tx.append_deletes(del_files)
         tx.append(write_partitioned(source, md, data_dir))
     tx.set_operation("overwrite")  # rows changed: not a pure append
     table.metadata = tx.commit()
@@ -793,7 +654,11 @@ def update_where(table: Table, assignments: dict, predicate, mode: str | None = 
     from pyspark.sql import functions as F
 
     from iceberg_rust_custom_spark.metadata.expressions import parse_predicate
-    from iceberg_rust_custom_spark.table.scan import plan_delete_files, plan_files
+    from iceberg_rust_custom_spark.table.scan import (
+        plan_delete_files,
+        plan_files,
+        read_data_files,
+    )
 
     md = table.metadata
     snap = md.snapshot_for_ref()
@@ -818,19 +683,11 @@ def update_where(table: Table, assignments: dict, predicate, mode: str | None = 
     untouched = [f for f in all_files if f.file_path not in matched_paths]
 
     schema = md.current_schema().spark_schema()
-    lineage_live = any(f.first_row_id is not None for f in all_files)
-    if pending:
-        df = _read_files_applying_deletes(table, md, snap, matched, lineage_live)
-    elif lineage_live:
-        # v3 row lineage: UPDATE preserves _row_id; the modified row's
-        # _last_updated_sequence_number nulls out so it inherits THIS
-        # commit's sequence number at read time (unmodified carried rows
-        # keep their explicit old value)
-        from iceberg_rust_custom_spark.table.scan import read_files_with_lineage
-
-        df = read_files_with_lineage(table.spark, md, snap, matched)
-    else:
-        df = _read_matched_files(table, md, matched)
+    # v3 row lineage: UPDATE preserves _row_id; the modified row's
+    # _last_updated_sequence_number nulls out so it inherits THIS commit's
+    # sequence number at read time (unmodified carried rows keep their
+    # explicit old value)
+    df = read_data_files(table.spark, md, matched, lineage=True, deletes=pending, snapshot=snap)
     cond = F.expr(f"coalesce(({pred_sql}), false)")
     cols = [
         (
@@ -840,13 +697,12 @@ def update_where(table: Table, assignments: dict, predicate, mode: str | None = 
         )
         for f in schema.fields
     ]
-    if lineage_live:
-        cols.append(F.col("_row_id"))
-        cols.append(
-            F.when(cond, F.lit(None).cast("long"))
-            .otherwise(F.col("_last_updated_sequence_number"))
-            .alias("_last_updated_sequence_number")
-        )
+    cols.append(F.col("_row_id"))
+    cols.append(
+        F.when(cond, F.lit(None).cast("long"))
+        .otherwise(F.col("_last_updated_sequence_number"))
+        .alias("_last_updated_sequence_number")
+    )
     updated = df.select(*cols)
     data_dir = os.path.join(md.location, "data", "update-" + _uuid.uuid4().hex[:12])
     new_files = write_partitioned(updated, md, data_dir)
@@ -1093,7 +949,11 @@ def _update_merge_on_read(table: Table, assignments: dict, predicate) -> Table:
     from pyspark.sql import functions as F
 
     from iceberg_rust_custom_spark.metadata.expressions import parse_predicate
-    from iceberg_rust_custom_spark.table.scan import plan_files, scan_to_dataframe
+    from iceberg_rust_custom_spark.table.scan import (
+        plan_files,
+        read_data_files,
+        scan_to_dataframe,
+    )
 
     md = table.metadata
     snap = md.snapshot_for_ref()
@@ -1106,7 +966,7 @@ def _update_merge_on_read(table: Table, assignments: dict, predicate) -> Table:
         return table
 
     schema = md.current_schema().spark_schema()
-    src = _read_matched_files(table, md, matched, with_address=True)
+    src = read_data_files(table.spark, md, matched, address=True)
     hits = (
         src.filter(f"coalesce(({pred_sql}), false)")
         .select(F.col("_sg_file").alias("file_path"), F.col("_sg_pos").alias("pos"))
@@ -1121,10 +981,9 @@ def _update_merge_on_read(table: Table, assignments: dict, predicate) -> Table:
         scan_pred = parse_predicate(pred_sql)
     except Exception:
         scan_pred = None
-    lineage_live = any(f.first_row_id is not None for f in matched)
-    live = scan_to_dataframe(
-        table.spark, md, snap, scan_pred, row_lineage=lineage_live
-    ).filter(f"coalesce(({pred_sql}), false)")
+    live = scan_to_dataframe(table.spark, md, snap, scan_pred, row_lineage=True).filter(
+        f"coalesce(({pred_sql}), false)"
+    )
     cols = [
         (
             F.expr(assignments[f.name]).cast(f.dataType).alias(f.name)
@@ -1133,12 +992,11 @@ def _update_merge_on_read(table: Table, assignments: dict, predicate) -> Table:
         )
         for f in schema.fields
     ]
-    if lineage_live:
-        # v3 row lineage: the appended updated version keeps the tombstoned
-        # row's _row_id; _last_updated_sequence_number nulls → inherits
-        # this commit's sequence number at read time
-        cols.append(F.col("_row_id"))
-        cols.append(F.lit(None).cast("long").alias("_last_updated_sequence_number"))
+    # v3 row lineage: the appended updated version keeps the tombstoned
+    # row's _row_id; _last_updated_sequence_number nulls → inherits this
+    # commit's sequence number at read time
+    cols.append(F.col("_row_id"))
+    cols.append(F.lit(None).cast("long").alias("_last_updated_sequence_number"))
     new_rows = live.select(*cols)
     data_dir = os.path.join(md.location, "data", "update-" + _uuid.uuid4().hex[:12])
     tx = table.new_transaction()
@@ -1225,9 +1083,7 @@ def zorder(
         return table
     # v3 row lineage rides the rewrite as explicit columns (same contract
     # as compact — a clustering rewrite must not change row identity)
-    df = scan_to_dataframe(
-        table.spark, md, snap, row_lineage=any(f.first_row_id is not None for f in files)
-    )
+    df = scan_to_dataframe(table.spark, md, snap, row_lineage=True)
 
     n_cells = 1 << bits
 

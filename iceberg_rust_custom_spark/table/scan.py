@@ -640,20 +640,6 @@ def scan_to_dataframe(
     else:
         files = plan_files(metadata, snapshot, predicate, ml_rows=ml_rows, entry_cache=entry_cache)
     deletes = plan_delete_files(metadata, snapshot, ml_rows=ml_rows, entry_cache=entry_cache)
-    # files are READ under the physical schema (v3 variant columns are
-    # JSON text on disk) and surfaced logical (parse_json) after the
-    # row-address-keyed delete/lineage machinery
-    read_schema = schema.physical_spark_schema()
-    if row_lineage:
-        from pyspark.sql import types as T
-
-        read_schema = T.StructType(
-            list(read_schema.fields)
-            + [
-                T.StructField("_row_id", T.LongType(), True),
-                T.StructField("_last_updated_sequence_number", T.LongType(), True),
-            ]
-        )
     _META_COLS = ("_file", "_pos", "_spec_id", "_partition")
     if metadata_columns:
         bad = [c for c in metadata_columns if c not in _META_COLS]
@@ -697,68 +683,26 @@ def scan_to_dataframe(
             elif len(touched) < len(files):
                 clean_files = [f for f in files if canon_path(f.file_path) not in touched]
                 files = [f for f in files if canon_path(f.file_path) in touched]
-    lineage = (bool(deletes) or row_lineage or bool(metadata_columns)) and bool(files)
-    if not files:
-        if metadata_columns:
-            from pyspark.sql import types as T
-
-            _meta_types = {
-                "_file": T.StringType(),
-                "_pos": T.LongType(),
-                "_spec_id": T.IntegerType(),
-                "_partition": T.StringType(),
-            }
-            read_schema = T.StructType(
-                list(read_schema.fields)
-                + [T.StructField(c, _meta_types[c], True) for c in metadata_columns]
-            )
-        df = local_rows_df(spark, [], read_schema)
-    elif len(metadata.schemas) > 1:
-        df = _read_with_field_id_resolution(
-            spark, metadata, schema, files, lineage=lineage, physical_lineage=row_lineage
+    file_seqs = None
+    if row_lineage or any(e.data_file.content == 2 for e in deletes):
+        file_seqs = data_file_sequence_numbers(
+            metadata, snapshot, ml_rows=ml_rows, entry_cache=entry_cache
         )
-    else:
-        df = spark.read.schema(read_schema).parquet(*[f.file_path for f in files])
-        if lineage:
-            df = _with_lineage(df)
-    if lineage:
-        pos = [e.data_file for e in deletes if e.data_file.content == 1]
-        eq = [e for e in deletes if e.data_file.content == 2]
-        if eq:
-            df = _apply_equality_deletes(
-                spark,
-                df,
-                eq,
-                data_file_sequence_numbers(
-                    metadata, snapshot, ml_rows=ml_rows, entry_cache=entry_cache
-                ),
-                schema=schema,
-            )
-        if pos:
-            df = _apply_position_deletes(spark, df, pos)
-        if row_lineage:
-            df = _attach_row_lineage(
-                spark,
-                df,
-                files,
-                data_file_sequence_numbers(
-                    metadata, snapshot, ml_rows=ml_rows, entry_cache=entry_cache
-                ),
-            )
-        if metadata_columns:
-            df = _attach_metadata_columns(spark, df, files, metadata_columns, metadata)
+    df = read_data_files(
+        spark,
+        metadata,
+        files,
+        address=bool(metadata_columns),
+        lineage=row_lineage,
+        deletes=deletes,
+        schema=schema,
+        file_seqs=file_seqs,
+    )
+    if metadata_columns:
+        df = _attach_metadata_columns(spark, df, files, metadata_columns, metadata)
         df = df.drop("_sg_file", "_sg_pos")
     if clean_files:  # untouched files rejoin OUTSIDE the MoR machinery
-        if len(metadata.schemas) > 1:
-            clean_df = _read_with_field_id_resolution(
-                spark, metadata, schema, clean_files, lineage=False
-            )
-        else:
-            clean_df = spark.read.schema(read_schema).parquet(
-                *[f.file_path for f in clean_files]
-            )
-        df = df.unionByName(clean_df)
-    df = _decode_variants(df, schema)
+        df = df.unionByName(read_data_files(spark, metadata, clean_files, schema=schema))
     if predicate is not None:
         df = df.filter(predicate.sql())  # residual filter → Catalyst pushes into Parquet
     if columns:
@@ -842,48 +786,134 @@ def _decode_variants(df: DataFrame, schema: Schema) -> DataFrame:
     return df
 
 
-def read_physical(spark, schema: Schema, paths: list[str]) -> DataFrame:
-    """Read specific data files under the table's physical schema and
-    surface the logical types (variant columns parsed). The drop-in for
-    raw ``spark.read.schema(schema.spark_schema()).parquet`` sites —
-    byte-identical plan when the schema has no variant columns."""
-    df = spark.read.schema(schema.physical_spark_schema()).parquet(*paths)
-    return _decode_variants(df, schema)
+_LINEAGE_COLS = ("_row_id", "_last_updated_sequence_number")
 
 
-def read_files_with_lineage(
-    spark, metadata, snapshot, files: list, keep_address: bool = False
+def _lineage_fields() -> list:
+    from pyspark.sql import types as T
+
+    return [T.StructField(c, T.LongType(), True) for c in _LINEAGE_COLS]
+
+
+def read_data_files(
+    spark,
+    metadata: TableMetadata,
+    files: list,
+    *,
+    address: bool = False,
+    lineage: bool = False,
+    deletes=(),
+    snapshot: Snapshot | None = None,
+    schema: Schema | None = None,
+    file_seqs: dict | None = None,
 ) -> DataFrame:
-    """Read specific live data files with the v3 lineage columns
-    materialized (explicit file values win, else inherit first_row_id +
-    position). The building block CoW rewrites (DELETE/UPDATE/MERGE) use
-    to preserve row identity, per spec "Row Lineage": carried rows keep
-    both columns; a rewrite that modifies a row keeps its ``_row_id`` and
-    nulls ``_last_updated_sequence_number`` so it inherits the rewriting
-    commit's sequence number. ``keep_address=True`` retains the
-    ``_sg_file`` / ``_sg_pos`` row address for callers that also need to
-    emit position tombstones."""
-    schema = metadata.current_schema()
+    """The one reader from planned data files to a DataFrame in the
+    table's logical types (``schema``, default the current schema).
+
+    * Single-schema tables read with one ``spark.read.schema(physical)``;
+      evolved tables (more than one schema in metadata) resolve columns by
+      field id per write schema (``_read_with_field_id_resolution``).
+    * ``address=True`` keeps the ``_sg_file`` / ``_sg_pos`` row address
+      (tombstone writers, metadata columns); it is read internally whenever
+      deletes or lineage need it and dropped otherwise.
+    * ``lineage=True`` appends the v3 ``_row_id`` /
+      ``_last_updated_sequence_number`` columns: explicit values physically
+      written into a file win, else rows inherit ``first_row_id +
+      position`` and the file's data sequence number. This is how
+      rewrites (CoW DELETE/UPDATE/MERGE, compaction) preserve row identity.
+    * ``deletes`` (manifest entries of pending delete files) apply
+      merge-on-read: equality deletes first, then position tombstones,
+      both sequence-gated exactly like the scan.
+    * Variant / geo / unknown columns surface logically
+      (``_decode_variants``) after the row-address-keyed machinery.
+
+    ``file_seqs`` (data file path → sequence number) is derived from
+    ``snapshot`` when equality deletes or lineage need it and the caller
+    has not already built it. ``files == []`` returns the typed empty
+    frame with the same columns."""
+    from pyspark.sql import types as T
+
+    schema = schema or metadata.current_schema()
+    lineage_fields = _lineage_fields() if lineage else []
+    if not files:
+        fields = list(schema.physical_spark_schema().fields) + lineage_fields
+        if address:
+            fields = [
+                T.StructField("_sg_file", T.StringType(), True),
+                T.StructField("_sg_pos", T.LongType(), True),
+            ] + fields
+        return _decode_variants(local_rows_df(spark, [], T.StructType(fields)), schema)
+    eq = [e for e in deletes if e.data_file.content == 2]
+    pos = [e.data_file for e in deletes if e.data_file.content == 1]
+    with_address = address or lineage or bool(eq or pos)
     if len(metadata.schemas) > 1:
         df = _read_with_field_id_resolution(
-            spark, metadata, schema, files, lineage=True, physical_lineage=True
+            spark, metadata, schema, files, address=with_address, lineage=lineage
         )
     else:
-        from pyspark.sql import types as T
-
-        ss = T.StructType(
-            list(schema.physical_spark_schema().fields)
-            + [
-                T.StructField("_row_id", T.LongType(), True),
-                T.StructField("_last_updated_sequence_number", T.LongType(), True),
-            ]
-        )
-        df = _with_lineage(spark.read.schema(ss).parquet(*[f.file_path for f in files]))
-    df = _attach_row_lineage(
-        spark, df, files, data_file_sequence_numbers(metadata, snapshot)
-    )
+        read_schema = T.StructType(list(schema.physical_spark_schema().fields) + lineage_fields)
+        df = spark.read.schema(read_schema).parquet(*[f.file_path for f in files])
+        if with_address:
+            df = _with_row_address(df)
+    if file_seqs is None and (eq or lineage):
+        file_seqs = data_file_sequence_numbers(metadata, snapshot)
+    if eq:
+        df = _apply_equality_deletes(spark, df, eq, file_seqs, schema=schema)
+    if pos:
+        df = _apply_position_deletes(spark, df, pos)
+    if lineage:
+        df = _attach_row_lineage(spark, df, files, file_seqs)
     df = _decode_variants(df, schema)
-    return df if keep_address else df.drop("_sg_file", "_sg_pos")
+    return df if address else df.drop("_sg_file", "_sg_pos")
+
+
+def position_tombstones(spark, delete_files: list, with_seq: bool = False) -> DataFrame:
+    """``(file_path, pos)`` of every tombstone in the given position-delete
+    files: parquet position-delete files and v3 deletion-vector blobs
+    (file_format=puffin) decode into one stream. ``with_seq=True`` adds
+    ``_del_seq``, the data sequence number of the delete file or blob that
+    holds each tombstone (the changelog's commit attribution)."""
+    from pyspark.sql import functions as F
+
+    from iceberg_rust_custom_spark.table.deletion_vectors import dv_positions_df
+
+    parquet_dels = [d for d in delete_files if d.file_format != "puffin"]
+    dv_dels = [d for d in delete_files if d.file_format == "puffin"]
+    parts = []
+    if parquet_dels:
+        # explicit schema: spec position-delete layout — avoids a blocking
+        # footer-inference job on every MoR read
+        pq = spark.read.schema("file_path string, pos long").parquet(
+            *[d.file_path for d in parquet_dels]
+        )
+        if with_seq:
+            # one scan for every file: a broadcast delete-file → sequence
+            # map joins the number on, keyed by _metadata.file_path
+            seq_map = F.broadcast(
+                local_rows_df(
+                    spark,
+                    [(d.file_path, d.data_sequence_number) for d in parquet_dels],
+                    "dpath string, _del_seq long",
+                )
+            )
+            pq = pq.select(
+                "file_path",
+                "pos",
+                F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/").alias("_dp"),
+            )
+            parts.append(
+                pq.join(seq_map, pq["_dp"] == seq_map["dpath"], "left").select(
+                    "file_path", "pos", "_del_seq"
+                )
+            )
+        else:
+            parts.append(pq.select("file_path", "pos"))
+    if dv_dels:
+        parts.append(dv_positions_df(spark, dv_dels, with_seq=with_seq))
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
 
 
 def _attach_metadata_columns(
@@ -955,7 +985,7 @@ def _attach_row_lineage(spark, df: DataFrame, files: list, file_seqs: dict) -> D
     return df.drop("_sg_frid", "_sg_fseq")
 
 
-def _with_lineage(df: DataFrame) -> DataFrame:
+def _with_row_address(df: DataFrame) -> DataFrame:
     """Expose (file, row-position) via Spark's hidden _metadata columns —
     the engine-native row address position deletes key on."""
     from pyspark.sql import functions as F
@@ -1056,22 +1086,7 @@ def _apply_position_deletes(spark, df: DataFrame, deletes: list[DataFile]) -> Da
 
     parquet_dels = [d for d in deletes if d.file_format != "puffin"]
     dv_dels = [d for d in deletes if d.file_format == "puffin"]
-    parts = []
-    if parquet_dels:
-        # explicit schema: spec position-delete layout — avoids a blocking
-        # footer-inference job on every MoR scan
-        parts.append(
-            spark.read.schema("file_path string, pos long")
-            .parquet(*[d.file_path for d in parquet_dels])
-            .select("file_path", "pos")
-        )
-    if dv_dels:
-        from iceberg_rust_custom_spark.table.deletion_vectors import dv_positions_df
-
-        parts.append(dv_positions_df(spark, dv_dels))
-    del_df = parts[0]
-    for p in parts[1:]:
-        del_df = del_df.unionByName(p)
+    del_df = position_tombstones(spark, deletes)
     # Broadcast gate: parquet tombstones are sized by file bytes, but a DV
     # run container compresses millions of positions into tens of bytes —
     # gate those on DECODED size (record_count = tombstone cardinality,
@@ -1259,7 +1274,7 @@ def _project_evolved(col, write_type, cur_type):
 
 
 def _read_with_field_id_resolution(
-    spark, metadata, schema, files, lineage: bool = False, physical_lineage: bool = False
+    spark, metadata, schema, files, address: bool = False, lineage: bool = False
 ):
     """Evolved tables: resolve columns by FIELD ID — a file written before
     ``rename_column(a→b)`` physically stores ``a``; reading it under the
@@ -1273,7 +1288,9 @@ def _read_with_field_id_resolution(
     ids, then the per-epoch scans union. Exactly Iceberg's parquet-field-id
     projection, expressed as a plan union instead of a custom data source.
     Legacy files without a recorded schema_id fall back to a conservative
-    coalesce over the field's historical names."""
+    coalesce over the field's historical names. ``address`` prepends the
+    ``_sg_file``/``_sg_pos`` row address; ``lineage`` reads the physical
+    v3 lineage columns. Only ``read_data_files`` calls this."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -1284,15 +1301,10 @@ def _read_with_field_id_resolution(
     for f in files:
         by_schema.setdefault(f.schema_id, []).append(f)
 
-    _lineage_fields = [
-        T.StructField("_row_id", T.LongType(), True),
-        T.StructField("_last_updated_sequence_number", T.LongType(), True),
-    ]
-
     def _extend(read_schema: T.StructType) -> T.StructType:
-        if not physical_lineage:
+        if not lineage:
             return read_schema
-        return T.StructType(list(read_schema.fields) + _lineage_fields)
+        return T.StructType(list(read_schema.fields) + _lineage_fields())
 
     parts = []
     for sid, group in by_schema.items():
@@ -1331,14 +1343,6 @@ def _read_with_field_id_resolution(
                     exprs.append(
                         _project_evolved(F.col(wf.name), wf.field_type, f.field_type).alias(f.name)
                     )
-            if physical_lineage:
-                exprs = exprs + [F.col("_row_id"), F.col("_last_updated_sequence_number")]
-            if lineage:
-                exprs = [
-                    F.col("_metadata.file_path").alias("_sg_file"),
-                    F.col("_metadata.row_index").alias("_sg_pos"),
-                ] + exprs
-            parts.append(df.select(*exprs))
         else:
             # legacy: no write-schema recorded → coalesce over historical names
             current_names = {f.name for f in schema.fields}
@@ -1371,14 +1375,14 @@ def _read_with_field_id_resolution(
                     cols = [F.col(name).cast(target_type) for name, _ in variants]
                 exprs.append((cols[0] if len(cols) == 1 else F.coalesce(*cols)).alias(f.name))
             df = spark.read.schema(_extend(T.StructType(read_fields))).parquet(*paths)
-            if physical_lineage:
-                exprs = exprs + [F.col("_row_id"), F.col("_last_updated_sequence_number")]
-            if lineage:
-                exprs = [
-                    F.col("_metadata.file_path").alias("_sg_file"),
-                    F.col("_metadata.row_index").alias("_sg_pos"),
-                ] + exprs
-            parts.append(df.select(*exprs))
+        if lineage:
+            exprs = exprs + [F.col(c) for c in _LINEAGE_COLS]
+        if address:
+            exprs = [
+                F.col("_metadata.file_path").alias("_sg_file"),
+                F.col("_metadata.row_index").alias("_sg_pos"),
+            ] + exprs
+        parts.append(df.select(*exprs))
 
     out = parts[0]
     for p in parts[1:]:

@@ -7,6 +7,7 @@ datafiles()), datafusion_iceberg/src/table.rs (scan + insert wiring).
 from __future__ import annotations
 
 import os
+import re
 import uuid as _uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -17,9 +18,19 @@ from iceberg_rust_custom_spark.metadata.expressions import Expr, parse_predicate
 from iceberg_rust_custom_spark.metadata.snapshot import MAIN_BRANCH, Snapshot
 from iceberg_rust_custom_spark.io.fileio import FileIO
 from iceberg_rust_custom_spark.metadata.table_metadata import TableMetadata
-from iceberg_rust_custom_spark.table.scan import plan_files, scan_to_dataframe
+from iceberg_rust_custom_spark.table.scan import plan_files, read_data_files, scan_to_dataframe
 from iceberg_rust_custom_spark.table.transaction import Transaction
 from iceberg_rust_custom_spark.table.write import write_partitioned
+
+
+_FILE_SCHEME = re.compile("^file:/+")
+
+
+def _strip_file_scheme(path: str) -> str:
+    """Spark's ``_metadata.file_path`` is a ``file:`` URI while manifests
+    store plain paths: compare scheme-stripped forms. No percent-decoding
+    and no absolutizing (unlike ``io.lister.canon_path``)."""
+    return _FILE_SCHEME.sub("/", path)
 
 
 def _replayable_commit(s: Snapshot) -> bool:
@@ -58,8 +69,6 @@ def _touched_data_files(
     only cost read time — the victims⋈tombstones inner join drops them),
     or None when driver-side derivation is not possible (caller falls
     back to one Spark collect over the tombstone plan)."""
-    import re as _re
-
     touched: set = set()
     for d in dv_dels:
         if not d.referenced_data_file:
@@ -77,7 +86,7 @@ def _touched_data_files(
         import pyarrow.parquet as _pq
 
         for d in unref:
-            p = _re.sub("^file:/+", "/", d.file_path)
+            p = _strip_file_scheme(d.file_path)
             if not os.path.exists(p):
                 return None  # non-local scheme: keep the distributed path
             touched.update(
@@ -89,7 +98,7 @@ def _touched_data_files(
     # one normalized form so a file never appears under both its plain and
     # file:-URI spellings (a double entry would read the file twice and
     # duplicate its delete events)
-    return sorted({_re.sub("^file:/+", "/", p) for p in touched})
+    return sorted({_strip_file_scheme(p) for p in touched})
 
 
 def changelog_segments(
@@ -524,30 +533,7 @@ class Table:
         snap = snapshot if snapshot is not None else self.metadata.snapshot_for_ref(MAIN_BRANCH)
         end = to_sequence_number if to_sequence_number is not None else self.metadata.last_sequence_number
         files = plan_files(self.metadata, snap, None, (from_sequence_number, end))
-        from iceberg_rust_custom_spark.table.scan import (
-            _decode_variants,
-            _read_with_field_id_resolution,
-            read_physical,
-        )
-
-        cur = self.metadata.current_schema()
-        if not files:
-            return _decode_variants(
-                local_rows_df(self.spark, [], cur.physical_spark_schema()), cur
-            )
-        if len(self.metadata.schemas) > 1:
-            # evolved table: files span write schemas — project by field id
-            # (a renamed/retyped column read under the current physical
-            # schema fails or, worse, misbinds; caught by the CDC source's
-            # rename test). The resolution surfaces variant logically but
-            # leaves geo columns as their physical WKB binary — run the
-            # decode pass so this branch matches read_physical's types
-            # (ADVICE r8: changes() unions this with decoded victims).
-            return _decode_variants(
-                _read_with_field_id_resolution(self.spark, self.metadata, cur, files),
-                cur,
-            )
-        return read_physical(self.spark, cur, [f.file_path for f in files])
+        return read_data_files(self.spark, self.metadata, files)
 
     def changes(
         self,
@@ -593,12 +579,7 @@ class Table:
         if not parts:
             from pyspark.sql import functions as F
 
-            from iceberg_rust_custom_spark.table.scan import _decode_variants
-
-            cur = self.metadata.current_schema()
-            empty = _decode_variants(
-                local_rows_df(self.spark, [], cur.physical_spark_schema()), cur
-            )
+            empty = read_data_files(self.spark, self.metadata, [])
             if with_lineage:
                 empty = empty.withColumn("_row_id", F.lit(None).cast("long"))
             return empty.withColumn("_change_type", F.lit("insert"))
@@ -616,47 +597,26 @@ class Table:
         only replayable commits."""
         from pyspark.sql import functions as F
 
-        from iceberg_rust_custom_spark.table.scan import read_files_with_lineage
-
-        schema = self.metadata.current_schema().spark_schema()
-        snap_head = snap
-        if with_lineage:
-            new_files = plan_files(self.metadata, snap_head, None, (from_sequence_number, end))
-            if new_files:
-                # the file's sequence number IS the insert event's commit:
-                # kept (hidden) so update pairing can require the delete and
-                # insert to come from the SAME commit — a full-history range
-                # must not relabel a row's ORIGINAL insert as update_after
-                inserts = read_files_with_lineage(
-                    self.spark, self.metadata, snap_head, new_files
-                ).withColumnRenamed("_last_updated_sequence_number", "_sg_cseq")
-            else:
-                from iceberg_rust_custom_spark.table.scan import _decode_variants
-
-                cur = self.metadata.current_schema()
-                inserts = (
-                    _decode_variants(
-                        local_rows_df(self.spark, [], cur.physical_spark_schema()), cur
-                    )
-                    .withColumn("_row_id", F.lit(None).cast("long"))
-                    .withColumn("_sg_cseq", F.lit(None).cast("long"))
-                )
-            inserts = inserts.withColumn("_change_type", F.lit("insert"))
-        else:
-            inserts = self.incremental_scan(
-                from_sequence_number, end, snapshot=snap_head
-            ).withColumn("_change_type", F.lit("insert"))
-
         from iceberg_rust_custom_spark.table.scan import (
-            _apply_equality_deletes,
-            _apply_position_deletes,
-            _read_with_field_id_resolution,
-            _with_lineage,
             data_file_sequence_numbers,
+            eq_victim_candidates,
             equality_delete_hits_with_seq,
             plan_delete_files,
-            read_physical,
+            position_tombstones,
         )
+
+        if with_lineage:
+            new_files = plan_files(self.metadata, snap, None, (from_sequence_number, end))
+            # the file's sequence number IS the insert event's commit:
+            # kept (hidden) so update pairing can require the delete and
+            # insert to come from the SAME commit — a full-history range
+            # must not relabel a row's ORIGINAL insert as update_after
+            inserts = read_data_files(
+                self.spark, self.metadata, new_files, lineage=True, snapshot=snap
+            ).withColumnRenamed("_last_updated_sequence_number", "_sg_cseq")
+        else:
+            inserts = self.incremental_scan(from_sequence_number, end, snapshot=snap)
+        inserts = inserts.withColumn("_change_type", F.lit("insert"))
 
         all_del_entries = plan_delete_files(self.metadata, snap)
         in_range = [
@@ -669,45 +629,19 @@ class Table:
             return inserts.drop("_sg_cseq") if with_lineage else inserts
         # every tombstone carries its commit's sequence number so update
         # pairing can match deletes to SAME-commit re-inserts. Parquet
-        # tombstones stay ONE scan for the whole range (a broadcast
-        # delete-file→sequence map joins the number on, keyed by
-        # _metadata.file_path); DV blobs likewise batch into ONE decode
-        # carrying per-blob sequence numbers (dv_positions_df with_seq) —
-        # one union part per commit would blow up plan size on long MoR
-        # histories. Equality deletes (content=2) convert to position form
-        # against the strictly-older live file set with the same
-        # sequence-gated key join the scan uses — their victims ARE
-        # computable from range-end state on a replayable (append/delete
-        # only) history, since appends never remove files.
-        parts = []
+        # tombstones and DV blobs each batch into ONE read for the whole
+        # range (position_tombstones with_seq) — one union part per commit
+        # would blow up plan size on long MoR histories. Equality deletes
+        # (content=2) convert to position form against the strictly-older
+        # live file set with the same sequence-gated key join the scan
+        # uses — their victims ARE computable from range-end state on a
+        # replayable (append/delete only) history, since appends never
+        # remove files.
         pq_dels = [d for d in del_files if d.file_format != "puffin"]
-        if pq_dels:
-            seq_map = F.broadcast(
-                local_rows_df(
-                    self.spark,
-                    [(d.file_path, d.data_sequence_number) for d in pq_dels],
-                    "dpath string, _del_seq long",
-                )
-            )
-            pqdf = self.spark.read.parquet(*[d.file_path for d in pq_dels]).select(
-                "file_path",
-                "pos",
-                F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/").alias("_dp"),
-            )
-            parts.append(
-                pqdf.join(seq_map, pqdf["_dp"] == seq_map["dpath"], "left").select(
-                    "file_path", "pos", "_del_seq"
-                )
-            )
         dv_dels = [d for d in del_files if d.file_format == "puffin"]
-        if dv_dels:
-            from iceberg_rust_custom_spark.table.deletion_vectors import dv_positions_df
-
-            parts.append(dv_positions_df(self.spark, dv_dels, with_seq=True))
+        parts = [position_tombstones(self.spark, del_files, with_seq=True)] if del_files else []
         eq_victims_planned = False
         if eq_in_range:
-            from iceberg_rust_custom_spark.table.scan import eq_victim_candidates
-
             file_seqs = data_file_sequence_numbers(self.metadata, snap)
             # victim candidates: strictly older than a delete AND key
             # bounds intersect it (r9 — previously every older live file
@@ -720,17 +654,9 @@ class Table:
                 schemas=self.metadata.schemas,
             )
             if cand:
-                cur = self.metadata.current_schema()
-                if len(self.metadata.schemas) > 1:
-                    src = _read_with_field_id_resolution(
-                        self.spark, self.metadata, cur, cand, lineage=True
-                    )
-                else:
-                    src = _with_lineage(
-                        read_physical(self.spark, cur, [f.file_path for f in cand])
-                    )
+                src = read_data_files(self.spark, self.metadata, cand, address=True)
                 hits = equality_delete_hits_with_seq(
-                    self.spark, src, eq_in_range, file_seqs, schema=cur
+                    self.spark, src, eq_in_range, file_seqs, schema=self.metadata.current_schema()
                 )
                 parts.append(
                     hits.select(
@@ -774,63 +700,26 @@ class Table:
             if eq_victims_planned:
                 tombs = tombs.localCheckpoint()
             touched = [r.file_path for r in tombs.select("file_path").distinct().collect()]
+        touched_set = {_strip_file_scheme(p) for p in touched}
+        touched_files = [
+            f
+            for f in plan_files(self.metadata, snap)
+            if _strip_file_scheme(f.file_path) in touched_set
+        ]
+        # rows already dead BEFORE the range (pending pre-range tombstones /
+        # equality deletes) must not emit delete events when an in-range
+        # delete targets them again
+        victims = read_data_files(
+            self.spark,
+            self.metadata,
+            touched_files,
+            address=True,
+            lineage=with_lineage,
+            deletes=pre_range,
+            snapshot=snap,
+        )
         if with_lineage:
-            import re as _re
-
-            def _norm(p: str) -> str:
-                return _re.sub("^file:/+", "/", p)
-
-            touched_set = {_norm(p) for p in touched}
-            touched_files = [
-                f for f in plan_files(self.metadata, snap) if _norm(f.file_path) in touched_set
-            ]
-            victims = read_files_with_lineage(
-                self.spark, self.metadata, snap, touched_files, keep_address=True
-            ).drop("_last_updated_sequence_number")
-        elif len(self.metadata.schemas) > 1:
-            # evolved table: victims must project by field id too
-            import re as _re2
-
-            _tset = {_re2.sub("^file:/+", "/", p) for p in touched}
-            touched_files = [
-                f
-                for f in plan_files(self.metadata, snap)
-                if _re2.sub("^file:/+", "/", f.file_path) in _tset
-            ]
-            from iceberg_rust_custom_spark.table.scan import _decode_variants
-
-            victims = _decode_variants(
-                _read_with_field_id_resolution(
-                    self.spark,
-                    self.metadata,
-                    self.metadata.current_schema(),
-                    touched_files,
-                    lineage=True,
-                ),
-                self.metadata.current_schema(),
-            )
-        else:
-            victims = read_physical(self.spark, self.metadata.current_schema(), touched).select(
-                F.col("_metadata.file_path").alias("_sg_file"),
-                F.col("_metadata.row_index").alias("_sg_pos"),
-                "*",
-            )
-        if pre_range:
-            # rows already dead BEFORE the range (pending pre-range
-            # tombstones/equality deletes) must not emit delete events when
-            # an in-range delete targets them again
-            pre_pos = [e.data_file for e in pre_range if e.data_file.content == 1]
-            pre_eq = [e for e in pre_range if e.data_file.content == 2]
-            if pre_eq:
-                victims = _apply_equality_deletes(
-                    self.spark,
-                    victims,
-                    pre_eq,
-                    data_file_sequence_numbers(self.metadata, snap),
-                    schema=self.metadata.current_schema(),
-                )
-            if pre_pos:
-                victims = _apply_position_deletes(self.spark, victims, pre_pos)
+            victims = victims.drop("_last_updated_sequence_number")
         deleted = (
             victims.join(
                 F.broadcast(tombs),
@@ -974,23 +863,11 @@ class Table:
           gating (matching scan-time application exactly), so every older
           carried file is affected.
         """
-        from pyspark.sql import functions as F
-
         from iceberg_rust_custom_spark.table.scan import (
-            _apply_equality_deletes,
-            _apply_position_deletes,
-            _read_with_field_id_resolution,
-            _with_lineage,
             data_file_sequence_numbers,
+            eq_victim_candidates,
+            position_tombstones,
         )
-
-        import re
-
-        def _norm(p: str) -> str:
-            # tombstones record Spark's _metadata.file_path (a file:/ URI);
-            # manifests store plain paths — compare scheme-stripped forms
-            # (same normalization as _apply_equality_deletes)
-            return re.sub("^file:/+", "/", p)
 
         pos_entries = [e for e in deletes if e.data_file.content == 1]
         eq_entries = [e for e in deletes if e.data_file.content == 2]
@@ -998,19 +875,17 @@ class Table:
         unscoped_pos = []  # parquet position deletes without addressing info
         for e in pos_entries:
             if e.data_file.referenced_data_file:
-                referenced.add(_norm(e.data_file.referenced_data_file))
+                referenced.add(_strip_file_scheme(e.data_file.referenced_data_file))
             else:
-                unscoped_pos.append(e.data_file.file_path)
+                unscoped_pos.append(e.data_file)
         if unscoped_pos:
             referenced.update(
-                _norm(r.file_path)
-                for r in self.spark.read.schema("file_path string, pos long")
-                .parquet(*unscoped_pos)
+                _strip_file_scheme(r.file_path)
+                for r in position_tombstones(self.spark, unscoped_pos)
                 .select("file_path")
                 .distinct()
                 .collect()
             )
-        file_seqs = data_file_sequence_numbers(self.metadata, snap) if eq_entries else {}
         if eq_entries:
             # scan-time application (_apply_equality_deletes) is GLOBAL with
             # only sequence gating, so the materialization must cover every
@@ -1020,41 +895,23 @@ class Table:
             # scan exactly: disjoint footer min/max on a key column proves
             # the anti-join removes zero rows from that file, so carrying it
             # unmodified is identical either way (r9; eq_delete_can_touch).
-            from iceberg_rust_custom_spark.table.scan import eq_victim_candidates
-
             for f in eq_victim_candidates(
                 carried,
                 eq_entries,
                 self.metadata.current_schema(),
-                file_seqs,
+                data_file_sequence_numbers(self.metadata, snap),
                 schemas=self.metadata.schemas,
             ):
-                referenced.add(_norm(f.file_path))
-        affected = [f for f in carried if _norm(f.file_path) in referenced]
-        untouched = [f for f in carried if _norm(f.file_path) not in referenced]
+                referenced.add(_strip_file_scheme(f.file_path))
+        affected = [f for f in carried if _strip_file_scheme(f.file_path) in referenced]
+        untouched = [f for f in carried if _strip_file_scheme(f.file_path) not in referenced]
         if not affected:
             return carried
-        schema = self.metadata.current_schema()
-        paths = [f.file_path for f in affected]
-        if any(f.first_row_id is not None for f in affected):
-            # v3 row lineage: surviving rows of the materialized files keep
-            # their identity (explicit columns; write_partitioned marks -1)
-            from iceberg_rust_custom_spark.table.scan import read_files_with_lineage
-
-            df = read_files_with_lineage(
-                self.spark, self.metadata, snap, affected, keep_address=True
-            )
-        elif len(self.metadata.schemas) > 1:
-            df = _read_with_field_id_resolution(self.spark, self.metadata, schema, affected, lineage=True)
-        else:
-            from iceberg_rust_custom_spark.table.scan import read_physical
-
-            df = _with_lineage(read_physical(self.spark, schema, paths))
-        if eq_entries:
-            df = _apply_equality_deletes(self.spark, df, eq_entries, file_seqs, schema=schema)
-        if pos_entries:
-            df = _apply_position_deletes(self.spark, df, [e.data_file for e in pos_entries])
-        df = df.drop("_sg_file", "_sg_pos")
+        # v3 row lineage: surviving rows of the materialized files keep
+        # their identity (explicit columns; write_partitioned marks -1)
+        df = read_data_files(
+            self.spark, self.metadata, affected, lineage=True, deletes=deletes, snapshot=snap
+        )
         mat_files = write_partitioned(df, self.metadata, os.path.join(data_dir, "materialized"))
         return untouched + mat_files
 

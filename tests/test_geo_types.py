@@ -168,3 +168,18 @@ def test_evolved_table_changes_decodes_geo(eng, spark):
         for r in ch2.where("_change_type = 'delete'").selectExpr("hex(st_asbinary(g))").collect()
     ]
     assert len(xs) == 2 and len(set(xs)) == 1
+    # merge-on-read UPDATE / DELETE whose predicate evaluates a geo
+    # function: the matched-file read of an evolved table must surface
+    # logical geometry, or st_asbinary(g) fails on WKB binary with a
+    # DATATYPE_MISMATCH
+    from iceberg_rust_custom_spark.table.maintenance import update_where
+
+    p12 = "0101000000000000000000F03F0000000000000040"  # POINT(1 2)
+    p34 = "010100000000000000000008400000000000001040"  # POINT(3 4)
+    update_where(
+        t, {"key": "key + 100"}, f"hex(st_asbinary(g)) = '{p34}'", mode="merge-on-read"
+    )
+    assert sorted(r.key for r in t.scan().collect()) == [2, 3, 110, 111]
+    delete_where(t, f"hex(st_asbinary(g)) = '{p12}'", mode="merge-on-read")
+    rows = t.scan().selectExpr("key", "hex(st_asbinary(g)) AS g").collect()
+    assert sorted((r.key, r.g) for r in rows) == [(110, p34), (111, p34)]

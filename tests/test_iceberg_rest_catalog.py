@@ -28,6 +28,41 @@ def test_config_and_namespaces(service):
     assert ("a", "b") in cat.list_namespaces()
 
 
+def _metadata_file(tmp_path, name: str) -> str:
+    """A metadata document the service can serve on GET (LoadTableResult
+    ships its contents)."""
+    loc = str(tmp_path / f"{name}.metadata.json")
+    with open(loc, "w") as f:
+        f.write("{}")
+    return loc
+
+
+def test_register_load_list_drop(service, tmp_path):
+    cat = IcebergRestCatalog(service.uri)
+    ident = Identifier(("ns",), "t1")
+    cat.create_namespace(("ns",))
+    assert ("ns",) in cat.list_namespaces()
+    loc = _metadata_file(tmp_path, "v1")
+    cat.register(ident, loc)
+    assert cat.tabular_exists(ident)
+    assert cat.load(ident) == (loc, "table")
+    assert ident in cat.list_tabulars(("ns",))
+    cat.drop(ident)
+    assert not cat.tabular_exists(ident)
+
+
+def test_double_register_conflicts(service, tmp_path):
+    """Registering an existing identifier is a 409 → CommitFailed, and the
+    first registration stays in place."""
+    cat = IcebergRestCatalog(service.uri)
+    ident = Identifier(("ns",), "t3")
+    first = _metadata_file(tmp_path, "v1")
+    cat.register(ident, first)
+    with pytest.raises(CommitFailed):
+        cat.register(ident, _metadata_file(tmp_path, "v1b"))
+    assert cat.load(ident)[0] == first
+
+
 def test_engine_lifecycle_over_rest_protocol(spark, service, sf_dir):
     """create → insert ×2 → scan → branch → DELETE, all committed through
     POST CommitTableRequest (no client-side pointer swap anywhere)."""

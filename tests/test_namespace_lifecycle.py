@@ -5,7 +5,8 @@ operations (iceberg-rust/src/catalog/mod.rs:34-52) and the REST crate's
 namespace-properties and delete routes (iceberg-rest-catalog/src/). One
 parametrized round-trip — create-with-properties → load → update
 (set + remove) → drop-non-empty refused → drop → gone — runs against all
-six backends, including both HTTP client/server pairs over real sockets.
+five backends, including the Iceberg REST client/server pair over a real
+socket.
 """
 
 import pytest
@@ -18,10 +19,9 @@ from iceberg_rust_custom_spark.catalog.iceberg_rest import (
     IcebergRestCatalogServer,
 )
 from iceberg_rust_custom_spark.catalog.object_store import InMemoryObjectStore, ObjectStoreCatalog
-from iceberg_rust_custom_spark.catalog.rest_catalog import CatalogServer, RestCatalog
 from iceberg_rust_custom_spark.catalog.sql_catalog import SqlCatalog
 
-BACKENDS = ["file", "sql", "object_store", "glue", "rest", "iceberg_rest"]
+BACKENDS = ["file", "sql", "object_store", "glue", "iceberg_rest"]
 
 
 @pytest.fixture()
@@ -35,12 +35,6 @@ def catalog(request, tmp_path):
         yield ObjectStoreCatalog(InMemoryObjectStore(), warehouse=str(tmp_path / "wh"))
     elif kind == "glue":
         yield GlueCatalog(FakeGlueClient())
-    elif kind == "rest":
-        server = CatalogServer(FileCatalog(str(tmp_path / "wh"))).start()
-        try:
-            yield RestCatalog(server.uri)
-        finally:
-            server.stop()
     elif kind == "iceberg_rest":
         server = IcebergRestCatalogServer(str(tmp_path / "wh"))
         try:
