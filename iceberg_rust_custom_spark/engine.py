@@ -62,6 +62,8 @@ class Engine:
         self.spark = spark
         self.catalog = catalog
         self.warehouse = warehouse or getattr(catalog, "warehouse", None)
+        # _deterministic_view verdicts by (view SQL, source schemas)
+        self._view_determinism: dict[tuple, bool] = {}
         try:
             # v3 geo columns need Spark 4's gated native geo types; the
             # conf is runtime-settable, so cover sessions not built by
@@ -472,7 +474,7 @@ class Engine:
             out_names = {f.name for f in result_schema.fields}
             if (
                 plan is not None
-                and plan.mode in ("aggregate", "joinN_agg", "agg_recompute")
+                and plan.mode in ("aggregate", "joinN_agg")
                 and plan.group_keys
                 and all(k in out_names for k in plan.group_keys)
             ):
@@ -739,16 +741,20 @@ class Engine:
         * ``"incremental-noop"`` — the delta touched no group: state only;
         * single-table SPJ: ``"incremental-append"`` (appends-only
           history), ``"incremental-changelog"`` (MoR row-level ops);
-        * single-table GROUP BY: ``"incremental-aggregate"`` (partial
-          merge), ``"incremental-changelog-aggregate"`` (MoR row-level
-          ops), ``"incremental-agg-recompute"`` (non-decomposable
-          aggregates or expression keys);
+        * single-table GROUP BY, decomposable aggregates over plain keys:
+          ``"incremental-aggregate"`` (partial merge),
+          ``"incremental-changelog-aggregate"`` (MoR row-level ops);
+        * affected-group recompute of any other GROUP BY over n inner-joined
+          relations: ``"incremental-agg-recompute"`` (n = 1),
+          ``"incremental-join-aggregate"`` (n = 2),
+          ``"incremental-join{n}-aggregate"`` (n ≥ 3);
         * two-table inner-join SPJ: ``"incremental-join"`` (appends-only
           history), ``"incremental-changelog-join"`` (MoR row-level ops);
           n ≥ 3 relations: ``"incremental-join{n}"``;
-        * inner-join GROUP BY: ``"incremental-join-aggregate"`` (two
-          tables), ``"incremental-join{n}-aggregate"`` (n ≥ 3);
-        * LEFT-join SPJ: ``"incremental-left-join"``."""
+        * LEFT-join SPJ: ``"incremental-left-join"``.
+
+        A view whose SQL is non-deterministic or reads the current time
+        (``rand()``, ``current_timestamp()``) always refreshes ``"full"``."""
         md = self._load_view_metadata(name)
         freshness = self.materialized_view_freshness(name)
         if freshness and all(v == "fresh" for v in freshness.values()):
@@ -832,7 +838,6 @@ class Engine:
         refresh. See views/incremental.py for the classification rules."""
         from iceberg_rust_custom_spark.views.incremental import (
             classify_view_sql,
-            history_kind,
             merge_partial_aggregates,
         )
 
@@ -857,31 +862,19 @@ class Engine:
             == "false"
         ):
             return False
+        found = self._refresh_sources(md, plan, storage)
+        if found is None:
+            return False
         if plan.mode == "joinN":
-            return self._incremental_joinN_refresh(md, plan, storage)
+            return self._incremental_joinN_refresh(md, plan, storage, found)
         if plan.mode == "joinN_agg":
-            return self._incremental_joinN_agg_refresh(md, plan, storage)
-        if plan.mode == "agg_recompute":
-            return self._incremental_agg_recompute_refresh(md, plan, storage)
+            return self._incremental_joinN_agg_refresh(md, plan, storage, found)
         if plan.mode == "left_join":
-            return self._incremental_left_join_refresh(md, plan, storage)
-        rel_cat, ident = self.resolve(plan.relation)
-        if not rel_cat.tabular_exists(ident):
-            return False
-        _, kind = rel_cat.load(ident)
-        if kind != "table":
-            return False  # view-over-view: full refresh
-        src = self.load_table(plan.relation)
-        state = self._storage_refresh_state(storage)
-        stored_id = state.get("source-table-states", {}).get(src.metadata.table_uuid)
-        if stored_id is None:
-            return False
-        hist = history_kind(src.metadata, stored_id)
-        if hist is None:
-            return False  # file-set replacement in range → full refresh
+            return self._incremental_left_join_refresh(md, plan, storage, found)
+        (src,), (stored_id,), (hist,), new_state = found
         from_seq = src.metadata.snapshots[stored_id].sequence_number
         if hist == "changelog":
-            return self._changelog_refresh(md, plan, src, storage, from_seq)
+            return self._changelog_refresh(md, plan, src, storage, from_seq, new_state)
 
         lsql = (
             self._mv_lineage_sql(md.current_sql())
@@ -903,12 +896,6 @@ class Engine:
             delta.createOrReplaceTempView(transform_name(plan.relation))
             delta_result = self.spark.sql(transform_relations(md.current_sql()))
 
-        new_state = {
-            "refresh-version-id": md.current_version_id,
-            "source-table-states": {
-                src.metadata.table_uuid: src.metadata.current_snapshot_id
-            },
-        }
         data_dir = os.path.join(
             storage.metadata.location, "data", _uuid.uuid4().hex[:12]
         )
@@ -1306,7 +1293,7 @@ class Engine:
         except Exception:
             return None
 
-    def _changelog_refresh(self, md, plan, src, storage, from_seq: int):
+    def _changelog_refresh(self, md, plan, src, storage, from_seq: int, new_state):
         """Incremental MV maintenance when the source delta contains MoR
         row-level ops (DELETE / UPDATE / MERGE / equality deletes) —
         replays the row-level changelog (``Table.changes``) instead of
@@ -1346,12 +1333,6 @@ class Engine:
         from iceberg_rust_custom_spark.views.incremental import SRC_ROW_ID
 
         sql = md.current_sql()
-        new_state = {
-            "refresh-version-id": md.current_version_id,
-            "source-table-states": {
-                src.metadata.table_uuid: src.metadata.current_snapshot_id
-            },
-        }
         data_dir = os.path.join(storage.metadata.location, "data", _uuid.uuid4().hex[:12])
         rel = transform_name(plan.relation)
         out_cols = [f.name for f in storage.metadata.current_schema().fields]
@@ -1478,11 +1459,14 @@ class Engine:
         )
         return True
 
-    def _join_refresh_sources(self, plan, storage):
-        """(sources, anchor snapshot ids, history kinds) of a join MV's
-        relations, or None — full refresh — when a relation is not a plain
-        table, has no anchor in the storage's refresh state, or saw a
-        file-set replacement since it (``history_kind``)."""
+    def _refresh_sources(self, md, plan, storage):
+        """The one source setup of every incremental refresh mode:
+        (sources, anchor snapshot ids, history kinds, the refresh state to
+        commit) over the view's relations, or None — full refresh — when a
+        relation is not a plain table, has no anchor in the storage's
+        refresh state, saw a file-set replacement since it
+        (``history_kind``), or the view is not a function of its sources'
+        rows alone (``_deterministic_view``)."""
         from iceberg_rust_custom_spark.views.incremental import history_kind
 
         stored = self._storage_refresh_state(storage).get("source-table-states", {})
@@ -1502,7 +1486,46 @@ class Engine:
             sources.append(src)
             anchors.append(sid)
             kinds.append(hist)
-        return sources, anchors, kinds
+        if not self._deterministic_view(md.current_sql(), plan.relations, sources):
+            return None
+        new_state = {
+            "refresh-version-id": md.current_version_id,
+            "source-table-states": {
+                src.metadata.table_uuid: src.metadata.current_snapshot_id
+                for src in sources
+            },
+        }
+        return sources, anchors, kinds, new_state
+
+    def _deterministic_view(self, sql: str, rels, sources) -> bool:
+        """False when the view SQL's analyzed plan is non-deterministic
+        (``rand()``, ``uuid()``) or reads the current time
+        (``current_timestamp()``, ``now()``, ``current_date()``, …): an
+        incremental refresh evaluates it over the delta only, at refresh
+        time, so the stored rows would mix evaluation times and drift from
+        the definition. Current-time expressions are exactly what
+        Catalyst's ComputeCurrentTime rule pins to the query start, so the
+        plan reads the current time iff that rule changes it. Each source
+        binds to an empty frame of its current read schema: no Spark job.
+        The verdict depends only on the SQL and the source schemas, so it
+        is computed once per pair (the binding and analysis cost ~0.1 s)."""
+        from iceberg_rust_custom_spark.table.scan import read_data_files
+
+        key = (sql, tuple((s.metadata.table_uuid, s.metadata.current_schema_id) for s in sources))
+        if key in self._view_determinism:
+            return self._view_determinism[key]
+        try:
+            for rel, src in zip(rels, sources):
+                read_data_files(self.spark, src.metadata, []).createOrReplaceTempView(
+                    transform_name(rel)
+                )
+            analyzed = self.spark.sql(transform_relations(sql))._jdf.queryExecution().analyzed()
+            rule = self.spark._jvm.org.apache.spark.sql.catalyst.optimizer.ComputeCurrentTime
+            ok = bool(analyzed.deterministic()) and rule.apply(analyzed).fastEquals(analyzed)
+        except Exception:
+            ok = False  # unanalysable over the bare sources: full refresh
+        self._view_determinism[key] = ok
+        return ok
 
     @staticmethod
     def _persisted_deltas(sources, anchors, kinds, fn):
@@ -1592,7 +1615,7 @@ class Engine:
                         pass
         return preds
 
-    def _incremental_joinN_refresh(self, md, plan, storage=None):
+    def _incremental_joinN_refresh(self, md, plan, storage, found):
         """Delta maintenance for n-relation inner-join SPJ views (n ≥ 2)
         via the telescoping identity over signed multiset deltas (⋈/σ/π
         are linear) — for n=2 it is the delta-join identity
@@ -1638,11 +1661,7 @@ class Engine:
         n ≥ 3."""
         from functools import reduce
 
-        storage = storage or self.load_table(md.storage_table)
-        found = self._join_refresh_sources(plan, storage)
-        if found is None:
-            return False
-        sources, anchors, kinds = found
+        sources, anchors, kinds, new_state = found
         rels = plan.relations
         n = len(rels)
         sql = md.current_sql()
@@ -1652,13 +1671,6 @@ class Engine:
         has_rids = all(c in out_cols for c in rid_cols)
         lsql = self._mv_lineage_join_sql(sql, plan) if has_rids else None
         pairs_between = self._slot_pairs(_INC.joinN_equi_keys(sql) or {})
-        new_state = {
-            "refresh-version-id": md.current_version_id,
-            "source-table-states": {
-                src.metadata.table_uuid: src.metadata.current_snapshot_id
-                for src in sources
-            },
-        }
         data_dir = os.path.join(storage.metadata.location, "data", _uuid.uuid4().hex[:12])
         label = f"incremental-join{n}" if n > 2 else "incremental-changelog-join"
 
@@ -1796,13 +1808,16 @@ class Engine:
             for d in deltas + cached:
                 d.unpersist()
 
-    def _incremental_joinN_agg_refresh(self, md, plan, storage=None):
-        """Delta maintenance for n-relation inner-join GROUP BY views
-        (n ≥ 2) — the two-table star rollup is the most common production
-        MV, and the REAL TPC-H q5 is the n=6 member (customer ⋈ orders ⋈
-        lineitem ⋈ supplier ⋈ nation ⋈ region + region filter + GROUP BY
-        nation). The reference registers empty ``__delta__`` placeholders
-        for exactly this (materialized_view.rs:147-159).
+    def _incremental_joinN_agg_refresh(self, md, plan, storage, found):
+        """Affected-group recompute for GROUP BY views over n ≥ 1
+        inner-joined relations. n = 1 is the single-table view the
+        partial-merge path cannot maintain (non-decomposable AVG/STDDEV/
+        MEDIAN, expression keys such as ``GROUP BY date_trunc('month',
+        ts)``, HAVING); the two-table star rollup is the most common
+        production MV, and the REAL TPC-H q5 is the n=6 member (customer ⋈
+        orders ⋈ lineitem ⋈ supplier ⋈ nation ⋈ region + region filter +
+        GROUP BY nation). The reference registers empty ``__delta__``
+        placeholders for exactly this (materialized_view.rs:147-159).
 
         1. **Affected groups** come from the group-key projection
            (``plan.probe_sql``) run over the n telescoped delta arms — all
@@ -1812,29 +1827,29 @@ class Engine:
            NEW after, pruned by the delta's equi keys with one propagation
            wave through the equi graph.
         2. **Recompute only those groups**: the affected-key values push
-           into whichever slot owns each key column, then propagate across
-           the equi graph (in the q5 star the affected nation names prune
-           suppliers/customers, customers prune orders, orders prune
+           into whichever slot owns each key column — a plain key as an
+           IN/range predicate, a ``date_trunc`` key as the raw-column
+           envelope (``_dtrunc_envelope_predicate``) — then propagate
+           across the equi graph (in the q5 star the affected nation names
+           prune suppliers/customers, customers prune orders, orders prune
            lineitem; in a two-table star the restricted dim prunes the
            fact). The view SQL re-runs and a post-aggregate semi-join trims
            to exactly the affected groups — so ANY deterministic aggregate
-           works, and group disappearance (COUNT→0) falls out naturally.
+           works, HAVING is re-applied, and group disappearance (COUNT→0)
+           falls out naturally.
         3. **Delta-sized commit**: group-keyed MoR equality deletes + an
            append; untouched groups' files are never read or rewritten.
 
         NULL or >10k affected group keys fall back to a full refresh.
-        Labels: "incremental-join-aggregate" for n=2,
+        Labels: "incremental-agg-recompute" for n=1,
+        "incremental-join-aggregate" for n=2,
         "incremental-join{n}-aggregate" for n ≥ 3."""
         from pyspark.sql import functions as F
 
         from iceberg_rust_custom_spark.metadata.expressions import And as _And
         from iceberg_rust_custom_spark.table.runtime_filter import join_key_predicate
 
-        storage = storage or self.load_table(md.storage_table)
-        found = self._join_refresh_sources(plan, storage)
-        if found is None:
-            return False
-        sources, anchors, kinds = found
+        sources, anchors, kinds, new_state = found
         rels = plan.relations
         n = len(rels)
         sql = md.current_sql()
@@ -1877,13 +1892,6 @@ class Engine:
                 d.unpersist()
         if len(rows) > 10_000 or any(r[k] is None for r in rows for k in keys):
             return False  # huge or NULL-keyed group set → full refresh
-        new_state = {
-            "refresh-version-id": md.current_version_id,
-            "source-table-states": {
-                src.metadata.table_uuid: src.metadata.current_snapshot_id
-                for src in sources
-            },
-        }
         if not rows:
             return (
                 "incremental-noop"
@@ -1923,112 +1931,9 @@ class Engine:
             storage.metadata.location, "data", _uuid.uuid4().hex[:12]
         )
         self._commit_storage_delta(storage, aff.select(*keys), recomputed, new_state, data_dir)
+        if n == 1:
+            return "incremental-agg-recompute"
         return f"incremental-join{n}-aggregate" if n > 2 else "incremental-join-aggregate"
-
-    def _incremental_agg_recompute_refresh(self, md, plan, storage=None):
-        """Affected-group recompute for single-table GROUP BY views the
-        partial-merge path cannot maintain (r13, VERDICT r12 #3):
-        non-decomposable aggregates (AVG/STDDEV/MEDIAN — partials don't
-        merge) and expression group keys (``GROUP BY date_trunc('month',
-        ts)``, the standard time-rollup MV). Same strategy as the joinN_agg
-        path, minus the join:
-
-        1. **Affected groups** = the group-key projection
-           (``plan.probe_sql``) over the source delta — ALL change events
-           (a deleted row still marks its group).
-        2. **Recompute only those groups**: the source re-scans with the
-           affected keys pushed down — plain-column keys as per-key
-           IN/range predicates, ``date_trunc`` keys as a raw-column
-           envelope ``col ∈ [min_bucket, max_bucket + 1 unit]`` (every
-           row of an affected bucket lies inside it; the widened upper
-           bound keeps the predicate NECESSARY, extra rows belong to
-           unaffected groups and trim below) — then the view SQL re-runs
-           and a post-aggregate semi-join trims to exactly the affected
-           groups. Recomputed-not-merged, so ANY deterministic aggregate
-           works and group disappearance falls out naturally.
-        3. **Delta-sized commit**: group-keyed MoR eq-delete + append
-           (``_commit_storage_delta``) — untouched groups' storage files
-           are never read or rewritten.
-
-        NULL or >10k affected group keys fall back to a full refresh."""
-        from pyspark.sql import functions as F
-
-        from iceberg_rust_custom_spark.metadata.expressions import And as _And
-        from iceberg_rust_custom_spark.table.runtime_filter import join_key_predicate
-        from iceberg_rust_custom_spark.views.incremental import history_kind
-
-        rel_cat, ident = self.resolve(plan.relation)
-        if not rel_cat.tabular_exists(ident):
-            return False
-        _, kind = rel_cat.load(ident)
-        if kind != "table":
-            return False
-        src = self.load_table(plan.relation)
-        storage = storage or self.load_table(md.storage_table)
-        stored = self._storage_refresh_state(storage).get("source-table-states", {})
-        sid = stored.get(src.metadata.table_uuid)
-        hist = history_kind(src.metadata, sid) if sid is not None else None
-        if hist is None:
-            return False  # no anchor, or file-set replacement in range
-        seq = src.metadata.snapshots[sid].sequence_number
-        try:
-            delta = (
-                src.incremental_scan(seq)
-                if hist == "appends"
-                else src.changes(seq).drop("_change_type")
-            ).persist()
-        except ValueError:
-            return False  # commit shape the changelog cannot replay
-        keys = list(plan.group_keys)
-        try:
-            delta.createOrReplaceTempView(transform_name(plan.relation))
-            affected = self.spark.sql(transform_relations(plan.probe_sql)).distinct()
-            rows = affected.limit(10_001).collect()
-        finally:
-            delta.unpersist()
-        if len(rows) > 10_000 or any(r[k] is None for r in rows for k in keys):
-            return False  # huge or NULL-keyed group set → full refresh
-        new_state = {
-            "refresh-version-id": md.current_version_id,
-            "source-table-states": {
-                src.metadata.table_uuid: src.metadata.current_snapshot_id
-            },
-        }
-        if not rows:
-            return (
-                "incremental-noop"
-                if self._commit_state_only(storage, new_state)
-                else False
-            )
-        aff = local_rows_df(self.spark, rows, affected.schema)
-
-        pred = None
-        for spec, key in zip(plan.key_sources, keys):
-            p = None
-            if spec[0] == "col":
-                try:
-                    p = join_key_predicate(aff, [(spec[1], key)])
-                except Exception:
-                    p = None
-            elif spec[0] == "dtrunc":
-                p = self._dtrunc_envelope_predicate(aff, key, spec[1], spec[2], src)
-            # "opaque" key exprs contribute no predicate: the recompute
-            # reads the source fully, the semi-join keeps it exact
-            if p is not None:
-                pred = p if pred is None else _And(pred, p)
-        src.scan(predicate=pred).createOrReplaceTempView(
-            transform_name(plan.relation)
-        )
-        full = self.spark.sql(transform_relations(md.current_sql()))
-        out_cols = [f.name for f in storage.metadata.current_schema().fields]
-        recomputed = full.join(F.broadcast(aff), keys, "left_semi").select(*out_cols)
-        data_dir = os.path.join(
-            storage.metadata.location, "data", _uuid.uuid4().hex[:12]
-        )
-        self._commit_storage_delta(
-            storage, aff.select(*keys), recomputed, new_state, data_dir
-        )
-        return "incremental-agg-recompute"
 
     @staticmethod
     def _dtrunc_envelope_predicate(aff, key, col, unit, src=None):
@@ -2067,7 +1972,7 @@ class Engine:
         except Exception:
             return None
 
-    def _incremental_left_join_refresh(self, md, plan, storage=None):
+    def _incremental_left_join_refresh(self, md, plan, storage, found):
         """Delta maintenance for two-table LEFT-outer-join SPJ views
         (r13, VERDICT r12 #2) via affected-A-row recompute with
         null-extension repair. The delta algebra hazard of outer joins —
@@ -2099,11 +2004,7 @@ class Engine:
 
         from iceberg_rust_custom_spark.metadata.expressions import Or as _Or
 
-        storage = storage or self.load_table(md.storage_table)
-        found = self._join_refresh_sources(plan, storage)
-        if found is None:
-            return False
-        sources, anchors, _ = found
+        sources, anchors, _, new_state = found
         rels = plan.relations
         a, b = sources
         a_sid, b_sid = anchors
@@ -2121,14 +2022,6 @@ class Engine:
         if not self._storage_rids_ok(storage, [_INC.SRC_ROW_ID_A]):
             return False
         pairs = list(plan.equi_keys)  # [(col on A, col on B), …]
-
-        new_state = {
-            "refresh-version-id": md.current_version_id,
-            "source-table-states": {
-                src.metadata.table_uuid: src.metadata.current_snapshot_id
-                for src in sources
-            },
-        }
         data_dir = os.path.join(storage.metadata.location, "data", _uuid.uuid4().hex[:12])
         cached = []
         try:

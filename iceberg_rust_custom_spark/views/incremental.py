@@ -10,12 +10,18 @@ incremental refresh as unimplemented). This module implements it:
   (snapshot-range incremental scan, the reference's table/mod.rs:120-144
   mechanism — the one piece of delta machinery it does have),
 * fold the delta into the storage table: APPEND for select-project-filter
-  views, partial-aggregate MERGE for single-table GROUP BY views.
+  views, partial-aggregate MERGE for decomposable single-table GROUP BY
+  views, affected-group recompute for every other GROUP BY view over
+  n ≥ 1 inner-joined relations.
 
-Soundness gate: incremental maintenance is only valid when every source
-commit since the last refresh was an append. Any overwrite (compaction is
-fine — but delete/merge/rewrite change visible rows) forces a full refresh;
-``appends_only_since`` checks the snapshot log's operation summaries.
+Soundness gate (engine ``_refresh_sources``, shared by every mode): each
+source's history since the MV's anchor snapshot must be ``history_kind``
+``"appends"`` (the cheap delta scans) or ``"changelog"`` (MoR row-level
+commits, replayed through ``Table.changes``); a ``None`` history — a
+file-set replacement, or an expired anchor — forces a full refresh. So does
+a view whose analyzed plan is non-deterministic or reads the current time:
+an incremental refresh would evaluate it over the delta only, at refresh
+time, and the stored rows would mix evaluation times.
 
 At 100 TB this is the difference between re-scanning the fact table and
 scanning a day's partition: refresh cost tracks delta size, not table size.
@@ -67,27 +73,27 @@ _AGG_CALL_RE = re.compile(r"\b(sum|count|min|max|avg|stddev|var\w*)\s*\(", re.IG
 
 @dataclass(frozen=True)
 class IncrementalPlan:
-    # "append" | "aggregate" | "agg_recompute" | "joinN" | "joinN_agg" | "left_join"
+    # "append" | "aggregate" | "joinN" | "joinN_agg" | "left_join"
     mode: str
     relation: str
     group_keys: tuple = ()
     merge_ops: dict = field(default_factory=dict)  # output column -> sum|min|max
-    # joinN_agg / agg_recompute: the SPJ projection of the group keys over
-    # the same FROM/ON/WHERE — run over the delta arms to find the affected
-    # groups
+    # joinN_agg: the SPJ projection of the group keys over the same
+    # FROM/ON/WHERE — run over the delta arms to find the affected groups
     probe_sql: str | None = None
     # joinN_agg: ((i, j), ((col on rel_i, col on rel_j), …)) per slot pair,
-    # from the ON conditions' AND-conjoined equalities; left_join: the
-    # (col on A, col on B) pairs
+    # from the ON conditions' AND-conjoined equalities (empty at n = 1);
+    # left_join: the (col on A, col on B) pairs
     equi_keys: tuple = ()
     # joinN_agg: per group key, the slot and source column to push the
     # affected-set filter into — (slot, column), (slot, column, unit) for a
-    # date_trunc key, or None when the key's slot is unknown;
-    # agg_recompute: the per-key pruning spec
+    # date_trunc key, or None (a whitelisted function key, or a column
+    # whose slot is unknown): no pruning by that key
     key_sources: tuple = ()
-    # joinN / joinN_agg: ALL relations of the join chain (2 ≤ n), in join
-    # order — slot i's delta arm stages slots j<i at OLD, j>i at NEW;
-    # left_join: (A, B)
+    # every mode: the relations the view reads, in join order — one for
+    # append / aggregate, 1 ≤ n for joinN_agg (n = 1 is the single-table
+    # affected-group recompute), 2 ≤ n for joinN, (A, B) for left_join.
+    # Slot i's delta arm stages slots j<i at OLD, j>i at NEW
     relations: tuple = ()
 
 
@@ -319,15 +325,20 @@ def parse_join_chain(sql: str) -> JoinChain | None:
 
 
 def _chain_match(sql: str, agg: bool) -> JoinChain | None:
-    """The n-relation (2 ≤ n ≤ MAX_JOIN_RELATIONS) chain match + validity
-    shared by the joinN classifiers, the lineage rewrite, and the
-    equi-key extractor. ``agg`` selects the GROUP-BY-permitting forbidden
-    set and requires/forbids the GROUP BY tail accordingly."""
-    forbidden = _FORBIDDEN_JOINAGG_RE if agg else _FORBIDDEN_NONJOIN_RE
-    if forbidden.search(sql):
-        return None
+    """The n-relation chain match + validity shared by the joinN
+    classifiers, the lineage rewrite, and the equi-key extractor: 2 ≤ n ≤
+    MAX_JOIN_RELATIONS, or 1 ≤ n with ``agg``. ``agg`` selects the
+    GROUP-BY-permitting forbidden set and requires/forbids the GROUP BY
+    tail accordingly; a single relation has no join type, so it takes the
+    plain forbidden set."""
     ch = parse_join_chain(sql)
-    if ch is None or not 2 <= len(ch.rels) <= MAX_JOIN_RELATIONS:
+    if ch is None or not (1 if agg else 2) <= len(ch.rels) <= MAX_JOIN_RELATIONS:
+        return None
+    if len(ch.rels) == 1:
+        forbidden = _FORBIDDEN_RE
+    else:
+        forbidden = _FORBIDDEN_JOINAGG_RE if agg else _FORBIDDEN_NONJOIN_RE
+    if forbidden.search(sql):
         return None
     if (ch.group is not None) != agg:
         return None
@@ -419,15 +430,18 @@ def classify_joinN_sql(sql: str) -> IncrementalPlan | None:
 
 
 def classify_joinN_agg_sql(sql: str) -> IncrementalPlan | None:
-    """n-relation inner-join GROUP BY views (2 ≤ n ≤ MAX_JOIN_RELATIONS)
-    — the REAL TPC-H q5 is the n=6 member (customer ⋈ orders ⋈ lineitem
-    ⋈ supplier ⋈ nation ⋈ region + region filter + GROUP BY nation).
-    Maintenance: affected groups from the group-key projection over the n
-    telescoped delta arms, exact recompute of only those groups,
-    group-keyed eq-delete + append commit — so any whitelisted
-    deterministic aggregate works (AVG/STDDEV included). Group keys are
-    plain or qualified columns or aliased ``date_trunc`` expressions, each
-    projected in the select list. None → full refresh."""
+    """GROUP BY views over an inner-join chain of 1 ≤ n ≤
+    MAX_JOIN_RELATIONS relations — n = 1 is the single-table view the
+    partial-merge path rejects (AVG/STDDEV/MEDIAN, expression keys such as
+    the ``date_trunc('month', ts)`` time rollup, HAVING), and the REAL
+    TPC-H q5 is the n=6 member (customer ⋈ orders ⋈ lineitem ⋈ supplier ⋈
+    nation ⋈ region + region filter + GROUP BY nation). Maintenance:
+    affected groups from the group-key projection over the n telescoped
+    delta arms, exact recompute of only those groups, group-keyed
+    eq-delete + append commit — so any whitelisted deterministic aggregate
+    works. Group keys are plain or qualified columns, ``date_trunc`` over
+    one, or a whitelisted deterministic function of one, each projected in
+    the select list (expressions aliased). None → full refresh."""
     from iceberg_rust_custom_spark.ddl import _split_top_level
 
     ch = _chain_match(sql, agg=True)
@@ -447,43 +461,44 @@ def classify_joinN_agg_sql(sql: str) -> IncrementalPlan | None:
             continue
         parsed = _agg_key_item(item, key_exprs)
         if parsed is None:
-            return None
+            return None  # derived non-key expression: full refresh
         sel_keys.append(parsed)
     if not agg_seen or not sel_keys:
         return None
     if {e for e, _ in sel_keys} != set(key_exprs):
-        return None
+        return None  # every GROUP BY key must be projected (eq-delete key)
     out_names = tuple(n for _, n in sel_keys)
     if len(out_names) != len(set(out_names)):
         return None
     proj = ", ".join(f"{e} AS {n}" for e, n in sel_keys)
-    probe_sql = f"SELECT {proj} FROM {_chain_from_sql(ch)}"
-    idx = {q: i for i, q in enumerate(ch.quals) if q}
     pairs = _pairs_by_slot(ch.conds, ch.quals)
-    key_sources: list[tuple | None] = []
-    for expr, _ in sel_keys:
-        dm = _DTRUNC_QUAL_KEY_RE.fullmatch(expr)
-        if dm:
-            q = (dm.group("q") or "").lower()
-            key_sources.append(
-                (idx[q], dm.group("col"), dm.group("unit").lower())
-                if q in idx
-                else None
-            )
-        elif "." in expr:
-            q, col = expr.split(".", 1)
-            key_sources.append((idx[q.lower()], col) if q.lower() in idx else None)
-        else:
-            key_sources.append(None)
     return IncrementalPlan(
         "joinN_agg",
         ch.rels[0],
         group_keys=out_names,
-        probe_sql=probe_sql,
+        probe_sql=f"SELECT {proj} FROM {_chain_from_sql(ch)}",
         equi_keys=tuple((ij, tuple(p)) for ij, p in sorted(pairs.items())),
-        key_sources=tuple(key_sources),
+        key_sources=tuple(_key_source(e, ch.quals) for e, _ in sel_keys),
         relations=ch.rels,
     )
+
+
+def _key_source(expr: str, quals: tuple) -> tuple | None:
+    """The (slot, column) a group key prunes, (slot, column, unit) for a
+    ``date_trunc`` key, or None — a function key, or a column whose slot
+    is unknown. A bare column belongs to the only slot of a single
+    relation, and to no slot of a join."""
+    dm = _DTRUNC_QUAL_KEY_RE.fullmatch(expr)
+    if dm:
+        q, col, unit = dm.group("q") or "", dm.group("col"), (dm.group("unit").lower(),)
+    elif _KEY_ITEM_RE.fullmatch(expr):
+        q, _, col = expr.rpartition(".")
+        unit = ()
+    else:
+        return None
+    idx = {qual: i for i, qual in enumerate(quals) if qual}
+    slot = idx.get(q.lower()) if q else (0 if len(quals) == 1 else None)
+    return None if slot is None else (slot, col, *unit)
 
 
 # affected groups are RECOMPUTED exactly (not merged), so any
@@ -532,6 +547,7 @@ def _valid_agg_key_expr(k: str) -> bool:
     return bool(
         (_KEY_ITEM_RE.fullmatch(k) and " " not in k)
         or _DTRUNC_QUAL_KEY_RE.fullmatch(k)
+        or _DETERMINISTIC_KEY_FN_RE.fullmatch(k)
     )
 
 
@@ -554,107 +570,59 @@ def equi_pairs_between(cond: str, qa: str, qb: str) -> list[tuple[str, str]] | N
     return pairs or None
 
 
-# expression group keys the agg_recompute path can FILE-PRUNE the source
-# by: date_trunc('unit', col) maps to a raw-column envelope (every row of
-# an affected group has col in [min_bucket, max_bucket + 1 unit)); other
-# deterministic single-column expressions stay row-level-only (opaque)
-_DTRUNC_KEY_RE = re.compile(
-    r"^date_trunc\(\s*'(?P<unit>year|quarter|month|week|day|hour)'\s*,\s*"
-    r"(?P<col>[A-Za-z_]\w*)\s*\)$",
-    re.IGNORECASE,
-)
 # a group-key EXPRESSION in the select list must carry an alias (it names
 # the storage column the refresh eq-deletes by); plain columns default
 _AGGREC_KEY_RE = re.compile(
     r"^(?P<expr>.+?)(?:\s+AS\s+(?P<alias>[A-Za-z_]\w*))?$",
     re.IGNORECASE | re.DOTALL,
 )
-# non-date_trunc expression keys admitted by the agg-recompute path: a
-# DETERMINISTIC single-column function whitelist (review r13 — the old
-# "any parenthesized expression" rule admitted current_date()/rand()
-# keys, whose affected-group commits would mix two key epochs in storage)
+# non-date_trunc expression keys: a DETERMINISTIC single-column function
+# whitelist (review r13 — the old "any parenthesized expression" rule
+# admitted current_date()/rand() keys, whose affected-group commits would
+# mix two key epochs in storage). They carry no key source: no pruning
 _DETERMINISTIC_KEY_FN_RE = re.compile(
     r"^(?:upper|lower|trim|ltrim|rtrim|abs|floor|ceil|year|quarter|month"
     r"|day|dayofmonth|dayofweek|hour|minute|to_date|length)"
-    r"\(\s*[A-Za-z_]\w*\s*\)$",
+    r"\(\s*(?:[A-Za-z_]\w*\.)?[A-Za-z_]\w*\s*\)$",
     re.IGNORECASE,
 )
 
 
-def classify_agg_recompute_sql(sql: str) -> IncrementalPlan | None:
-    """Single-table GROUP BY views the partial-merge path rejects —
-    non-decomposable aggregates (AVG/STDDEV/MEDIAN/…) or expression group
-    keys (``GROUP BY date_trunc('month', ts)``, the standard time-rollup
-    MV). Maintenance recomputes ONLY the affected groups (VERDICT r12
-    #3): probe = the group-key projection over the source delta, exact
-    recompute of those groups from a key-pruned source scan, group-keyed
-    eq-delete + append commit. The same strategy as the joinN_agg path
-    (engine._incremental_joinN_agg_refresh) minus the join. None → full
-    refresh."""
+def _partial_merge_plan(m: re.Match | None) -> IncrementalPlan | None:
+    """The partial-merge plan of a ``_SHAPE_RE`` match: a single-table
+    GROUP BY over plain-column keys whose every aggregate is a
+    decomposable SUM/COUNT/MIN/MAX, so the delta's partial aggregates
+    merge into the stored groups. HAVING is out — a merge cannot drop the
+    groups that fail it."""
     from iceberg_rust_custom_spark.ddl import _split_top_level
 
-    m = _SHAPE_RE.match(sql.strip())
-    if not m or _FORBIDDEN_RE.search(sql) or not m.group("group"):
+    if m is None or m.group("group") is None or m.group("having"):
         return None
-    key_exprs = tuple(k.strip() for k in _split_top_level(m.group("group")))
-    if not key_exprs:
+    keys = tuple(k.strip() for k in _split_top_level(m.group("group")))
+    if not all(re.fullmatch(r"[A-Za-z_]\w*", k) for k in keys):
         return None
-    specs: dict[str, tuple] = {}  # key expr -> pruning spec
-    for k in key_exprs:
-        if re.fullmatch(r"[A-Za-z_]\w*", k):
-            specs[k] = ("col", k)
-        else:
-            dm = _DTRUNC_KEY_RE.fullmatch(k)
-            if dm:
-                specs[k] = ("dtrunc", dm.group("col"), dm.group("unit").lower())
-            elif _DETERMINISTIC_KEY_FN_RE.fullmatch(k):
-                specs[k] = ("opaque",)  # deterministic, but no file pruning
-            else:
-                # anything else may be nondeterministic or time-dependent
-                # (current_date(), rand(), …) — an affected-group commit
-                # would mix two key epochs in storage (review r13): full
-                # refresh, never a wrong answer
-                return None
-    sel_keys: list[tuple[str, str]] = []  # (source expr, output name)
-    agg_seen = False
+    merge_ops: dict[str, str] = {}
     for item in _split_top_level(m.group("select")):
         item = item.strip()
-        if _JOINAGG_ITEM_RE.match(item):
-            agg_seen = True
+        if item in keys:
             continue
-        parsed = _agg_key_item(item, key_exprs)
-        if parsed is None:
-            return None  # derived non-key expression: full refresh
-        sel_keys.append(parsed)
-    if not agg_seen or not sel_keys:
-        return None
-    if {e for e, _ in sel_keys} != set(key_exprs):
-        return None  # every GROUP BY key must be projected (eq-delete key)
-    out_names = tuple(nm for _, nm in sel_keys)
-    if len(out_names) != len(set(out_names)):
+        am = _AGG_RE.match(item)
+        if not am:
+            return None
+        merge_ops[am.group("alias")] = _MERGEABLE[am.group("fn").lower()]
+    if not merge_ops:
         return None
     rel = m.group("rel")
-    where = f" WHERE {m.group('where')}" if m.group("where") else ""
-    proj = ", ".join(f"{e} AS {nm}" for e, nm in sel_keys)
-    return IncrementalPlan(
-        "agg_recompute",
-        rel,
-        group_keys=out_names,
-        probe_sql=f"SELECT {proj} FROM {rel}{where}",
-        key_sources=tuple(specs[e] for e, _ in sel_keys),
-    )
+    return IncrementalPlan("aggregate", rel, keys, merge_ops, relations=(rel,))
 
 
 def classify_view_sql(sql: str) -> IncrementalPlan | None:
     """Shape-match the view SQL; None means "not incrementally
     maintainable, do a full refresh". Deliberately conservative: no
     set-ops/windows/subqueries; inner-join chains route to the joinN
-    classifiers and LEFT joins to the left_join one; single-table
-    aggregates restricted to the decomposable SUM/COUNT/MIN/MAX (partial
-    merge) — non-decomposable aggregates and expression keys route to the
-    affected-group recompute classifier (r13)."""
-    from iceberg_rust_custom_spark.ddl import _split_top_level
-
+    classifiers and LEFT joins to the left_join one; a single-table
+    GROUP BY takes the partial merge when its aggregates decompose, and
+    the n = 1 affected-group recompute otherwise."""
     if _FORBIDDEN_RE.search(sql):
         # inner join, 2..n relations: telescoping delta identity (SPJ) or
         # affected-group recompute (GROUP BY)
@@ -664,41 +632,11 @@ def classify_view_sql(sql: str) -> IncrementalPlan | None:
         # LEFT-outer SPJ (r13): affected-A-row recompute
         return classify_left_join_sql(sql)
     m = _SHAPE_RE.match(sql.strip())
-    if not m:
-        return None
-    rel = m.group("rel")
-    group = m.group("group")
-    if m.group("having"):
-        # the partial-merge path cannot drop HAVING-failing groups; the
-        # affected-group recompute evaluates HAVING naturally (r13) — a
-        # recomputed group failing it is eq-deleted and not re-appended
-        return classify_agg_recompute_sql(sql) if group is not None else None
-    if group is None:
-        return IncrementalPlan("append", rel)
-
-    keys = tuple(k.strip() for k in _split_top_level(group))
-    if not all(re.fullmatch(r"[A-Za-z_]\w*", k) for k in keys):
-        # expression keys (date_trunc rollups): affected-group recompute
-        return classify_agg_recompute_sql(sql)
-    merge_ops: dict[str, str] = {}
-    for item in _split_top_level(m.group("select")):
-        item = item.strip()
-        if item in keys:
-            continue
-        am = _AGG_RE.match(item)
-        if not am:
-            # AVG/STDDEV/aliased-key shapes: affected-group recompute
-            return classify_agg_recompute_sql(sql)
-        merge_ops[am.group("alias")] = _MERGEABLE[am.group("fn").lower()]
-    if not merge_ops:
-        return classify_agg_recompute_sql(sql)
-    return IncrementalPlan("aggregate", rel, keys, merge_ops)
-
-
-def appends_only_since(metadata, last_snapshot_id: int) -> bool:
-    """True iff every snapshot after ``last_snapshot_id`` (by sequence
-    number) is an append. Overwrites invalidate delta maintenance."""
-    return history_kind(metadata, last_snapshot_id) == "appends"
+    if m is not None and m.group("group") is None:
+        if m.group("having"):
+            return None
+        return IncrementalPlan("append", m.group("rel"), relations=(m.group("rel"),))
+    return _partial_merge_plan(m) or classify_joinN_agg_sql(sql)
 
 
 def history_kind(metadata, last_snapshot_id: int) -> str | None:

@@ -1,13 +1,13 @@
-"""r13 (VERDICT r12 #3): affected-group recompute for single-table GROUP
-BY views the partial-merge path cannot maintain — non-decomposable
-aggregates (AVG/STDDEV/MEDIAN) and expression group keys
-(``GROUP BY date_trunc('month', ts)``, the standard time-rollup MV).
+"""Affected-group recompute for single-table GROUP BY views the
+partial-merge path cannot maintain — non-decomposable aggregates
+(AVG/STDDEV/MEDIAN), expression group keys (``GROUP BY
+date_trunc('month', ts)``, the standard time-rollup MV) and HAVING.
 
-The join-aggregate path proved the strategy in r12 (recompute ONLY the
-affected groups, eq-delete + append commit); the single-table case is the
-same minus the join, plus one new pruning shape: a ``date_trunc`` key
-prunes the source by the RAW column envelope
-``col ∈ [min_bucket, max_bucket + 1 unit]``.
+These views are the n = 1 case of the n-relation joinN_agg path
+(``classify_joinN_agg_sql`` / ``Engine._incremental_joinN_agg_refresh``):
+recompute ONLY the affected groups, eq-delete + append commit, label
+``incremental-agg-recompute``. A ``date_trunc`` key prunes the source by
+the RAW column envelope ``col ∈ [min_bucket, max_bucket + 1 unit]``.
 """
 
 import datetime as dt
@@ -31,16 +31,25 @@ def test_agg_recompute_classifier_shapes():
         "SELECT date_trunc('month', ts) AS mo, avg(v) AS av FROM t "
         "GROUP BY date_trunc('month', ts)"
     )
-    assert p is not None and p.mode == "agg_recompute"
-    assert p.group_keys == ("mo",) and p.key_sources == (("dtrunc", "ts", "month"),)
+    # the n = 1 joinN_agg plan: one relation, no equi keys, key sources
+    # as (slot, column[, unit]) with an unqualified column on slot 0
+    assert p is not None and p.mode == "joinN_agg" and p.relations == ("t",)
+    assert p.group_keys == ("mo",) and p.key_sources == ((0, "ts", "month"),)
+    assert p.probe_sql == "SELECT date_trunc('month', ts) AS mo FROM t"
+    assert p.equi_keys == ()
     p = classify_view_sql("SELECT g, avg(v) AS av FROM t GROUP BY g")
-    assert p is not None and p.mode == "agg_recompute"
-    assert p.key_sources == (("col", "g"),)
+    assert p is not None and p.mode == "joinN_agg" and p.relations == ("t",)
+    assert p.key_sources == ((0, "g"),)
     # decomposable aggregates stay on the cheaper partial-merge path
-    assert classify_view_sql("SELECT g, sum(v) AS s FROM t GROUP BY g").mode == "aggregate"
+    p = classify_view_sql("SELECT g, sum(v) AS s FROM t GROUP BY g")
+    assert p.mode == "aggregate" and p.relations == ("t",)
     # whitelisted deterministic expression keys classify without pruning
     p = classify_view_sql("SELECT upper(g) AS ug, avg(v) AS av FROM t GROUP BY upper(g)")
-    assert p is not None and p.mode == "agg_recompute" and p.key_sources == (("opaque",),)
+    assert p is not None and p.mode == "joinN_agg" and p.key_sources == (None,)
+    # an aliased single relation takes the same path, qualified keys on slot 0
+    p = classify_view_sql("SELECT x.g, avg(x.v) AS av FROM ns.t x GROUP BY x.g")
+    assert p is not None and p.mode == "joinN_agg" and p.relations == ("ns.t",)
+    assert p.key_sources == ((0, "g"),)
     # ruled out: unaliased expression key, non-whitelisted aggregate, and
     # NONDETERMINISTIC / time-dependent keys (review r13: an
     # affected-group commit under such a key would mix two key epochs)
@@ -231,7 +240,7 @@ def test_having_group_threshold_crossings(eng, spark):
     sql = "SELECT g, count(v) AS n, avg(v) AS av FROM hv.t GROUP BY g HAVING count(v) >= 5"
     from iceberg_rust_custom_spark.views.incremental import classify_view_sql
 
-    assert classify_view_sql(sql).mode == "agg_recompute"
+    assert classify_view_sql(sql).mode == "joinN_agg"
     eng.create_materialized_view("hv.mv", sql)
 
     def check(tag):

@@ -143,7 +143,7 @@ def test_concurrent_state_only_commit_also_surfaces(spark, tmp_path, monkeypatch
             F.col("id").alias("k"), (F.col("id") % 20).alias("g"), (F.col("id") * 1.0).alias("v")
         )
     )
-    # agg_recompute shape: a WHERE-filtered delta → zero affected groups
+    # affected-group recompute (n = 1): a WHERE-filtered delta → zero affected groups
     # → the refresh lands in _commit_state_only
     sql = "SELECT g, avg(v) AS av FROM cs.t WHERE v >= 0 GROUP BY g"
     e1.create_materialized_view("cs.mv", sql)

