@@ -1,9 +1,11 @@
 """File-based catalog with put-if-absent CAS.
 
 Mirrors the reference's file catalog (iceberg-file-catalog/src/lib.rs:306-361):
-each tabular's commits advance a ``pointer.v{N}.json`` file created with
-O_EXCL (put-if-absent). Whoever creates version N+1 first wins; the loser
-gets CommitFailed and must retry on fresh metadata. On object stores the
+each tabular's commits advance a ``pointer.v{N}.json`` file published
+put-if-absent (``LocalFSObjectStore.put_if_absent``: a staged temp file
+hard-linked to its name, so a reader never sees a partly written pointer).
+Whoever creates version N+1 first wins; the loser gets CommitFailed and
+must retry on fresh metadata. On object stores the
 same protocol maps to conditional PUT (if-none-match), as the reference's
 ``copy_if_not_exists`` does.
 """
@@ -14,12 +16,19 @@ import json
 import os
 
 from iceberg_rust_custom_spark.catalog.base import Catalog, CommitFailed, Identifier
+from iceberg_rust_custom_spark.catalog.object_store import AlreadyExists, LocalFSObjectStore
 
 
 class FileCatalog(Catalog):
     def __init__(self, warehouse: str):
         self.warehouse = os.path.abspath(warehouse)
         os.makedirs(self.warehouse, exist_ok=True)
+        self._store = LocalFSObjectStore(self.warehouse)
+
+    def _publish(self, path: str, payload: dict) -> None:
+        """Put-if-absent ``payload`` at ``path``; AlreadyExists when taken."""
+        key = os.path.relpath(path, self.warehouse)
+        self._store.put_if_absent(key, json.dumps(payload).encode())
 
     # registry entry directory for an identifier
     def _entry_dir(self, identifier: Identifier) -> str:
@@ -61,10 +70,10 @@ class FileCatalog(Catalog):
     def update_namespace(
         self, namespace: tuple, updates: dict | None = None, removals: list | None = None
     ) -> dict:
-        """Versioned O_EXCL property files — the same put-if-absent pointer
+        """Versioned put-if-absent property files — the same pointer
         protocol the table commits use, so two concurrent writers never
-        silently lose one side's updates (ADVICE r6): the loser's O_EXCL
-        create fails, it re-reads and retries on the merged state."""
+        silently lose one side's updates (ADVICE r6): the loser's publish
+        fails, it re-reads and retries on the merged state."""
         for _ in range(16):
             versions = self._ns_prop_versions(namespace)
             props = self.load_namespace(namespace)
@@ -72,24 +81,10 @@ class FileCatalog(Catalog):
                 props.pop(k, None)
             props.update(updates or {})
             nxt = (versions[-1] + 1) if versions else 0
-            path = os.path.join(self._ns_dir(namespace), f".nsprops.v{nxt}.json")
-            # publish atomically: write a private temp file, then hard-link
-            # it to the versioned name — link fails with FileExistsError
-            # (preserving the CAS) and a racing reader either sees the
-            # previous version or the COMPLETE new one, never a partially
-            # written file (ADVICE r7: O_EXCL-create-then-write exposed an
-            # empty/partial file to concurrent load_namespace)
-            import uuid as _uuid
-
-            tmp = os.path.join(self._ns_dir(namespace), f".nsprops.tmp.{_uuid.uuid4().hex}")
-            with open(tmp, "w") as f:
-                json.dump(props, f)
             try:
-                os.link(tmp, path)
-            except FileExistsError:
+                self._publish(os.path.join(self._ns_dir(namespace), f".nsprops.v{nxt}.json"), props)
+            except AlreadyExists:
                 continue  # lost the race; retry on the winner's state
-            finally:
-                os.unlink(tmp)
             return props
         raise CommitFailed(f"namespace {'.'.join(namespace)}: property CAS kept losing")
 
@@ -140,23 +135,15 @@ class FileCatalog(Catalog):
             if f.startswith("pointer.v") and f.endswith(".json")
         )
 
-    def _write_pointer(self, identifier: Identifier, version: int, payload: dict) -> None:
-        d = self._entry_dir(identifier)
-        os.makedirs(d, exist_ok=True)
-        path = os.path.join(d, f"pointer.v{version}.json")
-        # O_EXCL = put-if-absent: the atomic primitive (lib.rs:306-361 analogue)
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        try:
-            os.write(fd, json.dumps(payload).encode())
-        finally:
-            os.close(fd)
-
     def register(self, identifier: Identifier, metadata_location: str, kind: str = "table") -> None:
         if self.tabular_exists(identifier):
             raise CommitFailed(f"{identifier} already exists")
         try:
-            self._write_pointer(identifier, 0, {"metadata_location": metadata_location, "kind": kind})
-        except FileExistsError:
+            self._publish(
+                os.path.join(self._entry_dir(identifier), "pointer.v0.json"),
+                {"metadata_location": metadata_location, "kind": kind},
+            )
+        except AlreadyExists:
             raise CommitFailed(f"{identifier} already exists") from None
 
     def load(self, identifier: Identifier) -> tuple[str, str]:
@@ -175,10 +162,11 @@ class FileCatalog(Catalog):
         if current != expected_location:
             raise CommitFailed(f"{identifier}: expected {expected_location}, found {current}")
         try:
-            self._write_pointer(
-                identifier, versions[-1] + 1, {"metadata_location": new_location, "kind": kind}
+            self._publish(
+                os.path.join(self._entry_dir(identifier), f"pointer.v{versions[-1] + 1}.json"),
+                {"metadata_location": new_location, "kind": kind},
             )
-        except FileExistsError:
+        except AlreadyExists:
             raise CommitFailed(f"{identifier}: concurrent commit won version {versions[-1] + 1}") from None
 
     def drop(self, identifier: Identifier) -> None:

@@ -81,10 +81,12 @@ class LocalFSObjectStore(ObjectStore):
         # file or fails with FileExistsError. A bare O_CREAT|O_EXCL +
         # write is NOT enough — a concurrent reader can list the pointer
         # between create and write and see an empty object, which is a
-        # torn read no real object store exhibits.
+        # torn read no real object store exhibits. The temp name starts
+        # with "." so no listing counts it as a pointer or property version.
         path = self._path(key)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp.{os.getpid()}.{threading.get_ident()}"
+        head, name = os.path.split(path)
+        os.makedirs(head, exist_ok=True)
+        tmp = os.path.join(head, f".{name}.tmp.{os.getpid()}.{threading.get_ident()}")
         with open(tmp, "wb") as f:
             f.write(data)
         try:

@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 import uuid as _uuid
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -25,13 +26,19 @@ from iceberg_rust_custom_spark.table.table import Table
 from iceberg_rust_custom_spark.functions.local_rows import local_rows_df
 from iceberg_rust_custom_spark.table.write import write_partitioned
 from iceberg_rust_custom_spark.views import incremental as _INC
+from iceberg_rust_custom_spark.views.sql_plan import (
+    extent,
+    parse,
+    relation_name,
+    relations,
+    splice,
+    table_refs,
+)
 from iceberg_rust_custom_spark.views.view import (
     MaterializedView,
     View,
     ViewMetadata,
-    find_relations,
     transform_name,
-    transform_relations,
 )
 
 
@@ -181,6 +188,12 @@ class Engine:
         catalog, ident = self.resolve(name)
         return catalog.tabular_exists(ident)
 
+    def _kind(self, name: str) -> str | None:
+        """The catalog kind of ``name`` ("table", "view",
+        "materialized-view"), or None when nothing is registered under it."""
+        catalog, ident = self.resolve(name)
+        return catalog.load(ident)[1] if catalog.tabular_exists(ident) else None
+
     # --------------------------------------------------------------- queries
     def table(self, name: str, **scan_kwargs) -> DataFrame:
         return self.load_table(name).scan(**scan_kwargs)
@@ -191,34 +204,80 @@ class Engine:
         return self.load_table(name).append(df)
 
     def sql(self, query: str) -> DataFrame:
-        """SQL front door. DDL statements (CREATE TABLE/VIEW, INSERT,
-        DELETE, REFRESH, DROP — see ddl.py) execute engine-side, mirroring
-        the reference's extension planners (planner.rs:55-244). Everything
-        else: resolve catalog relations, register each as a temp view
-        (dotted names rewritten a.b.c → a__b__c, as the reference does —
-        datafusion_iceberg/src/sql.rs:12-32), then let Catalyst plan it."""
+        """SQL front door. DDL statements (see ddl.py) execute engine-side,
+        mirroring the reference's extension planners (planner.rs:55-244).
+        Otherwise each table reference of the parsed plan
+        (views/sql_plan.py) becomes a temp view spliced in by name (a.b.c →
+        a__b__c, as datafusion_iceberg/src/sql.rs:12-32 does) — a catalog
+        relation, a ``FOR VERSION|SYSTEM_TIME AS OF`` read, or a
+        ``table_changes('ns.t', <from_seq>[, <to_seq>])`` ranged changelog
+        — and Catalyst plans the result."""
         from iceberg_rust_custom_spark import ddl as _ddl
 
         ddl_result = _ddl.try_execute(self, query)
         if ddl_result is not None:
             return ddl_result
-        query = self._resolve_time_travel(query)
-        query = self._resolve_table_changes(query)
-        for rel in find_relations(query):
-            if self._register_metadata_table(rel):
-                continue
-            catalog, ident = self.resolve(rel)
-            if not catalog.tabular_exists(ident):
-                continue
-            _, kind = catalog.load(ident)
-            if kind == "table":
-                df = self.load_table(rel).scan()
-            elif kind == "view":
-                df = self.scan_view(rel)
-            else:
-                df = self.scan_materialized_view(rel)
+        try:
+            tree = parse(self.spark, query)
+        except ParseException:
+            return self.spark.sql(query)  # Spark runs it, or raises its own error
+        edits = []
+        for i, ref in enumerate(table_refs(tree)):
+            if ref.name == "RelationTimeTravel":
+                view = self._time_travel_view(ref, f"__asof{i}")
+                if view is not None:
+                    edits.append((*extent(query, [ref]), view))
+            elif ref.name == "UnresolvedTableValuedFunction":
+                if ref.attr[-1].lower() == "table_changes":
+                    rel, *seqs = [a.attr for a in ref.children]
+                    view = transform_name(rel) + f"__changes{i}"
+                    self.load_table(rel).changes(*seqs).createOrReplaceTempView(view)
+                    # the call's span covers its alias: splice up to its ")"
+                    stop = query.index(")", extent(query, ref.children[-1:])[1] + 1)
+                    edits.append((ref.start, stop, view))
+            elif all(p.isidentifier() for p in ref.attr):
+                rel = relation_name(ref)
+                edits.append((ref.start, ref.stop, transform_name(rel)))
+                kind = None if self._register_metadata_table(rel) else self._kind(rel)
+                if kind is None:
+                    continue
+                if kind == "table":
+                    df = self.load_table(rel).scan()
+                elif kind == "view":
+                    df = self.scan_view(rel)
+                else:
+                    df = self.scan_materialized_view(rel)
+                df.createOrReplaceTempView(transform_name(rel))
+        return self.spark.sql(splice(query, edits))
+
+    def _sql_over(self, sql: str, frames: dict) -> DataFrame:
+        """Run ``sql`` with each relation read from ``frames[relation]``,
+        registered as its temp view and spliced in by name."""
+        for rel, df in frames.items():
             df.createOrReplaceTempView(transform_name(rel))
-        return self.spark.sql(transform_relations(query))
+        rels = [n for n in parse(self.spark, sql).walk() if n.name == "UnresolvedRelation"]
+        edits = [(n.start, n.stop, transform_name(relation_name(n))) for n in rels]
+        return self.spark.sql(splice(sql, edits))
+
+    def _time_travel_view(self, ref, suffix: str) -> str | None:
+        """The temp view of a ``RelationTimeTravel`` read of a catalog
+        table; None leaves the clause to Spark."""
+        import datetime as _dt
+
+        rel = relation_name(ref.children[0])
+        if not self.table_exists(rel):
+            return None
+        t = self.load_table(rel)
+        if ref.attr is not None:  # FOR VERSION AS OF <snapshot id>
+            df = t.scan(snapshot_id=int(ref.attr))
+        else:
+            ts = _dt.datetime.fromisoformat(ref.children[1].attr)
+            if ts.tzinfo is None:
+                ts = ts.replace(tzinfo=_dt.timezone.utc)
+            df = t.scan(as_of_timestamp_ms=int(ts.timestamp() * 1000))
+        view = transform_name(rel) + suffix
+        df.createOrReplaceTempView(view)
+        return view
 
     _META_TABLES = (
         "files",
@@ -251,13 +310,10 @@ class Engine:
             return False
         # A real table named e.g. ns.t.files wins over the metadata-table
         # interpretation (otherwise it would be silently shadowed).
-        rel_cat, rel_ident = self.resolve(rel)
-        if rel_cat.tabular_exists(rel_ident):
+        base = ".".join(parts[:-1])
+        if self.table_exists(rel) or not self.table_exists(base):
             return False
-        base_cat, base = self.resolve(".".join(parts[:-1]))
-        if not base_cat.tabular_exists(base):
-            return False
-        t = self.load_table(".".join(parts[:-1]))
+        t = self.load_table(base)
         if is_ref_read:  # branch/tag read: SELECT … FROM ns.t.branch_dev
             # Ref names are case-sensitive: derive from the original-case
             # leaf; the lowercased copy is only for prefix detection.
@@ -273,70 +329,6 @@ class Engine:
             df = getattr(t, method)()
         df.createOrReplaceTempView(transform_name(rel))
         return True
-
-    _TT_RE = None  # compiled lazily below
-
-    def _resolve_time_travel(self, query: str):
-        """Rewrite ``FROM t FOR VERSION AS OF <snapshot_id>`` and
-        ``FOR SYSTEM_TIME AS OF '<timestamp>'`` (Iceberg-Spark SQL syntax)
-        into time-travel scans registered as uniquely-named temp views."""
-        import datetime as _dt
-        import re as _re
-
-        if Engine._TT_RE is None:
-            Engine._TT_RE = _re.compile(
-                r"\b(FROM|JOIN)\s+([\w.]+)\s+FOR\s+(VERSION|SYSTEM_TIME)\s+AS\s+OF\s+"
-                r"('[^']*'|\d+)",
-                _re.IGNORECASE,
-            )
-        counter = [0]
-
-        def sub(m: "_re.Match") -> str:
-            rel, kind, lit = m.group(2), m.group(3).upper(), m.group(4)
-            rel_cat, rel_ident = self.resolve(rel)
-            if not rel_cat.tabular_exists(rel_ident):
-                return m.group(0)
-            t = self.load_table(rel)
-            if kind == "VERSION":
-                df = t.scan(snapshot_id=int(lit))
-            else:
-                ts = _dt.datetime.fromisoformat(lit.strip("'"))
-                if ts.tzinfo is None:
-                    ts = ts.replace(tzinfo=_dt.timezone.utc)
-                df = t.scan(as_of_timestamp_ms=int(ts.timestamp() * 1000))
-            alias = transform_name(rel) + f"__asof{counter[0]}"
-            counter[0] += 1
-            df.createOrReplaceTempView(alias)
-            return f"{m.group(1)} {alias}"
-
-        return Engine._TT_RE.sub(sub, query)
-
-    _TC_RE = None  # compiled lazily below
-
-    def _resolve_table_changes(self, query: str):
-        """Rewrite the ``table_changes('ns.t', <from_seq>[, <to_seq>])``
-        table-valued function (the Delta-style SQL spelling of
-        ``Table.changes``) into a ranged changelog scan registered as a
-        temp view. Complements the ``ns.t.changes`` metadata table (full
-        log with update pairing) with range control in plain SQL."""
-        import re as _re
-
-        if Engine._TC_RE is None:
-            Engine._TC_RE = _re.compile(
-                r"\btable_changes\s*\(\s*'([\w.]+)'\s*,\s*(\d+)\s*(?:,\s*(\d+)\s*)?\)",
-                _re.IGNORECASE,
-            )
-        counter = [0]
-
-        def sub(m: "_re.Match") -> str:
-            rel, lo, hi = m.group(1), int(m.group(2)), m.group(3)
-            df = self.load_table(rel).changes(lo, int(hi) if hi else None)
-            alias = transform_name(rel) + f"__changes{counter[0]}"
-            counter[0] += 1
-            df.createOrReplaceTempView(alias)
-            return alias
-
-        return Engine._TC_RE.sub(sub, query)
 
     # ----------------------------------------------------------------- views
     def _view_location(self, ident: Identifier) -> str:
@@ -407,23 +399,19 @@ class Engine:
             # table (derived data, rebuilt by refresh) must follow —
             # including whether it carries the hidden source-row-id column
             # (only single-table SPJ shapes can populate it)
-            new_schema, sort_by, props = self._mv_storage_layout(sql)
+            new_schema, layout = self._mv_storage_layout(sql)
             storage = self.load_table(md.storage_table)
             if storage.metadata.current_schema().spark_schema() != new_schema:
                 self.drop(md.storage_table)
-                self.create_table(
-                    md.storage_table,
-                    Schema.from_spark(new_schema),
-                    sort_by=sort_by,
-                    properties=props,
-                )
+                self.create_table(md.storage_table, Schema.from_spark(new_schema), **layout)
         self._swap_view_metadata(ident, location, md, catalog)
         return View(name, md)
 
     def _mv_storage_layout(self, sql: str):
-        """Derive the MV storage table's (schema, sort_by, properties) from
-        the view SQL — shared by CREATE MATERIALIZED VIEW and the
-        ALTER/REPLACE storage recreation so the two can't drift (r10).
+        """Derive the MV storage table's schema and ``create_table`` layout
+        arguments (``sort_by``, ``properties``) from the view SQL — shared
+        by CREATE MATERIALIZED VIEW and the ALTER/REPLACE storage
+        recreation so the two can't drift (r10).
 
         * single-table SPJ: storage rows remember their source row's v3
           _row_id (hidden column, dropped by scan_materialized_view) so
@@ -443,46 +431,32 @@ class Engine:
           (disjoint per-file rid_a ranges → bounds-pruned victim
           application), closing the O(|V|) content-join read the multiset
           fallback paid per delta refresh.
-        * everything else: engine defaults."""
+        * everything else — a view the refresh gate always sends to a full
+          refresh (``_deterministic_view``: a global aggregate, ``rand()``,
+          ``now()``) included: engine defaults."""
         import pyspark.sql.types as _T
 
-        from iceberg_rust_custom_spark.views.incremental import (
-            SRC_ROW_ID,
-            classify_view_sql,
-            src_row_id_cols,
-        )
-
-        result_schema = self.sql(sql).schema
-        plan = classify_view_sql(sql)
-        sort_by, props = None, None
-        if self._mv_lineage_sql(sql):
-            result_schema = _T.StructType(
-                list(result_schema.fields)
-                + [_T.StructField(SRC_ROW_ID, _T.LongType(), True)]
-            )
-            sort_by = [SRC_ROW_ID]
-            props = {"write.distribution-mode": "range"}
-        elif self._mv_lineage_join_sql(sql, plan):
-            rid = src_row_id_cols(len(plan.relations))
-            result_schema = _T.StructType(
-                list(result_schema.fields)
-                + [_T.StructField(c, _T.LongType(), True) for c in rid]
-            )
-            sort_by = rid
-            props = {"write.distribution-mode": "range"}
+        schema = self.sql(sql).schema
+        plan = _INC.classify_view_sql(self.spark, sql)
+        if self._mv_lineage_sql(sql) and self._deterministic_view(
+            sql, plan.relations, [self.load_table(r) for r in plan.relations], spj=True
+        ):
+            n = len(plan.relations)
+            sort_by = [_INC.SRC_ROW_ID] if plan.mode == "append" else _INC.src_row_id_cols(n)
+            rid = [_T.StructField(c, _T.LongType(), True) for c in sort_by]
+            schema = _T.StructType(schema.fields + rid)
+        elif (
+            plan is not None
+            and plan.mode in ("aggregate", "joinN_agg")
+            and plan.group_keys
+            and set(plan.group_keys) <= set(schema.names)
+        ):
+            # group-keyed storage (r12): refreshes eq-delete by group key,
+            # so clustering on it bounds-prunes victims
+            sort_by = list(plan.group_keys)
         else:
-            out_names = {f.name for f in result_schema.fields}
-            if (
-                plan is not None
-                and plan.mode in ("aggregate", "joinN_agg")
-                and plan.group_keys
-                and all(k in out_names for k in plan.group_keys)
-            ):
-                # group-keyed storage (r12): refreshes eq-delete
-                # by group key, so clustering on it bounds-prunes victims
-                sort_by = list(plan.group_keys)
-                props = {"write.distribution-mode": "range"}
-        return result_schema, sort_by, props
+            return schema, {}
+        return schema, {"sort_by": sort_by, "properties": {"write.distribution-mode": "range"}}
 
     def create_materialized_view(self, name: str, sql: str) -> MaterializedView:
         """Create MV + its ``__storage`` table (schema inferred by planning
@@ -490,13 +464,8 @@ class Engine:
         schema.rs:14-44), then run the initial refresh."""
         catalog, ident = self.resolve(name)
         storage_name = name + "__storage"
-        result_schema, sort_by, props = self._mv_storage_layout(sql)
-        self.create_table(
-            storage_name,
-            Schema.from_spark(result_schema),
-            sort_by=sort_by,
-            properties=props,
-        )
+        schema, layout = self._mv_storage_layout(sql)
+        self.create_table(storage_name, Schema.from_spark(schema), **layout)
         location = self._view_location(ident)
         md = ViewMetadata.new(location, sql, storage_table=storage_name)
         path = os.path.join(location, "metadata", f"view-v{_uuid.uuid4().hex[:12]}.json")
@@ -512,94 +481,28 @@ class Engine:
         return ViewMetadata.from_json(FileIO.read_text(location))
 
     def _mv_lineage_sql(self, sql: str) -> str | None:
-        """The row-id-instrumented rewrite of a single-table SPJ view SQL
-        (views/incremental.py::lineage_sql), or None when the shape or the
-        source (must be a plain table) rules it out."""
-        from iceberg_rust_custom_spark.views.incremental import (
-            classify_view_sql,
-            lineage_sql,
-        )
-
-        plan = classify_view_sql(sql)
-        if plan is None or plan.mode != "append":
-            return None
-        lsql = lineage_sql(sql)
+        """The row-lineage-instrumented rewrite of an SPJ view SQL
+        (views/incremental.py::lineage_sql), or None when the shape or any
+        source (all must be plain tables) rules it out."""
+        lsql = _INC.lineage_sql(self.spark, sql)
         if lsql is None:
             return None
-        rel_cat, ident = self.resolve(plan.relation)
-        if not rel_cat.tabular_exists(ident):
+        if any(self._kind(rel) != "table" for rel in relations(self.spark, lsql)):
             return None
-        _, kind = rel_cat.load(ident)
-        return lsql if kind == "table" else None
+        return lsql
 
-    def _sql_with_source_lineage(self, sql: str):
-        """Run the lineage-instrumented SPJ rewrite with the source
-        registered as a row-lineage scan; None → caller uses the plain
-        SQL (and null-fills the hidden column)."""
+    def _sql_with_lineage(self, sql: str):
+        """Run the lineage rewrite with every source registered as a
+        row-lineage scan; None → caller uses the plain SQL (and null-fills
+        the hidden rid columns)."""
         lsql = self._mv_lineage_sql(sql)
         if lsql is None:
             return None
-        from iceberg_rust_custom_spark.views.incremental import classify_view_sql
-
-        plan = classify_view_sql(sql)
         try:
-            src = self.load_table(plan.relation)
-            src.scan(row_lineage=True).drop(
-                "_last_updated_sequence_number"
-            ).createOrReplaceTempView(transform_name(plan.relation))
-            return self.spark.sql(transform_relations(lsql))
-        except Exception:
-            return None
-
-    def _mv_lineage_join_sql(self, sql: str, plan=None) -> str | None:
-        """The slot-lineage-instrumented rewrite of a join SPJ view SQL —
-        an inner-join chain (views/incremental.py::joinN_lineage_sql) or a
-        two-table LEFT join (::left_join_lineage_sql; rid_b is naturally
-        NULL on null-extended rows) — or None when the shape or any source
-        (all must be plain tables) rules it out. Pass an
-        already-classified ``plan`` to skip re-parsing."""
-        from iceberg_rust_custom_spark.views.incremental import (
-            classify_view_sql,
-            joinN_lineage_sql,
-            left_join_lineage_sql,
-        )
-
-        if plan is None:
-            plan = classify_view_sql(sql)
-        if plan is None or plan.mode not in ("joinN", "left_join"):
-            return None
-        lsql = (
-            joinN_lineage_sql(sql)
-            if plan.mode == "joinN"
-            else left_join_lineage_sql(sql)
-        )
-        if lsql is None:
-            return None
-        for rel in plan.relations:
-            rel_cat, ident = self.resolve(rel)
-            if not rel_cat.tabular_exists(ident):
-                return None
-            _, kind = rel_cat.load(ident)
-            if kind != "table":
-                return None
-        return lsql
-
-    def _sql_with_join_lineage(self, sql: str):
-        """Run the slot-lineage join rewrite with every source registered
-        as a row-lineage scan; None → caller uses the plain SQL (and
-        null-fills the hidden rid columns)."""
-        from iceberg_rust_custom_spark.views.incremental import classify_view_sql
-
-        plan = classify_view_sql(sql)
-        lsql = self._mv_lineage_join_sql(sql, plan)
-        if lsql is None:
-            return None
-        try:
-            for rel in plan.relations:
-                self.load_table(rel).scan(row_lineage=True).drop(
-                    "_last_updated_sequence_number"
-                ).createOrReplaceTempView(transform_name(rel))
-            return self.spark.sql(transform_relations(lsql))
+            rels = relations(self.spark, lsql)
+            scans = [self.load_table(r).scan(row_lineage=True) for r in rels]
+            frames = {r: df.drop("_last_updated_sequence_number") for r, df in zip(rels, scans)}
+            return self._sql_over(lsql, frames)
         except Exception:
             return None
 
@@ -647,28 +550,19 @@ class Engine:
         dev-branch read goes stale on dev commits and stays fresh across
         unrelated main commits (and vice versa)."""
         out = []
-        for rel in find_relations(sql):
+        for rel in relations(self.spark, sql):
             parts = rel.split(".")
             leaf = parts[-1]
             base, ref = rel, None
             if len(parts) >= 3 and leaf.lower().startswith(("branch_", "tag_")):
-                cand_cat, cand_ident = self.resolve(rel)
-                if not cand_cat.tabular_exists(cand_ident):  # real table wins
+                if not self.table_exists(rel):  # a real table wins
                     base = ".".join(parts[:-1])
                     ref = leaf.split("_", 1)[1]
-            rel_cat, ident = self.resolve(base)
-            if not rel_cat.tabular_exists(ident):
-                continue
-            _, kind = rel_cat.load(ident)
-            if kind != "table":
+            if self._kind(base) != "table":
                 continue
             src = self.load_table(base)
             if ref is not None:
-                snap = (
-                    src.metadata.snapshot_for_ref(ref)
-                    if ref in src.metadata.refs
-                    else None
-                )
+                snap = src.metadata.snapshot_for_ref(ref) if ref in src.metadata.refs else None
                 out.append(
                     (rel, f"{src.metadata.table_uuid}@{ref}", snap.snapshot_id if snap else None)
                 )
@@ -763,38 +657,28 @@ class Engine:
             ran = self._try_incremental_refresh(md, freshness)
             if ran:
                 return ran
-        source_states = {
-            key: cur for _, key, cur in self._mv_source_states(md.current_sql())
-        }
+        source_states = {key: cur for _, key, cur in self._mv_source_states(md.current_sql())}
         storage = self.load_table(md.storage_table)
-        result = None
         null_rid_fill = False
-        storage_cols = {f.name for f in storage.metadata.current_schema().fields}
-        if _INC.SRC_ROW_ID in storage_cols:
-            result = self._sql_with_source_lineage(md.current_sql())
-            if result is None:  # source can't supply lineage: null-fill the
-                # hidden column — the changelog refresh's null guard then
-                # falls back to exceptAll, never to a wrong answer
+        rid_cols_present = sorted(
+            f.name
+            for f in storage.metadata.current_schema().fields
+            if f.name.startswith(_INC.SRC_ROW_ID)
+        )
+        result = self._sql_with_lineage(md.current_sql()) if rid_cols_present else None
+        if result is None:
+            result = self.sql(md.current_sql())
+            if rid_cols_present:
+                # a source can't supply lineage: null-fill the hidden
+                # columns — the changelog refreshes' null guards then fall
+                # back to exceptAll, never to a wrong answer
                 from pyspark.sql import functions as _F
 
-                result = self.sql(md.current_sql()).withColumn(
-                    _INC.SRC_ROW_ID, _F.lit(None).cast("long")
-                )
+                for rc in rid_cols_present:
+                    result = result.withColumn(rc, _F.lit(None).cast("long"))
                 # all-null rids: the storage's rid range-distribution would
                 # shuffle everything into ONE task — keep the plan's layout
                 null_rid_fill = True
-        elif _INC.SRC_ROW_ID_A in storage_cols:
-            result = self._sql_with_join_lineage(md.current_sql())
-            if result is None:  # same null-fill contract as the SPJ shape
-                from pyspark.sql import functions as _F
-
-                result = self.sql(md.current_sql())
-                for rc in sorted(storage_cols):
-                    if rc.startswith(_INC.SRC_ROW_ID):
-                        result = result.withColumn(rc, _F.lit(None).cast("long"))
-                null_rid_fill = True
-        if result is None:
-            result = self.sql(md.current_sql())
         data_dir = os.path.join(storage.metadata.location, "data", _uuid.uuid4().hex[:12])
         files = write_partitioned(
             result, storage.metadata, data_dir, keep_layout=null_rid_fill
@@ -804,9 +688,6 @@ class Engine:
             "source-table-states": source_states,
         }
         tx = storage.new_transaction().rewrite_with_lineage(files, refresh_state)
-        rid_cols_present = [
-            c for c in sorted(storage_cols) if c.startswith(_INC.SRC_ROW_ID)
-        ]
         if rid_cols_present:
             # three-state trust stamp (review r12). "true" only when the
             # rewrite derived REAL lineage for every row (the just-written
@@ -817,7 +698,7 @@ class Engine:
             # between a content-path poison and an O(|V|) heal rewrite
             # every other refresh — the exact cost delta commits removed).
             trust_cols = rid_cols_present
-            plan_shape = _INC.classify_view_sql(md.current_sql())
+            plan_shape = _INC.classify_view_sql(self.spark, md.current_sql())
             if plan_shape is not None and plan_shape.mode == "left_join":
                 # rid_b is legitimately NULL on null-extended rows of a
                 # LEFT-join MV (r13) — only rid_a carries the trust claim
@@ -836,14 +717,9 @@ class Engine:
     def _try_incremental_refresh(self, md, freshness):
         """Incremental maintenance when sound; False → caller does a full
         refresh. See views/incremental.py for the classification rules."""
-        from iceberg_rust_custom_spark.views.incremental import (
-            classify_view_sql,
-            merge_partial_aggregates,
-        )
-
         if freshness.get("__version__") == "outdated":
             return False  # view SQL changed — delta of the old SQL is useless
-        plan = classify_view_sql(md.current_sql())
+        plan = _INC.classify_view_sql(self.spark, md.current_sql())
         if plan is None:
             return False
         # one metadata load serves the trust check AND every branch below
@@ -857,10 +733,7 @@ class Engine:
         # Storages whose lineage CANNOT be re-derived carry "unavailable"
         # (stamped by the rewrite itself) and never re-heal: fast paths
         # stay off, delta content commits keep working.
-        if (
-            storage.metadata.properties.get("write.mv.rid-keys-trusted")
-            == "false"
-        ):
+        if storage.metadata.properties.get("write.mv.rid-keys-trusted") == "false":
             return False
         found = self._refresh_sources(md, plan, storage)
         if found is None:
@@ -876,29 +749,19 @@ class Engine:
         if hist == "changelog":
             return self._changelog_refresh(md, plan, src, storage, from_seq, new_state)
 
-        lsql = (
-            self._mv_lineage_sql(md.current_sql())
-            if plan.mode == "append"
-            and any(
-                f.name == _INC.SRC_ROW_ID
-                for f in storage.metadata.current_schema().fields
-            )
-            else None
-        )
+        fields = storage.metadata.current_schema().fields
+        rid_storage = plan.mode == "append" and any(f.name == _INC.SRC_ROW_ID for f in fields)
+        lsql = self._mv_lineage_sql(md.current_sql()) if rid_storage else None
         if lsql is not None:
             # lineage-instrumented delta: appends-only history means the
             # changelog is pure inserts carrying each row's _row_id
             delta = src.changes(from_seq, with_lineage=True).drop("_change_type")
-            delta.createOrReplaceTempView(transform_name(plan.relation))
-            delta_result = self.spark.sql(transform_relations(lsql))
+            delta_result = self._sql_over(lsql, {plan.relation: delta})
         else:
             delta = src.incremental_scan(from_seq)
-            delta.createOrReplaceTempView(transform_name(plan.relation))
-            delta_result = self.spark.sql(transform_relations(md.current_sql()))
+            delta_result = self._sql_over(md.current_sql(), {plan.relation: delta})
 
-        data_dir = os.path.join(
-            storage.metadata.location, "data", _uuid.uuid4().hex[:12]
-        )
+        data_dir = os.path.join(storage.metadata.location, "data", _uuid.uuid4().hex[:12])
         if plan.mode == "append":
             files = write_partitioned(delta_result, storage.metadata, data_dir, small_hint=True)
             storage.metadata = (
@@ -925,7 +788,7 @@ class Engine:
             eq = stored[k].eqNullSafe(d_keys[f"_sg_k_{k}"])
             cond = eq if cond is None else (cond & eq)
         affected = stored.join(d_keys, cond, "left_semi")
-        merged = merge_partial_aggregates(affected, delta_result, plan)
+        merged = _INC.merge_partial_aggregates(affected, delta_result, plan)
         merged = merged.select(*[f.name for f in storage.metadata.current_schema().fields])
         self._commit_storage_delta(
             storage, delta_result.select(*keys), merged, new_state, data_dir
@@ -1334,7 +1197,7 @@ class Engine:
 
         sql = md.current_sql()
         data_dir = os.path.join(storage.metadata.location, "data", _uuid.uuid4().hex[:12])
-        rel = transform_name(plan.relation)
+        rel = plan.relation
         out_cols = [f.name for f in storage.metadata.current_schema().fields]
         if plan.mode == "append":
             lsql = self._mv_lineage_sql(sql) if SRC_ROW_ID in out_cols else None
@@ -1366,10 +1229,10 @@ class Engine:
                             "_change_type IN ('insert', 'update_after')"
                         ).drop("_change_type")
                         dels = ch.where("_change_type IN ('delete', 'update_before')")
-                        ins.createOrReplaceTempView(rel)
-                        d_ins = self.spark.sql(transform_relations(lsql)).select(*out_cols)
-                        dels.drop("_change_type").createOrReplaceTempView(rel)
-                        d_del = self.spark.sql(transform_relations(lsql)).select(*out_cols)
+                        d_ins = self._sql_over(lsql, {rel: ins}).select(*out_cols)
+                        d_del = self._sql_over(
+                            lsql, {rel: dels.drop("_change_type")}
+                        ).select(*out_cols)
                         # NET both sides: intermediate versions (updated
                         # again within the range) cancel, and — critically
                         # — an update that leaves every VIEW-PROJECTED
@@ -1396,10 +1259,12 @@ class Engine:
                 return False  # commit shape the changelog cannot replay
             try:
                 vis = [c for c in out_cols if c != SRC_ROW_ID]
-                ch.where("_change_type = 'insert'").drop("_change_type").createOrReplaceTempView(rel)
-                d_ins = self.spark.sql(transform_relations(sql)).select(*vis)
-                ch.where("_change_type = 'delete'").drop("_change_type").createOrReplaceTempView(rel)
-                d_del = self.spark.sql(transform_relations(sql)).select(*vis)
+                d_ins, d_del = (
+                    self._sql_over(
+                        sql, {rel: ch.where(f"_change_type = '{k}'").drop("_change_type")}
+                    ).select(*vis)
+                    for k in ("insert", "delete")
+                )
                 # multiset maintenance, delta-sized (position tombstones +
                 # append; only NEW rows null-fill the rid column — existing
                 # rows keep theirs, per ADVICE r8)
@@ -1434,8 +1299,7 @@ class Engine:
             filtered = src.join_scan(aff, on=keys, how="semi")
         except Exception:
             filtered = src.scan().join(F.broadcast(aff), keys, "left_semi")
-        filtered.createOrReplaceTempView(rel)
-        recomputed = self.spark.sql(transform_relations(sql)).select(*out_cols)
+        recomputed = self._sql_over(sql, {rel: filtered}).select(*out_cols)
         # affected groups eq-delete from storage; recomputed rows append —
         # untouched groups' files are never rewritten
         self._commit_storage_delta(storage, aff, recomputed, new_state, data_dir)
@@ -1466,27 +1330,23 @@ class Engine:
         relation is not a plain table, has no anchor in the storage's
         refresh state, saw a file-set replacement since it
         (``history_kind``), or the view is not a function of its sources'
-        rows alone (``_deterministic_view``)."""
-        from iceberg_rust_custom_spark.views.incremental import history_kind
-
+        rows alone, evaluated row by row for an SPJ plan
+        (``_deterministic_view``)."""
         stored = self._storage_refresh_state(storage).get("source-table-states", {})
         sources, anchors, kinds = [], [], []
         for rel in plan.relations:
-            rel_cat, ident = self.resolve(rel)
-            if not rel_cat.tabular_exists(ident):
-                return None
-            _, kind = rel_cat.load(ident)
-            if kind != "table":
+            if self._kind(rel) != "table":
                 return None
             src = self.load_table(rel)
             sid = stored.get(src.metadata.table_uuid)
-            hist = history_kind(src.metadata, sid) if sid is not None else None
+            hist = _INC.history_kind(src.metadata, sid) if sid is not None else None
             if hist is None:
                 return None
             sources.append(src)
             anchors.append(sid)
             kinds.append(hist)
-        if not self._deterministic_view(md.current_sql(), plan.relations, sources):
+        spj = plan.mode in ("append", "joinN", "left_join")
+        if not self._deterministic_view(md.current_sql(), plan.relations, sources, spj):
             return None
         new_state = {
             "refresh-version-id": md.current_version_id,
@@ -1497,7 +1357,7 @@ class Engine:
         }
         return sources, anchors, kinds, new_state
 
-    def _deterministic_view(self, sql: str, rels, sources) -> bool:
+    def _deterministic_view(self, sql: str, rels, sources, spj: bool = False) -> bool:
         """False when the view SQL's analyzed plan is non-deterministic
         (``rand()``, ``uuid()``) or reads the current time
         (``current_timestamp()``, ``now()``, ``current_date()``, …): an
@@ -1508,20 +1368,25 @@ class Engine:
         plan reads the current time iff that rule changes it. Each source
         binds to an empty frame of its current read schema: no Spark job.
         The verdict depends only on the SQL and the source schemas, so it
-        is computed once per pair (the binding and analysis cost ~0.1 s)."""
+        is computed once per pair (the binding and analysis cost ~0.1 s).
+        A view classified select-project-filter (``spj``) must analyze to
+        no ``Aggregate`` too: the parser cannot tell a global aggregate
+        (``SELECT count(*) FROM t``) from a projection, and an append
+        refresh would store one aggregate row per delta."""
         from iceberg_rust_custom_spark.table.scan import read_data_files
 
-        key = (sql, tuple((s.metadata.table_uuid, s.metadata.current_schema_id) for s in sources))
+        key = (sql, spj, tuple((s.metadata.table_uuid, s.metadata.current_schema_id) for s in sources))
         if key in self._view_determinism:
             return self._view_determinism[key]
         try:
-            for rel, src in zip(rels, sources):
-                read_data_files(self.spark, src.metadata, []).createOrReplaceTempView(
-                    transform_name(rel)
-                )
-            analyzed = self.spark.sql(transform_relations(sql))._jdf.queryExecution().analyzed()
+            frames = {
+                rel: read_data_files(self.spark, src.metadata, [])
+                for rel, src in zip(rels, sources)
+            }
+            analyzed = self._sql_over(sql, frames)._jdf.queryExecution().analyzed()
             rule = self.spark._jvm.org.apache.spark.sql.catalyst.optimizer.ComputeCurrentTime
             ok = bool(analyzed.deterministic()) and rule.apply(analyzed).fastEquals(analyzed)
+            ok = ok and not (spj and _aggregates(analyzed))
         except Exception:
             ok = False  # unanalysable over the bare sources: full refresh
         self._view_determinism[key] = ok
@@ -1669,8 +1534,8 @@ class Engine:
         rid_cols = _INC.src_row_id_cols(n)
         vis = [c for c in out_cols if c not in rid_cols]
         has_rids = all(c in out_cols for c in rid_cols)
-        lsql = self._mv_lineage_join_sql(sql, plan) if has_rids else None
-        pairs_between = self._slot_pairs(_INC.joinN_equi_keys(sql) or {})
+        lsql = self._mv_lineage_sql(sql) if has_rids else None
+        pairs_between = self._slot_pairs(_INC.joinN_equi_keys(self.spark, sql) or {})
         data_dir = os.path.join(storage.metadata.location, "data", _uuid.uuid4().hex[:12])
         label = f"incremental-join{n}" if n > 2 else "incremental-changelog-join"
 
@@ -1694,11 +1559,8 @@ class Engine:
                         df = df.drop("_last_updated_sequence_number")
                     fulls[j] = df
                 for sign_df, out in zip(signed_i, parts):
-                    for j in range(n):
-                        (sign_df if j == i else fulls[j]).createOrReplaceTempView(
-                            transform_name(rels[j])
-                        )
-                    out.append(self.spark.sql(run_sql).select(*cols))
+                    frames = {rels[j]: sign_df if j == i else fulls[j] for j in range(n)}
+                    out.append(self._sql_over(run_sql, frames).select(*cols))
             return [reduce(lambda x, y: x.unionByName(y), p) for p in parts]
 
         if all(k == "appends" for k in kinds):
@@ -1716,7 +1578,7 @@ class Engine:
                 return False
             try:
                 (delta_result,) = run_arms(
-                    transform_relations(lsql or sql),
+                    lsql or sql,
                     [(d, d) for d in deltas],
                     out_cols if lsql is not None else vis,
                     lsql is not None,
@@ -1764,7 +1626,7 @@ class Engine:
                         pos, neg = (
                             df.persist()
                             for df in run_arms(
-                                transform_relations(lsql), split, out_cols, True
+                                lsql, split, out_cols, True
                             )
                         )
                         cached.extend((pos, neg))
@@ -1797,7 +1659,7 @@ class Engine:
             ]
             pos, neg = (
                 df.persist()
-                for df in run_arms(transform_relations(sql), split, vis, False)
+                for df in run_arms(sql, split, vis, False)
             )
             cached.extend((pos, neg))
             ran = self._multiset_delta_commit(
@@ -1870,21 +1732,19 @@ class Engine:
         try:
             from functools import reduce as _reduce
 
-            probe = transform_relations(plan.probe_sql)
             parts = []
             for i in range(n):
                 preds = self._delta_arm_preds(sources, anchors, pairs_between, deltas[i], i)
-                for j in range(n):
-                    df = (
-                        deltas[i]
-                        if j == i
-                        else sources[j].scan(
-                            predicate=preds.get(j),
-                            snapshot_id=anchors[j] if j < i else None,
-                        )
+                frames = {
+                    rels[j]: deltas[i]
+                    if j == i
+                    else sources[j].scan(
+                        predicate=preds.get(j),
+                        snapshot_id=anchors[j] if j < i else None,
                     )
-                    df.createOrReplaceTempView(transform_name(rels[j]))
-                parts.append(self.spark.sql(probe))
+                    for j in range(n)
+                }
+                parts.append(self._sql_over(plan.probe_sql, frames))
             affected = _reduce(lambda x, y: x.unionByName(y), parts).distinct()
             rows = affected.limit(10_001).collect()
         finally:
@@ -1921,15 +1781,11 @@ class Engine:
         # star-join pruning chain at the NEW states: restricted slots
         # prune their equi neighbors (nation → customer → orders → …)
         self._propagate_equi_preds(sources, src_preds, pairs_between, lambda k: None)
-        for j in range(n):
-            sources[j].scan(predicate=src_preds.get(j)).createOrReplaceTempView(
-                transform_name(rels[j])
-            )
-        full = self.spark.sql(transform_relations(sql))
-        recomputed = full.join(F.broadcast(aff), keys, "left_semi").select(*out_cols)
-        data_dir = os.path.join(
-            storage.metadata.location, "data", _uuid.uuid4().hex[:12]
+        full = self._sql_over(
+            sql, {rels[j]: sources[j].scan(predicate=src_preds.get(j)) for j in range(n)}
         )
+        recomputed = full.join(F.broadcast(aff), keys, "left_semi").select(*out_cols)
+        data_dir = os.path.join(storage.metadata.location, "data", _uuid.uuid4().hex[:12])
         self._commit_storage_delta(storage, aff.select(*keys), recomputed, new_state, data_dir)
         if n == 1:
             return "incremental-agg-recompute"
@@ -2013,7 +1869,7 @@ class Engine:
         rid_cols = [_INC.SRC_ROW_ID_A, _INC.SRC_ROW_ID_B]
         if not all(c in out_cols for c in rid_cols):
             return False  # legacy storage without pair lineage
-        lsql = self._mv_lineage_join_sql(sql, plan)
+        lsql = self._mv_lineage_sql(sql)
         if lsql is None or not self._storage_cols_joinable(storage, out_cols):
             return False
         # only rid_a carries the key claim (rid_b is NULL on null-extended
@@ -2117,9 +1973,7 @@ class Engine:
                 or a_aff.where("_row_id IS NULL").limit(1).count() > 0
             ):
                 return False
-            a_aff.createOrReplaceTempView(transform_name(rels[0]))
-            b_new.createOrReplaceTempView(transform_name(rels[1]))
-            recomputed = self.spark.sql(transform_relations(lsql)).select(*out_cols)
+            recomputed = self._sql_over(lsql, {rels[0]: a_aff, rels[1]: b_new}).select(*out_cols)
             self._commit_storage_delta(
                 storage, aff_rids, recomputed, new_state, data_dir
             )
@@ -2128,10 +1982,10 @@ class Engine:
             for d in cached:
                 d.unpersist()
 
-    def register_function_registry(self) -> None:
-        """Expose maintenance entry points as session SQL functions, mirroring
-        the reference's refresh_materialized_view scalar UDF
-        (planner.rs:371-447). Spark UDFs can't run driver jobs, so these are
-        driver-side callables registered on the engine instead."""
-        # intentionally a no-op: engine.refresh_materialized_view IS the UDF
-        return None
+
+def _aggregates(jplan) -> bool:
+    """Whether a JVM logical plan has an ``Aggregate`` node."""
+    kids = jplan.children()
+    return jplan.nodeName() == "Aggregate" or any(
+        _aggregates(kids.apply(i)) for i in range(kids.length())
+    )

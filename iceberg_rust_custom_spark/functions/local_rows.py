@@ -11,7 +11,8 @@ for driver transfers). These tiny driver-known maps are on the hot path of
 every iceberg_* gate query, so the fixed cost repeats per scan.
 
 ``local_rows_df`` converts through ``pyarrow.Table`` when the rows/schema
-allow it and silently falls back to the classic path otherwise (exotic
+allow it (zero rows skip Arrow too: the JVM builds the empty relation) and
+silently falls back to the classic path otherwise (exotic
 types such as variant/geometry, struct values carried as Row objects, …) —
 results are identical either way, only the execution plan of the local
 relation changes. Both routes read values the classic way: a Mapping row
@@ -48,6 +49,14 @@ def local_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
     ``schema``: a StructType or DDL string."""
     st = schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
     rows = list(rows)
+    if not rows:
+        # zero rows need no Arrow batch: the JVM builds the typed empty
+        # LocalRelation itself (about a third of the Arrow route's cost)
+        jspark = spark._jsparkSession
+        return DataFrame(
+            jspark.createDataFrame(spark._jvm.java.util.ArrayList(), jspark.parseDataType(st.json())),
+            spark,
+        )
     norm = []
     for r in rows:
         if isinstance(r, Mapping):

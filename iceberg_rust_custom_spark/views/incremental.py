@@ -5,7 +5,9 @@ incremental refresh" and always recomputes from scratch
 (datafusion_iceberg/src/materialized_view.rs:147-159; README.md:22-46 lists
 incremental refresh as unimplemented). This module implements it:
 
-* classify the view SQL into an incrementally-maintainable shape,
+* classify the view SQL's parsed plan (``views/sql_plan.py``) into an
+  incrementally-maintainable ``JoinChain`` shape — a word inside a string
+  literal is a ``Literal`` node, never a keyword;
 * read only the rows appended to the source since the last refresh
   (snapshot-range incremental scan, the reference's table/mod.rs:120-144
   mechanism — the one piece of delta machinery it does have),
@@ -14,6 +16,9 @@ incremental refresh as unimplemented). This module implements it:
   views, affected-group recompute for every other GROUP BY view over
   n ≥ 1 inner-joined relations.
 
+The lineage rewrite and the affected-group probe are rebuilt from the
+chain, with select, ON, WHERE and key text sliced from the SQL by span.
+
 Soundness gate (engine ``_refresh_sources``, shared by every mode): each
 source's history since the MV's anchor snapshot must be ``history_kind``
 ``"appends"`` (the cheap delta scans) or ``"changelog"`` (MoR row-level
@@ -21,7 +26,9 @@ commits, replayed through ``Table.changes``); a ``None`` history — a
 file-set replacement, or an expired anchor — forces a full refresh. So does
 a view whose analyzed plan is non-deterministic or reads the current time:
 an incremental refresh would evaluate it over the delta only, at refresh
-time, and the stored rows would mix evaluation times.
+time, and the stored rows would mix evaluation times. And so does a view
+classified select-project-filter whose analyzed plan aggregates — the
+parser cannot tell ``SELECT count_if(v > 1) FROM t`` from a projection.
 
 At 100 TB this is the difference between re-scanning the fact table and
 scanning a day's partition: refresh cost tracks delta size, not table size.
@@ -29,46 +36,40 @@ scanning a day's partition: refresh cost tracks delta size, not table size.
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass, field
+
+from pyspark.errors import ParseException
+
+from iceberg_rust_custom_spark.views.sql_plan import SUBQUERIES, Node, extent, parse, relation_name
 
 # aggregate → how two partial values merge under an append-only delta
 _MERGEABLE = {"sum": "sum", "count": "sum", "min": "min", "max": "max"}
-
-_SHAPE_RE = re.compile(
-    r"^\s*SELECT\s+(?P<select>.*?)\s+FROM\s+(?P<rel>[A-Za-z_][\w.]*)"
-    r"(?:\s+WHERE\s+(?P<where>.*?))?"
-    r"(?:\s+GROUP\s+BY\s+(?P<group>.*?))?"
-    r"(?:\s+HAVING\s+(?P<having>.*?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
+# affected groups are RECOMPUTED exactly (not merged), so any
+# deterministic aggregate qualifies — whitelisted to keep surprises out
+_RECOMPUTABLE = frozenset(
+    (
+        "sum", "count", "min", "max", "avg", "mean", "median", "corr", "covar_pop",
+        "covar_samp", "stddev", "stddev_pop", "stddev_samp", "var", "variance",
+        "var_pop", "var_samp",
+    )
 )
-_AGG_RE = re.compile(
-    # greedy arg up to the LAST ')': allows nested calls like
-    # SUM(CAST(x AS DECIMAL(38,10))) — exact-decimal partials merge exactly
-    r"^\s*(?P<fn>sum|count|min|max)\s*\((?P<arg>.*)\)\s+AS\s+(?P<alias>[A-Za-z_]\w*)\s*$",
-    re.IGNORECASE | re.DOTALL,
+# non-date_trunc expression keys: a DETERMINISTIC single-column function
+# whitelist (review r13 — the old "any parenthesized expression" rule
+# admitted current_date()/rand() keys, whose affected-group commits would
+# mix two key epochs in storage). They carry no key source: no pruning
+_DETERMINISTIC_KEY_FNS = frozenset(
+    (
+        "upper", "lower", "trim", "ltrim", "rtrim", "abs", "floor", "ceil", "year",
+        "quarter", "month", "day", "dayofmonth", "dayofweek", "hour", "minute",
+        "to_date", "length",
+    )
 )
-# HAVING left out (r13): the affected-group recompute path evaluates it
-# naturally — a group failing HAVING is eq-deleted and not re-appended;
-# the SPJ/lineage paths and the partial-merge path still reject it
-_FORBIDDEN_RE = re.compile(
-    r"\b(join|union|intersect|except|distinct|over|limit|order\s+by)\b|\(\s*select\b",
-    re.IGNORECASE,
-)
-# join views: the same exclusions minus the single inner JOIN itself
-_FORBIDDEN_NONJOIN_RE = re.compile(
-    r"\b(union|intersect|except|distinct|over|limit|order\s+by|having|group\s+by"
-    r"|left|right|full|cross|outer|semi|anti)\b|\(\s*select\b",
-    re.IGNORECASE,
-)
-# join+aggregate views (r12): the join exclusions minus GROUP BY itself
-# (and minus HAVING since r13 — affected-group recompute evaluates it)
-_FORBIDDEN_JOINAGG_RE = re.compile(
-    r"\b(union|intersect|except|distinct|over|limit|order\s+by"
-    r"|left|right|full|cross|outer|semi|anti)\b|\(\s*select\b",
-    re.IGNORECASE,
-)
-_AGG_CALL_RE = re.compile(r"\b(sum|count|min|max|avg|stddev|var\w*)\s*\(", re.IGNORECASE)
+# r13: date_trunc over an optionally-qualified column is also a legal
+# group key — the time rollup. The engine prunes the owning slot by the
+# raw-column envelope (Engine._dtrunc_envelope_predicate)
+_DTRUNC_UNITS = frozenset(("year", "quarter", "month", "week", "day", "hour"))
+# expressions no incremental shape admits: subqueries and windows
+_NOT_INCREMENTAL = SUBQUERIES | {"WindowExpression", "UnresolvedWindowExpression"}
 
 
 @dataclass(frozen=True)
@@ -104,24 +105,6 @@ class IncrementalPlan:
 # stored column and shipping a changelog-sized id list at 100 TB.
 SRC_ROW_ID = "__sg_src_row_id"
 
-
-def lineage_sql(sql: str) -> str | None:
-    """For a single-table SPJ view: the same SQL with the source ``_row_id``
-    carried through as the hidden storage column. None when the shape
-    doesn't allow it (aggregates, joins, SELECT * — which would already
-    expand the lineage columns of the instrumented source view)."""
-    m = _SHAPE_RE.match(sql.strip())
-    if not m or _FORBIDDEN_RE.search(sql) or m.group("group") or m.group("having"):
-        return None
-    if "*" in m.group("select"):
-        return None
-    where = f" WHERE {m.group('where')}" if m.group("where") else ""
-    return (
-        f"SELECT {m.group('select')}, _row_id AS {SRC_ROW_ID} "
-        f"FROM {m.group('rel')}{where}"
-    )
-
-
 # hidden lineage columns of slots 0 and 1 of a join view: an inner-join
 # output row is identified by the rid tuple of the source rows that
 # produced it, so changelog delete maintenance becomes MoR equality
@@ -130,104 +113,6 @@ def lineage_sql(sql: str) -> str | None:
 # #2: O(|V|) read per delta refresh of a large join MV).
 SRC_ROW_ID_A = "__sg_src_row_id_a"
 SRC_ROW_ID_B = "__sg_src_row_id_b"
-
-
-_EQUI_COND_RE = re.compile(
-    r"^\s*(?P<l>[A-Za-z_]\w*)\.(?P<lc>[A-Za-z_]\w*)\s*=\s*"
-    r"(?P<r>[A-Za-z_]\w*)\.(?P<rc>[A-Za-z_]\w*)\s*$"
-)
-
-# LEFT-outer-join SPJ views (r13, VERDICT r12 #2): ``A LEFT JOIN dim``
-# (preserve unmatched facts) is a very common production MV. The same
-# pair-lineage storage carries it — matched output rows key
-# (rid_a, rid_b), null-extended rows (rid_a, NULL) — and because every
-# output row of a LEFT join is a function of ONE A-row and all of B,
-# maintenance is an affected-A-row recompute: eq-delete by rid_a alone
-# (catches both the matched and the null-extended rows of an affected
-# A-row), re-derive those A-rows' full contribution against B_new.
-_LEFT_JOIN_SHAPE_RE = re.compile(
-    r"^\s*SELECT\s+(?P<select>.*?)\s+FROM\s+"
-    r"(?P<rel_a>[A-Za-z_][\w.]*)(?:\s+(?:AS\s+)?(?!LEFT\b|JOIN\b)(?P<alias_a>[A-Za-z_]\w*))?"
-    r"\s+LEFT\s+(?:OUTER\s+)?JOIN\s+"
-    r"(?P<rel_b>[A-Za-z_][\w.]*)(?:\s+(?:AS\s+)?(?!ON\b)(?P<alias_b>[A-Za-z_]\w*))?"
-    r"\s+ON\s+(?P<cond>.*?)"
-    r"(?:\s+WHERE\s+(?P<where>.*?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_FORBIDDEN_LEFTJOIN_RE = re.compile(
-    r"\b(union|intersect|except|distinct|over|limit|order\s+by|having"
-    r"|group\s+by|right|full|cross|semi|anti)\b|\(\s*select\b",
-    re.IGNORECASE,
-)
-
-
-def _left_join_match(sql: str):
-    """The LEFT-join shape match + (qa, qb), or None. The affected-row
-    machinery needs usable, distinct qualifiers on BOTH sides and an
-    AND-conjoined ON containing at least one two-sided equality (the
-    key-superset that makes the affected-A-row set computable; theta
-    conjuncts are fine — the equality pairs stay necessary). OR'd or
-    parenthesized conditions, self-joins, aggregates, and SELECT * all
-    route to a full refresh."""
-    jm = _LEFT_JOIN_SHAPE_RE.match(sql.strip())
-    if not jm or _FORBIDDEN_LEFTJOIN_RE.search(sql):
-        return None
-    if jm.group("rel_a").lower() == jm.group("rel_b").lower():
-        return None
-    if re.search(
-        r"\bJOIN\b", jm.group("cond") + (jm.group("where") or ""), re.IGNORECASE
-    ):
-        return None  # 3+ relations: full refresh for outer shapes
-    if _AGG_CALL_RE.search(jm.group("select")) or "*" in jm.group("select"):
-        return None
-    qa = (jm.group("alias_a") or ("" if "." in jm.group("rel_a") else jm.group("rel_a"))).lower()
-    qb = (jm.group("alias_b") or ("" if "." in jm.group("rel_b") else jm.group("rel_b"))).lower()
-    if not qa or not qb or qa == qb:
-        return None
-    cond = jm.group("cond")
-    if "(" in cond or re.search(r"\bor\b", cond, re.IGNORECASE):
-        return None
-    pairs = equi_pairs_between(cond, qa, qb)
-    if not pairs:
-        return None
-    return jm, qa, qb, pairs
-
-
-def classify_left_join_sql(sql: str) -> IncrementalPlan | None:
-    """Two-table LEFT-outer-join select-project-filter views:
-    maintainable via affected-A-row recompute (see
-    engine._incremental_left_join_refresh). ``equi_keys`` carries the
-    (col on A, col on B) pairs the affected-set computation keys on."""
-    m = _left_join_match(sql)
-    if m is None:
-        return None
-    jm, _, _, pairs = m
-    return IncrementalPlan(
-        "left_join",
-        jm.group("rel_a"),
-        equi_keys=tuple(pairs),
-        relations=(jm.group("rel_a"), jm.group("rel_b")),
-    )
-
-
-def left_join_lineage_sql(sql: str) -> str | None:
-    """The pair-lineage-instrumented rewrite of a LEFT-join SPJ view SQL
-    — identical to the inner-join rewrite except the join keyword;
-    ``rid_b`` is naturally NULL on null-extended rows."""
-    m = _left_join_match(sql)
-    if m is None:
-        return None
-    jm, qa, qb, _ = m
-    aa = f" {jm.group('alias_a')}" if jm.group("alias_a") else ""
-    ab = f" {jm.group('alias_b')}" if jm.group("alias_b") else ""
-    where = f" WHERE {jm.group('where')}" if jm.group("where") else ""
-    return (
-        f"SELECT {jm.group('select')}, {qa}._row_id AS {SRC_ROW_ID_A}, "
-        f"{qb}._row_id AS {SRC_ROW_ID_B} "
-        f"FROM {jm.group('rel_a')}{aa} LEFT JOIN {jm.group('rel_b')}{ab} "
-        f"ON {jm.group('cond')}{where}"
-    )
-
 # n-relation inner-join views (2 ≤ n ≤ MAX_JOIN_RELATIONS, one relation
 # list for every n): row lineage is slot-wise — an
 # inner join emits one output row per matching (r_0, …, r_{n-1}) source-row
@@ -253,183 +138,252 @@ def src_row_id_cols(n: int) -> list[str]:
 
 @dataclass(frozen=True)
 class JoinChain:
-    """A parsed ``FROM r0 [a0] JOIN r1 [a1] ON c1 … [WHERE w] [GROUP BY g]``
-    tail — the iterative replacement for the r12 hard-coded 2/3-slot shape
-    regexes. ``conds[i]`` is the ON condition attached to slot ``i + 1``
-    and may reference ANY earlier slot (the real TPC-H q5 joins supplier
-    to both lineitem and customer in one ON)."""
+    """A view SQL's query block read from its parsed plan: ``SELECT items
+    FROM r0 [a0] (JOIN r_i [a_i] ON c_i)* [WHERE w] [GROUP BY g] [HAVING
+    h]``. ``conds[i]`` is the ON condition of slot ``i + 1`` and may
+    reference ANY earlier slot (the real TPC-H q5 joins supplier to both
+    lineitem and customer in one ON). Expression fields are parse-tree
+    nodes; ``text`` slices their source from ``sql``."""
 
-    select: str
+    sql: str
+    select: tuple  # select-list items
     rels: tuple  # relation names, join order
+    rel_nodes: tuple  # the UnresolvedRelation of each slot
     aliases: tuple  # SQL alias or None, per slot
-    quals: tuple  # lower-cased usable qualifier per slot ("" when none)
+    joins: tuple  # join type of slot i + 1: "Inner", or one "LeftOuter"
     conds: tuple  # len(rels) - 1 ON conditions
-    where: str | None
-    group: str | None
-    having: str | None = None  # r13: evaluated by the recompute, not the probe
+    where: Node | None
+    group: tuple | None  # grouping expressions; None without GROUP BY
+    having: Node | None
+
+    @property
+    def quals(self) -> tuple:
+        """The lower-cased usable qualifier per slot: its alias, or an
+        undotted relation name ("" when neither)."""
+        return tuple(
+            (a or ("" if len(r.attr) > 1 else r.attr[0])).lower()
+            for r, a in zip(self.rel_nodes, self.aliases)
+        )
+
+    def text(self, node: Node) -> str:
+        # an unaliased select item's UnresolvedAlias spans the whole query
+        return _unaliased(node).text(self.sql)
 
 
-_CHAIN_SHAPE_RE = re.compile(
-    r"^\s*SELECT\s+(?P<select>.*?)\s+FROM\s+(?P<tail>.*?)"
-    r"(?:\s+WHERE\s+(?P<where>.*?))?"
-    r"(?:\s+GROUP\s+BY\s+(?P<group>.*?))?"
-    r"(?:\s+HAVING\s+(?P<having>.*?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_CHAIN_HEAD_RE = re.compile(
-    r"^(?P<rel>[A-Za-z_][\w.]*)(?:\s+(?:AS\s+)?(?P<alias>[A-Za-z_]\w*))?$",
-    re.IGNORECASE,
-)
-_CHAIN_JOIN_RE = re.compile(
-    r"^(?P<rel>[A-Za-z_][\w.]*)(?:\s+(?:AS\s+)?(?!ON\b)(?P<alias>[A-Za-z_]\w*))?"
-    r"\s+ON\s+(?P<cond>.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
+def _unaliased(node: Node) -> Node:
+    return node.children[0] if node.name == "UnresolvedAlias" else node
 
 
-def parse_join_chain(sql: str) -> JoinChain | None:
-    """Parse an inner-join chain of ANY length (the caller applies the
-    forbidden-shape regexes and relation-count bounds). None when the
-    FROM tail is not a plain ``rel [alias] (JOIN rel [alias] ON cond)*``
-    sequence."""
-    m = _CHAIN_SHAPE_RE.match(sql.strip())
-    if not m:
-        return None
-    parts = re.split(
-        r"\s+(?:INNER\s+)?JOIN\s+", m.group("tail").strip(), flags=re.IGNORECASE
-    )
-    hm = _CHAIN_HEAD_RE.match(parts[0].strip())
-    if not hm:
-        return None
-    rels, aliases, conds = [hm.group("rel")], [hm.group("alias")], []
-    for part in parts[1:]:
-        jm = _CHAIN_JOIN_RE.match(part.strip())
-        if not jm:
-            return None
-        rels.append(jm.group("rel"))
-        aliases.append(jm.group("alias"))
-        conds.append(jm.group("cond").strip())
-    quals = tuple(
-        (a or ("" if "." in r else r)).lower() for r, a in zip(rels, aliases)
-    )
-    return JoinChain(
-        m.group("select").strip(),
-        tuple(rels),
-        tuple(aliases),
-        quals,
-        tuple(conds),
-        m.group("where"),
-        m.group("group"),
-        m.group("having"),
-    )
+def _call(node: Node) -> str | None:
+    """The lower-cased name of a function call, or None."""
+    return ".".join(node.attr[0]).lower() if node.name == "UnresolvedFunction" else None
 
 
-def _chain_match(sql: str, agg: bool) -> JoinChain | None:
-    """The n-relation chain match + validity shared by the joinN
-    classifiers, the lineage rewrite, and the equi-key extractor: 2 ≤ n ≤
-    MAX_JOIN_RELATIONS, or 1 ≤ n with ``agg``. ``agg`` selects the
-    GROUP-BY-permitting forbidden set and requires/forbids the GROUP BY
-    tail accordingly; a single relation has no join type, so it takes the
-    plain forbidden set."""
-    ch = parse_join_chain(sql)
-    if ch is None or not (1 if agg else 2) <= len(ch.rels) <= MAX_JOIN_RELATIONS:
-        return None
-    if len(ch.rels) == 1:
-        forbidden = _FORBIDDEN_RE
+def _col(node: Node) -> tuple | None:
+    """The name parts of a plain (``c``) or qualified (``q.c``) column."""
+    return node.attr if node.name == "UnresolvedAttribute" and len(node.attr) <= 2 else None
+
+
+def parse_chain(spark, sql: str) -> JoinChain | None:
+    """The view SQL's join chain, or None when its plan is any other shape:
+    a node other than Project, Aggregate, Filter, UnresolvedHaving, an
+    inner Join with an ON condition (or one LEFT Join of two relations),
+    SubqueryAlias over a relation and UnresolvedRelation; more than
+    MAX_JOIN_RELATIONS relations, or one twice (a self-join makes row
+    identity across slots ambiguous); or a subquery, window or DISTINCT
+    aggregate anywhere in its expressions."""
+    try:
+        node = parse(spark, sql)
+    except ParseException:
+        return None  # not a statement Spark parses: full refresh
+    having = None
+    if node.name == "UnresolvedHaving":
+        node, having = node.children
+    if node.name == "Aggregate":
+        child, *exprs = node.children
+        group, select = tuple(exprs[: node.attr]), tuple(exprs[node.attr :])
+    elif node.name == "Project":
+        child, *select = node.children
+        group, select = None, tuple(select)
     else:
-        forbidden = _FORBIDDEN_JOINAGG_RE if agg else _FORBIDDEN_NONJOIN_RE
-    if forbidden.search(sql):
         return None
-    if (ch.group is not None) != agg:
+    where = None
+    if child.name == "Filter":
+        child, where = child.children
+    slots, joins, conds = [], [], []
+    joined = ("Inner", "LeftOuter")
+    while child.name == "Join" and child.attr in joined and len(child.children) == 3:
+        joins.insert(0, child.attr)
+        child, right, cond = child.children
+        slots.insert(0, right)
+        conds.insert(0, cond)
+    slots.insert(0, child)
+    aliases = tuple(s.attr if s.name == "SubqueryAlias" else None for s in slots)
+    rel_nodes = tuple(s.children[0] if s.name == "SubqueryAlias" else s for s in slots)
+    if any(r.name != "UnresolvedRelation" for r in rel_nodes):
         return None
-    if len({r.lower() for r in ch.rels}) != len(ch.rels):
-        return None  # self-joins: row identity across slots is ambiguous
-    return ch
+    rels = tuple(relation_name(r) for r in rel_nodes)
+    if (
+        len(rels) > MAX_JOIN_RELATIONS
+        or len({r.lower() for r in rels}) != len(rels)
+        or ("LeftOuter" in joins and len(rels) != 2)
+    ):
+        return None
+    exprs = [*select, *(group or ()), *conds, where, having]
+    if any(
+        n.name in _NOT_INCREMENTAL or (n.name == "UnresolvedFunction" and n.attr[1])
+        for e in exprs
+        if e is not None
+        for n in e.walk()
+    ):
+        return None
+    return JoinChain(
+        sql, select, rels, rel_nodes, aliases, tuple(joins), tuple(conds), where, group, having
+    )
 
 
-def _chain_from_sql(ch: JoinChain) -> str:
+def _from_sql(ch: JoinChain) -> str:
     """Reassemble the chain's FROM/ON/WHERE tail (no GROUP BY)."""
-    frm = ch.rels[0] + (f" {ch.aliases[0]}" if ch.aliases[0] else "")
-    for r, a, c in zip(ch.rels[1:], ch.aliases[1:], ch.conds):
-        frm += f" JOIN {r}" + (f" {a}" if a else "") + f" ON {c}"
-    return frm + (f" WHERE {ch.where}" if ch.where else "")
+    frm = ""
+    for i, (r, a) in enumerate(zip(ch.rel_nodes, ch.aliases)):
+        rel = r.text(ch.sql) + (f" {a}" if a else "")
+        if i:
+            kw = "LEFT JOIN" if ch.joins[i - 1] == "LeftOuter" else "JOIN"
+            rel = f" {kw} {rel} ON {ch.text(ch.conds[i - 1])}"
+        frm += rel
+    return frm + (f" WHERE {ch.text(ch.where)}" if ch.where is not None else "")
 
 
-def _pairs_by_slot(
-    conds, quals
-) -> dict[tuple[int, int], list[tuple[str, str]]]:
+def _calls_aggregate(items) -> bool:
+    return any(_call(n) in _RECOMPUTABLE for e in items for n in e.walk())
+
+
+def _has_star(items) -> bool:
+    return any(n.name == "UnresolvedStar" for e in items for n in e.walk())
+
+
+def _qualified(ch: JoinChain) -> bool:
+    """Every slot has a usable qualifier, distinct from the others."""
+    return all(ch.quals) and len(set(ch.quals)) == len(ch.quals)
+
+
+def _conjuncts(node: Node) -> list:
+    return [c for k in node.children for c in _conjuncts(k)] if node.name == "And" else [node]
+
+
+def _pairs_by_slot(ch: JoinChain) -> dict[tuple[int, int], list[tuple[str, str]]]:
     """{(i, j): [(col on rel_i, col on rel_j), …]} for every two-sided
-    equality between distinct slots across all ON conditions (i < j).
-    Conditions containing OR or parentheses contribute nothing (a
-    disjunct could join outside any conjunct's key set); theta conjuncts
-    are skipped — the remaining equality pairs stay a NECESSARY join
-    condition, so pruning by them is sound."""
-    idx = {q: i for i, q in enumerate(quals) if q}
+    ``EqualTo`` between qualified columns of distinct slots under the
+    ``And`` of an ON condition (i < j). A condition containing ``Or``
+    contributes nothing (a disjunct could join outside any conjunct's key
+    set); theta and one-sided conjuncts are skipped — the remaining
+    equality pairs stay a NECESSARY join condition, so pruning by them is
+    sound."""
+    idx = {q: i for i, q in enumerate(ch.quals) if q}
     out: dict[tuple[int, int], list[tuple[str, str]]] = {}
-    for cond in conds:
-        if "(" in cond or re.search(r"\bor\b", cond, re.IGNORECASE):
+    for cond in ch.conds:
+        if any(n.name == "Or" for n in cond.walk()):
             continue
-        # the shared conjunct parser per qualifier pair, so orientation /
-        # theta-skip rules live in ONE place (review r12)
-        for qx, x in idx.items():
-            for qy, y in idx.items():
-                if x >= y:
-                    continue
-                p = equi_pairs_between(cond, qx, qy)
-                if p:
-                    out.setdefault((x, y), []).extend(p)
+        for c in _conjuncts(cond):
+            cols = [_col(s) for s in c.children] if c.name == "EqualTo" else []
+            if len(cols) != 2 or not all(x and len(x) == 2 for x in cols):
+                continue
+            (qx, cx), (qy, cy) = cols
+            x, y = idx.get(qx.lower()), idx.get(qy.lower())
+            if x is None or y is None or x == y:
+                continue
+            out.setdefault((min(x, y), max(x, y)), []).append((cx, cy) if x < y else (cy, cx))
     return out
 
 
-def joinN_lineage_sql(sql: str) -> str | None:
-    """The slot-lineage-instrumented rewrite of an n-relation inner-join
-    SPJ view SQL, or None when the shape rules it out (aggregates,
-    SELECT *, a slot without a usable qualifier)."""
-    ch = _chain_match(sql, agg=False)
-    if ch is None:
+def lineage_sql(spark, sql: str) -> str | None:
+    """The lineage-instrumented rewrite of an SPJ view SQL: a single-table
+    view carries the source ``_row_id`` through as the hidden storage
+    column, a join view (inner chain, or LEFT — where ``rid_b`` is
+    naturally NULL on null-extended rows) the ``_row_id`` of every slot.
+    None when the shape rules it out: aggregates, SELECT * (which would
+    already expand the lineage columns of the instrumented source views),
+    a join slot without a usable, distinct qualifier."""
+    plan, ch = view_shape(spark, sql)
+    if plan is None or plan.mode not in ("append", "joinN", "left_join"):
         return None
-    if (
-        _AGG_CALL_RE.search(ch.select)
-        or "*" in ch.select
-        or any(not q for q in ch.quals)
-        or len(set(ch.quals)) != len(ch.quals)
-    ):
+    if _has_star(ch.select):
         return None
-    rid_proj = ", ".join(
-        f"{q}._row_id AS {c}"
-        for q, c in zip(ch.quals, src_row_id_cols(len(ch.rels)))
-    )
-    return f"SELECT {ch.select}, {rid_proj} FROM {_chain_from_sql(ch)}"
-
-
-def joinN_equi_keys(sql: str) -> dict[tuple[int, int], list[tuple[str, str]]] | None:
-    """Per-slot-pair equality keys of an n-relation SPJ chain (see
-    ``_pairs_by_slot`` for the soundness rules)."""
-    ch = _chain_match(sql, agg=False)
-    if ch is None:
+    if plan.mode == "append":
+        rid_proj = f"_row_id AS {SRC_ROW_ID}"
+    elif _qualified(ch):
+        cols = src_row_id_cols(len(ch.rels))
+        rid_proj = ", ".join(f"{q}._row_id AS {c}" for q, c in zip(ch.quals, cols))
+    else:
         return None
-    if any(not q for q in ch.quals) or len(set(ch.quals)) != len(ch.quals):
+    start, stop = extent(ch.sql, [_unaliased(n) for n in ch.select])
+    return f"SELECT {ch.sql[start : stop + 1]}, {rid_proj} FROM {_from_sql(ch)}"
+
+
+def joinN_equi_keys(spark, sql: str) -> dict[tuple[int, int], list[tuple[str, str]]] | None:
+    """Per-slot-pair equality keys of an n-relation inner-join SPJ view
+    (see ``_pairs_by_slot`` for the soundness rules)."""
+    plan, ch = view_shape(spark, sql)
+    if plan is None or plan.mode != "joinN" or not _qualified(ch):
         return None
-    return _pairs_by_slot(ch.conds, ch.quals) or None
+    return _pairs_by_slot(ch) or None
 
 
-def classify_joinN_sql(sql: str) -> IncrementalPlan | None:
-    """n-relation inner-join select-project-filter views (2 ≤ n ≤
-    MAX_JOIN_RELATIONS): maintainable via the telescoping delta identity
-    (see engine._incremental_joinN_refresh). The reference's __delta__
-    placeholders stop at registering source deltas
-    (materialized_view.rs:147-159)."""
-    ch = _chain_match(sql, agg=False)
-    if ch is None or _AGG_CALL_RE.search(ch.select):
+def _left_join_plan(ch: JoinChain) -> IncrementalPlan | None:
+    """LEFT-outer-join SPJ views (r13, VERDICT r12 #2): ``A LEFT JOIN dim``
+    (preserve unmatched facts) is a very common production MV. The same
+    pair-lineage storage carries it — matched output rows key (rid_a,
+    rid_b), null-extended rows (rid_a, NULL) — and because every output
+    row of a LEFT join is a function of ONE A-row and all of B,
+    maintenance is an affected-A-row recompute. That needs usable,
+    distinct qualifiers on BOTH sides and an ON with at least one
+    two-sided equality (the key-superset that makes the affected-A-row set
+    computable; theta conjuncts are fine). OR'd conditions, aggregates and
+    SELECT * route to a full refresh. ``equi_keys`` carries the (col on A,
+    col on B) pairs."""
+    if _has_star(ch.select) or not _qualified(ch):
         return None
-    return IncrementalPlan(
-        "joinN",
-        ch.rels[0],
-        relations=ch.rels,
-    )
+    pairs = _pairs_by_slot(ch).get((0, 1))
+    if not pairs:
+        return None
+    return IncrementalPlan("left_join", ch.rels[0], equi_keys=tuple(pairs), relations=ch.rels)
 
 
-def classify_joinN_agg_sql(sql: str) -> IncrementalPlan | None:
+def _group_key(node: Node) -> bool:
+    """A legal group key: a plain or qualified column, ``date_trunc`` over
+    one with a whitelisted unit literal, or a whitelisted deterministic
+    function of one."""
+    fn, args = _call(node), node.children
+    if fn == "date_trunc":
+        return (
+            len(args) == 2
+            and args[0].name == "Literal"
+            and str(args[0].attr).lower() in _DTRUNC_UNITS
+            and _col(args[1]) is not None
+        )
+    if fn is not None:
+        return fn in _DETERMINISTIC_KEY_FNS and len(args) == 1 and _col(args[0]) is not None
+    return _col(node) is not None
+
+
+def _key_source(expr: Node, quals: tuple) -> tuple | None:
+    """The (slot, column) a group key prunes, (slot, column, unit) for a
+    ``date_trunc`` key, or None — a function key, or a column whose slot
+    is unknown. A bare column belongs to the only slot of a single
+    relation, and to no slot of a join."""
+    if _call(expr) == "date_trunc":
+        parts, unit = expr.children[1].attr, (str(expr.children[0].attr).lower(),)
+    elif _col(expr):
+        parts, unit = expr.attr, ()
+    else:
+        return None
+    q, col = parts if len(parts) == 2 else ("", parts[0])
+    idx = {qual: i for i, qual in enumerate(quals) if qual}
+    slot = idx.get(q.lower()) if q else (0 if len(quals) == 1 else None)
+    return None if slot is None else (slot, col, *unit)
+
+
+def _joinN_agg_plan(ch: JoinChain) -> IncrementalPlan | None:
     """GROUP BY views over an inner-join chain of 1 ≤ n ≤
     MAX_JOIN_RELATIONS relations — n = 1 is the single-table view the
     partial-merge path rejects (AVG/STDDEV/MEDIAN, expression keys such as
@@ -439,204 +393,103 @@ def classify_joinN_agg_sql(sql: str) -> IncrementalPlan | None:
     affected groups from the group-key projection over the n telescoped
     delta arms, exact recompute of only those groups, group-keyed
     eq-delete + append commit — so any whitelisted deterministic aggregate
-    works. Group keys are plain or qualified columns, ``date_trunc`` over
-    one, or a whitelisted deterministic function of one, each projected in
-    the select list (expressions aliased). None → full refresh."""
-    from iceberg_rust_custom_spark.ddl import _split_top_level
-
-    ch = _chain_match(sql, agg=True)
-    if ch is None:
+    works. Every select item is an aliased whitelisted aggregate call or a
+    projected group key (an expression key aliased: it names the storage
+    column the refresh eq-deletes by). None → full refresh."""
+    if not ch.group or "LeftOuter" in ch.joins or not all(_group_key(k) for k in ch.group):
         return None
-    key_exprs = tuple(k.strip() for k in _split_top_level(ch.group))
-    if not key_exprs or not all(_valid_agg_key_expr(k) for k in key_exprs):
-        return None
-    if len({q for q in ch.quals if q}) != sum(1 for q in ch.quals if q):
+    quals = [q for q in ch.quals if q]
+    if len(set(quals)) != len(quals):
         return None  # duplicate qualifiers
-    sel_keys: list[tuple[str, str]] = []
+    key_text = {ch.text(k) for k in ch.group}
+    sel_keys: list[tuple[Node, str]] = []
     agg_seen = False
-    for item in _split_top_level(ch.select):
-        item = item.strip()
-        if _JOINAGG_ITEM_RE.match(item):
+    for item in ch.select:
+        if item.name == "Alias" and _call(item.children[0]) in _RECOMPUTABLE:
             agg_seen = True
             continue
-        parsed = _agg_key_item(item, key_exprs)
-        if parsed is None:
+        expr, name = (item.children[0], item.attr) if item.name == "Alias" else (item, None)
+        if ch.text(expr) not in key_text:
             return None  # derived non-key expression: full refresh
-        sel_keys.append(parsed)
-    if not agg_seen or not sel_keys:
-        return None
-    if {e for e, _ in sel_keys} != set(key_exprs):
+        if name is None:
+            if _col(expr) is None:
+                return None  # expression key must name its storage column
+            name = expr.attr[-1]
+        sel_keys.append((expr, name))
+    if not agg_seen or {ch.text(e) for e, _ in sel_keys} != key_text:
         return None  # every GROUP BY key must be projected (eq-delete key)
     out_names = tuple(n for _, n in sel_keys)
     if len(out_names) != len(set(out_names)):
         return None
-    proj = ", ".join(f"{e} AS {n}" for e, n in sel_keys)
-    pairs = _pairs_by_slot(ch.conds, ch.quals)
+    proj = ", ".join(f"{ch.text(e)} AS {n}" for e, n in sel_keys)
+    pairs = _pairs_by_slot(ch)
     return IncrementalPlan(
         "joinN_agg",
         ch.rels[0],
         group_keys=out_names,
-        probe_sql=f"SELECT {proj} FROM {_chain_from_sql(ch)}",
+        probe_sql=f"SELECT {proj} FROM {_from_sql(ch)}",
         equi_keys=tuple((ij, tuple(p)) for ij, p in sorted(pairs.items())),
         key_sources=tuple(_key_source(e, ch.quals) for e, _ in sel_keys),
         relations=ch.rels,
     )
 
 
-def _key_source(expr: str, quals: tuple) -> tuple | None:
-    """The (slot, column) a group key prunes, (slot, column, unit) for a
-    ``date_trunc`` key, or None — a function key, or a column whose slot
-    is unknown. A bare column belongs to the only slot of a single
-    relation, and to no slot of a join."""
-    dm = _DTRUNC_QUAL_KEY_RE.fullmatch(expr)
-    if dm:
-        q, col, unit = dm.group("q") or "", dm.group("col"), (dm.group("unit").lower(),)
-    elif _KEY_ITEM_RE.fullmatch(expr):
-        q, _, col = expr.rpartition(".")
-        unit = ()
-    else:
-        return None
-    idx = {qual: i for i, qual in enumerate(quals) if qual}
-    slot = idx.get(q.lower()) if q else (0 if len(quals) == 1 else None)
-    return None if slot is None else (slot, col, *unit)
-
-
-# affected groups are RECOMPUTED exactly (not merged), so any
-# deterministic aggregate qualifies — whitelisted to keep surprises out
-_JOINAGG_ITEM_RE = re.compile(
-    r"^\s*(?:sum|count|min|max|avg|mean|median|corr|covar_pop|covar_samp"
-    r"|stddev(?:_pop|_samp)?|var(?:iance|_pop|_samp)?)\s*\(.*\)"
-    r"\s+AS\s+[A-Za-z_]\w*\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_KEY_ITEM_RE = re.compile(
-    r"^(?P<expr>[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?)(?:\s+AS\s+(?P<alias>[A-Za-z_]\w*))?$",
-    re.IGNORECASE,
-)
-# r13: date_trunc over an optionally-qualified column is also a legal
-# join-agg group key — the time-rollup-over-a-join MV. The engine prunes
-# the owning side by the raw-column envelope (see
-# Engine._dtrunc_envelope_predicate); the affected-group recompute is
-# already exact for any deterministic key expression.
-_DTRUNC_QUAL_KEY_RE = re.compile(
-    r"^date_trunc\(\s*'(?P<unit>year|quarter|month|week|day|hour)'\s*,\s*"
-    r"(?:(?P<q>[A-Za-z_]\w*)\.)?(?P<col>[A-Za-z_]\w*)\s*\)$",
-    re.IGNORECASE,
-)
-
-
-def _agg_key_item(item: str, key_exprs: tuple) -> tuple[str, str] | None:
-    """Parse a select-list group-key item of a join-agg view: a plain or
-    qualified column, or a ``date_trunc('unit', [q.]col)`` expression —
-    which must carry an alias (it names the storage column the refresh
-    eq-deletes by). Returns (source expr, output name), or None when the
-    item is not a projection of a GROUP BY key."""
-    km = _AGGREC_KEY_RE.fullmatch(item)
-    if not km or km.group("expr").strip() not in key_exprs:
-        return None
-    expr = km.group("expr").strip()
-    alias = km.group("alias")
-    if alias is None:
-        if not _KEY_ITEM_RE.fullmatch(expr):
-            return None  # expression key must name its storage column
-        alias = expr.split(".")[-1]
-    return expr, alias
-
-
-def _valid_agg_key_expr(k: str) -> bool:
-    return bool(
-        (_KEY_ITEM_RE.fullmatch(k) and " " not in k)
-        or _DTRUNC_QUAL_KEY_RE.fullmatch(k)
-        or _DETERMINISTIC_KEY_FN_RE.fullmatch(k)
-    )
-
-
-def equi_pairs_between(cond: str, qa: str, qb: str) -> list[tuple[str, str]] | None:
-    """The (col on qa, col on qb) pairs from an AND-conjoined condition's
-    two-sided equalities between the two given qualifiers (lower-cased).
-    Shared by the LEFT-join and n-relation classifiers. The caller has already
-    rejected OR / parenthesized conditions."""
-    pairs: list[tuple[str, str]] = []
-    for conjunct in re.split(r"\bAND\b", cond, flags=re.IGNORECASE):
-        m = _EQUI_COND_RE.match(conjunct)
-        if not m:
-            continue  # theta conjunct: equality pairs alone still prune soundly
-        left, right = m.group("l").lower(), m.group("r").lower()
-        if left == qa and right == qb:
-            pairs.append((m.group("lc"), m.group("rc")))
-        elif left == qb and right == qa:
-            pairs.append((m.group("rc"), m.group("lc")))
-        # one-sided conjuncts (a.x = a.y) carry no cross-relation key: skip
-    return pairs or None
-
-
-# a group-key EXPRESSION in the select list must carry an alias (it names
-# the storage column the refresh eq-deletes by); plain columns default
-_AGGREC_KEY_RE = re.compile(
-    r"^(?P<expr>.+?)(?:\s+AS\s+(?P<alias>[A-Za-z_]\w*))?$",
-    re.IGNORECASE | re.DOTALL,
-)
-# non-date_trunc expression keys: a DETERMINISTIC single-column function
-# whitelist (review r13 — the old "any parenthesized expression" rule
-# admitted current_date()/rand() keys, whose affected-group commits would
-# mix two key epochs in storage). They carry no key source: no pruning
-_DETERMINISTIC_KEY_FN_RE = re.compile(
-    r"^(?:upper|lower|trim|ltrim|rtrim|abs|floor|ceil|year|quarter|month"
-    r"|day|dayofmonth|dayofweek|hour|minute|to_date|length)"
-    r"\(\s*(?:[A-Za-z_]\w*\.)?[A-Za-z_]\w*\s*\)$",
-    re.IGNORECASE,
-)
-
-
-def _partial_merge_plan(m: re.Match | None) -> IncrementalPlan | None:
-    """The partial-merge plan of a ``_SHAPE_RE`` match: a single-table
-    GROUP BY over plain-column keys whose every aggregate is a
-    decomposable SUM/COUNT/MIN/MAX, so the delta's partial aggregates
+def _partial_merge_plan(ch: JoinChain) -> IncrementalPlan | None:
+    """The partial-merge plan of an unaliased single-table GROUP BY over
+    plain-column keys whose every other select item is an aliased
+    decomposable SUM/COUNT/MIN/MAX call, so the delta's partial aggregates
     merge into the stored groups. HAVING is out — a merge cannot drop the
     groups that fail it."""
-    from iceberg_rust_custom_spark.ddl import _split_top_level
-
-    if m is None or m.group("group") is None or m.group("having"):
+    if ch.having is not None or not all(_col(k) and len(k.attr) == 1 for k in ch.group):
         return None
-    keys = tuple(k.strip() for k in _split_top_level(m.group("group")))
-    if not all(re.fullmatch(r"[A-Za-z_]\w*", k) for k in keys):
-        return None
+    key_text = {ch.text(k) for k in ch.group}
     merge_ops: dict[str, str] = {}
-    for item in _split_top_level(m.group("select")):
-        item = item.strip()
-        if item in keys:
+    for item in ch.select:
+        if ch.text(item) in key_text:
             continue
-        am = _AGG_RE.match(item)
-        if not am:
+        fn = _call(item.children[0]) if item.name == "Alias" else None
+        if fn not in _MERGEABLE:
             return None
-        merge_ops[am.group("alias")] = _MERGEABLE[am.group("fn").lower()]
+        merge_ops[item.attr] = _MERGEABLE[fn]
     if not merge_ops:
         return None
-    rel = m.group("rel")
-    return IncrementalPlan("aggregate", rel, keys, merge_ops, relations=(rel,))
+    keys = tuple(k.attr[0] for k in ch.group)
+    return IncrementalPlan("aggregate", ch.rels[0], keys, merge_ops, relations=ch.rels)
 
 
-def classify_view_sql(sql: str) -> IncrementalPlan | None:
-    """Shape-match the view SQL; None means "not incrementally
-    maintainable, do a full refresh". Deliberately conservative: no
-    set-ops/windows/subqueries; inner-join chains route to the joinN
-    classifiers and LEFT joins to the left_join one; a single-table
-    GROUP BY takes the partial merge when its aggregates decompose, and
-    the n = 1 affected-group recompute otherwise."""
-    if _FORBIDDEN_RE.search(sql):
-        # inner join, 2..n relations: telescoping delta identity (SPJ) or
-        # affected-group recompute (GROUP BY)
-        plan = classify_joinN_sql(sql) or classify_joinN_agg_sql(sql)
-        if plan is not None:
-            return plan
-        # LEFT-outer SPJ (r13): affected-A-row recompute
-        return classify_left_join_sql(sql)
-    m = _SHAPE_RE.match(sql.strip())
-    if m is not None and m.group("group") is None:
-        if m.group("having"):
-            return None
-        return IncrementalPlan("append", m.group("rel"), relations=(m.group("rel"),))
-    return _partial_merge_plan(m) or classify_joinN_agg_sql(sql)
+def view_shape(spark, sql: str) -> tuple[IncrementalPlan | None, JoinChain | None]:
+    """The view SQL's plan (``classify_view_sql``) and the chain it was
+    read from, so the lineage rewrite and the equality keys reuse one
+    classification."""
+    ch = parse_chain(spark, sql)
+    if ch is None:
+        return None, None
+    if ch.group is not None:
+        plan = None
+        if len(ch.rels) == 1 and ch.aliases[0] is None:
+            plan = _partial_merge_plan(ch)
+        return plan or _joinN_agg_plan(ch), ch
+    if len(ch.rels) == 1:
+        plan = None if ch.aliases[0] else IncrementalPlan("append", ch.rels[0], relations=ch.rels)
+    elif _calls_aggregate(ch.select):
+        plan = None  # a join view's rows are keyed by source-row lineage
+    elif ch.joins == ("LeftOuter",):
+        plan = _left_join_plan(ch)
+    else:
+        plan = IncrementalPlan("joinN", ch.rels[0], relations=ch.rels)
+    return plan, ch
+
+
+def classify_view_sql(spark, sql: str) -> IncrementalPlan | None:
+    """Shape-match the view SQL's parsed plan; None means "not
+    incrementally maintainable, do a full refresh". Deliberately
+    conservative (see ``parse_chain``): an unaliased single table without
+    GROUP BY appends; inner-join chains without aggregate calls take the
+    joinN shapes and a LEFT join left_join; a single-table GROUP BY takes
+    the partial merge when its aggregates decompose, and the n = 1
+    affected-group recompute otherwise. The engine's refresh gate finds a
+    global aggregate the parser cannot (``SELECT count_if(v) FROM t``)."""
+    return view_shape(spark, sql)[0]
 
 
 def history_kind(metadata, last_snapshot_id: int) -> str | None:

@@ -12,12 +12,12 @@ Reference model:
   (datafusion_iceberg/src/materialized_view.rs:29-207) and recomputes only
   when stale (full refresh; incremental is unimplemented in the reference
   too — README.md:40-46).
+* View SQL is read through Spark's parser (views/sql_plan.py).
 """
 
 from __future__ import annotations
 
 import json
-import re
 import time
 import uuid as _uuid
 from dataclasses import dataclass, field
@@ -157,33 +157,7 @@ class MaterializedView:
     metadata: ViewMetadata
 
 
-# --- SQL helpers (reference: iceberg-rust/src/sql.rs:12-21,
-#     datafusion_iceberg/src/sql.rs:12-32) ----------------------------------
-
-_RELATION_RE = re.compile(
-    r"\b(?:FROM|JOIN)\s+([A-Za-z_][\w]*(?:\.[A-Za-z_][\w]*)*)", re.IGNORECASE
-)
-
-
-def find_relations(sql: str) -> list[str]:
-    """Table references in FROM/JOIN position (subset of the reference's
-    sqlparser visitor — sufficient for the view SQL surface we replay)."""
-    out = []
-    for m in _RELATION_RE.finditer(sql):
-        name = m.group(1)
-        if name.lower() not in ("select", "lateral", "unnest", "values") and name not in out:
-            out.append(name)
-    return out
-
-
 def transform_name(name: str) -> str:
-    """a.b.c → a__b__c (legal temp-view name; reference sql.rs:12-32)."""
+    """a.b.c → a__b__c: the temp-view name a relation is registered under
+    and spliced into SQL text as (reference sql.rs:12-32)."""
     return name.replace(".", "__")
-
-
-def transform_relations(sql: str) -> str:
-    def sub(m: re.Match) -> str:
-        kw_and_name = m.group(0)
-        return kw_and_name.replace(m.group(1), transform_name(m.group(1)))
-
-    return _RELATION_RE.sub(sub, sql)

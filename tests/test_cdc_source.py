@@ -314,6 +314,17 @@ def test_table_changes_sql_tvf(spark, engine):
         f"SELECT COUNT(*) AS n FROM table_changes('s.tc', {anchor}, {anchor + 1})"
     )
     assert df2.collect()[0].n == 5
+    # aliased, in a CTE and in an IN subquery, next to a literal that names
+    # the table
+    for q in (
+        f"SELECT COUNT(*) AS n, 'from s.tc' AS s FROM table_changes('s.tc', {anchor}, "
+        f"{anchor + 1}) c WHERE c._change_type = 'delete'",
+        f"WITH ch AS (SELECT * FROM table_changes('s.tc', {anchor}, {anchor + 1})) "
+        "SELECT COUNT(*) AS n, 'from s.tc' AS s FROM ch",
+        "SELECT COUNT(*) AS n, 'from s.tc' AS s FROM s.tc "
+        f"WHERE k IN (SELECT c.k FROM table_changes('s.tc', {anchor + 1}) c)",
+    ):
+        assert tuple(engine.sql(q).first()) == (5, "from s.tc"), q
 
 
 def test_pos_then_eq_kill_emits_once(spark, engine):

@@ -195,6 +195,30 @@ def test_time_travel_sql_syntax(eng, spark):
     ).isoformat()
     q = f"SELECT COUNT(*) AS n FROM ns.tt FOR SYSTEM_TIME AS OF '{ts}'"
     assert eng.sql(q).first().n == 2
+    # aliased, in a CTE and in an IN subquery, next to a literal that names
+    # the table; and Spark's other spellings of the clause
+    for q in (
+        f"SELECT COUNT(*) AS n, 'from ns.tt' AS s FROM ns.tt FOR VERSION AS OF {v1} AS x "
+        "WHERE x.id > 0",
+        f"WITH old AS (SELECT id FROM ns.tt FOR SYSTEM_TIME AS OF '{ts}') "
+        "SELECT COUNT(*) AS n, 'from ns.tt' AS s FROM old",
+        "SELECT COUNT(*) AS n, 'from ns.tt' AS s FROM ns.tt "
+        f"WHERE id IN (SELECT o.id FROM ns.tt VERSION AS OF {v1} o)",
+        f"SELECT COUNT(*) AS n, 'from ns.tt' AS s FROM ns.tt FOR TIMESTAMP AS OF '{ts}'",
+    ):
+        assert tuple(eng.sql(q).first()) == (2, "from ns.tt"), q
+
+
+def test_sql_string_literals_are_not_relations(eng, spark):
+    """A dotted name inside a string literal is text, not a relation: it
+    reaches Spark unchanged, so a filter on it matches."""
+    assert eng.sql("SELECT 'moved from a.b' AS s").first().s == "moved from a.b"
+    eng.sql("CREATE TABLE db.t (id BIGINT, note STRING) STORED AS ICEBERG")
+    eng.load_table("db.t").append(
+        spark.createDataFrame([(1, "shipped from db.t"), (2, "x")], "id long, note string")
+    )
+    q = "SELECT count(*) AS n FROM db.t WHERE note = 'shipped from db.t'"
+    assert eng.sql(q).first().n == 1
 
 
 def test_show_tables_and_describe(eng, spark):

@@ -4,7 +4,7 @@ partial-merge path cannot maintain — non-decomposable aggregates
 date_trunc('month', ts)``, the standard time-rollup MV) and HAVING.
 
 These views are the n = 1 case of the n-relation joinN_agg path
-(``classify_joinN_agg_sql`` / ``Engine._incremental_joinN_agg_refresh``):
+(``_joinN_agg_plan`` / ``Engine._incremental_joinN_agg_refresh``):
 recompute ONLY the affected groups, eq-delete + append commit, label
 ``incremental-agg-recompute``. A ``date_trunc`` key prunes the source by
 the RAW column envelope ``col ∈ [min_bucket, max_bucket + 1 unit]``.
@@ -26,8 +26,9 @@ def eng(spark, tmp_path):
     return Engine(spark, warehouse=str(tmp_path / "wh"))
 
 
-def test_agg_recompute_classifier_shapes():
+def test_agg_recompute_classifier_shapes(spark):
     p = classify_view_sql(
+        spark,
         "SELECT date_trunc('month', ts) AS mo, avg(v) AS av FROM t "
         "GROUP BY date_trunc('month', ts)"
     )
@@ -37,34 +38,35 @@ def test_agg_recompute_classifier_shapes():
     assert p.group_keys == ("mo",) and p.key_sources == ((0, "ts", "month"),)
     assert p.probe_sql == "SELECT date_trunc('month', ts) AS mo FROM t"
     assert p.equi_keys == ()
-    p = classify_view_sql("SELECT g, avg(v) AS av FROM t GROUP BY g")
+    p = classify_view_sql(spark, "SELECT g, avg(v) AS av FROM t GROUP BY g")
     assert p is not None and p.mode == "joinN_agg" and p.relations == ("t",)
     assert p.key_sources == ((0, "g"),)
     # decomposable aggregates stay on the cheaper partial-merge path
-    p = classify_view_sql("SELECT g, sum(v) AS s FROM t GROUP BY g")
+    p = classify_view_sql(spark, "SELECT g, sum(v) AS s FROM t GROUP BY g")
     assert p.mode == "aggregate" and p.relations == ("t",)
     # whitelisted deterministic expression keys classify without pruning
-    p = classify_view_sql("SELECT upper(g) AS ug, avg(v) AS av FROM t GROUP BY upper(g)")
+    p = classify_view_sql(spark, "SELECT upper(g) AS ug, avg(v) AS av FROM t GROUP BY upper(g)")
     assert p is not None and p.mode == "joinN_agg" and p.key_sources == (None,)
     # an aliased single relation takes the same path, qualified keys on slot 0
-    p = classify_view_sql("SELECT x.g, avg(x.v) AS av FROM ns.t x GROUP BY x.g")
+    p = classify_view_sql(spark, "SELECT x.g, avg(x.v) AS av FROM ns.t x GROUP BY x.g")
     assert p is not None and p.mode == "joinN_agg" and p.relations == ("ns.t",)
     assert p.key_sources == ((0, "g"),)
     # ruled out: unaliased expression key, non-whitelisted aggregate, and
     # NONDETERMINISTIC / time-dependent keys (review r13: an
     # affected-group commit under such a key would mix two key epochs)
     assert classify_view_sql(
+        spark,
         "SELECT date_trunc('month', ts), avg(v) AS av FROM t "
         "GROUP BY date_trunc('month', ts)"
     ) is None
-    assert classify_view_sql("SELECT g, collect_list(v) AS l FROM t GROUP BY g") is None
+    assert classify_view_sql(spark, "SELECT g, collect_list(v) AS l FROM t GROUP BY g") is None
     for nondet in [
         "SELECT datediff(current_date(), ts) AS age, avg(v) AS av FROM t "
         "GROUP BY datediff(current_date(), ts)",
         "SELECT cast(rand() * 10 AS int) AS b, avg(v) AS av FROM t "
         "GROUP BY cast(rand() * 10 AS int)",
     ]:
-        assert classify_view_sql(nondet) is None, nondet
+        assert classify_view_sql(spark, nondet) is None, nondet
 
 
 _SQL = (
@@ -240,7 +242,7 @@ def test_having_group_threshold_crossings(eng, spark):
     sql = "SELECT g, count(v) AS n, avg(v) AS av FROM hv.t GROUP BY g HAVING count(v) >= 5"
     from iceberg_rust_custom_spark.views.incremental import classify_view_sql
 
-    assert classify_view_sql(sql).mode == "joinN_agg"
+    assert classify_view_sql(spark, sql).mode == "joinN_agg"
     eng.create_materialized_view("hv.mv", sql)
 
     def check(tag):

@@ -28,7 +28,7 @@ from iceberg_rust_custom_spark.views.incremental import (
     SRC_ROW_ID_C,
     classify_view_sql,
     joinN_equi_keys,
-    joinN_lineage_sql,
+    lineage_sql,
 )
 
 
@@ -37,28 +37,29 @@ def eng(spark, tmp_path):
     return Engine(spark, warehouse=str(tmp_path / "wh"))
 
 
-def test_join3_classifier_and_lineage_shapes():
+def test_join3_classifier_and_lineage_shapes(spark):
     sql = (
         "SELECT l.lv, o.ov, c.cv FROM t.l l JOIN t.o o ON l.ok = o.ok "
         "JOIN t.c c ON o.ck = c.ck WHERE l.lv > 0"
     )
-    p = classify_view_sql(sql)
+    p = classify_view_sql(spark, sql)
     assert p.mode == "joinN" and p.relations == ("t.l", "t.o", "t.c")
-    lsql = joinN_lineage_sql(sql)
+    lsql = lineage_sql(spark, sql)
     assert lsql is not None
     for rid, q in ((SRC_ROW_ID_A, "l"), (SRC_ROW_ID_B, "o"), (SRC_ROW_ID_C, "c")):
         assert f"{q}._row_id AS {rid}" in lsql
     assert lsql.endswith("WHERE l.lv > 0")
-    assert joinN_equi_keys(sql) == {(0, 1): [("ok", "ok")], (1, 2): [("ck", "ck")]}
+    assert joinN_equi_keys(spark, sql) == {(0, 1): [("ok", "ok")], (1, 2): [("ck", "ck")]}
     # second ON condition may carry pairs to EITHER earlier relation
     assert joinN_equi_keys(
+        spark,
         "SELECT a.x, b.y, c.z FROM ta a JOIN tb b ON a.k = b.k "
         "JOIN tc c ON a.j = c.j AND b.m = c.m"
     ) == {(0, 1): [("k", "k")], (0, 2): [("j", "j")], (1, 2): [("m", "m")]}
     # 4 relations classify since the r13 generalization (stale r12 pin)
     four = "SELECT a.x FROM ta a JOIN tb b ON a.k=b.k JOIN tc c ON b.j=c.j JOIN td d ON c.z=d.z"
-    assert classify_view_sql(four).mode == "joinN"
-    assert classify_view_sql(four).relations == ("ta", "tb", "tc", "td")
+    assert classify_view_sql(spark, four).mode == "joinN"
+    assert classify_view_sql(spark, four).relations == ("ta", "tb", "tc", "td")
     # ruled out: self-join, outer join, >MAX_JOIN_RELATIONS, aggregates, GROUP BY
     nine = "SELECT a1.x FROM t1 a1 " + " ".join(
         f"JOIN t{i} a{i} ON a{i-1}.k = a{i}.k" for i in range(2, 10)
@@ -70,13 +71,15 @@ def test_join3_classifier_and_lineage_shapes():
         "SELECT sum(a.x) AS s FROM ta a JOIN tb b ON a.k=b.k JOIN tc c ON b.j=c.j",
         "SELECT a.x FROM ta a JOIN tb b ON a.k=b.k JOIN tc c ON b.j=c.j GROUP BY a.x",
     ]:
-        got = classify_view_sql(bad)
+        got = classify_view_sql(spark, bad)
         assert got is None or got.mode != "joinN", bad
     # SELECT * / missing qualifier: classifies joinN but lineage opts out
-    assert joinN_lineage_sql(
+    assert lineage_sql(
+        spark,
         "SELECT * FROM ta a JOIN tb b ON a.k=b.k JOIN tc c ON b.j=c.j"
     ) is None
-    assert joinN_lineage_sql(
+    assert lineage_sql(
+        spark,
         "SELECT x FROM ns.ta JOIN tb ON ta.k=tb.k JOIN tc ON tb.j=tc.j"
     ) is None
 

@@ -26,7 +26,7 @@ from iceberg_rust_custom_spark.table.scan import plan_delete_files, plan_files
 from iceberg_rust_custom_spark.views.incremental import (
     classify_view_sql,
     joinN_equi_keys,
-    joinN_lineage_sql,
+    lineage_sql,
     src_row_id_cols,
 )
 
@@ -151,8 +151,8 @@ def _mk_tpch(eng, spark, n_li=1500, n_ord=300, n_cust=60, n_supp=27, n_nat=9):
     return customer, orders, lineitem, supplier, nation, region
 
 
-def test_real_q5_classifies_as_six_slot_star():
-    p = classify_view_sql(_Q5_SQL)
+def test_real_q5_classifies_as_six_slot_star(spark):
+    p = classify_view_sql(spark, _Q5_SQL)
     assert p is not None and p.mode == "joinN_agg"
     assert p.relations == (
         "tpch.customer",
@@ -264,11 +264,11 @@ def test_join4_spj_chain_delta_refresh(eng, spark):
         "JOIN c4.b b ON a.fk = b.bk JOIN c4.c c ON b.fk = c.ck "
         "JOIN c4.d d ON c.fk = d.dk WHERE a.av >= 0"
     )
-    p = classify_view_sql(sql)
+    p = classify_view_sql(spark, sql)
     assert p is not None and p.mode == "joinN" and len(p.relations) == 4
-    lsql = joinN_lineage_sql(sql)
+    lsql = lineage_sql(spark, sql)
     assert "__sg_src_row_id_3" in lsql
-    assert joinN_equi_keys(sql) == {
+    assert joinN_equi_keys(spark, sql) == {
         (0, 1): [("fk", "bk")],
         (1, 2): [("fk", "ck")],
         (2, 3): [("fk", "dk")],

@@ -10,6 +10,8 @@ recomputed exactly from affected-key-pruned source scans, and committed
 delta-sized: group-keyed MoR equality deletes + an append — untouched
 groups' storage files are never read or rewritten."""
 
+import dataclasses
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -24,8 +26,9 @@ def eng(spark, tmp_path):
     return Engine(spark, warehouse=str(tmp_path / "wh"))
 
 
-def test_classify_join_agg_shapes():
+def test_classify_join_agg_shapes(spark):
     p = classify_view_sql(
+        spark,
         "SELECT n.nname, sum(o.price) AS revenue FROM t.o o JOIN t.n n "
         "ON o.nk = n.nk WHERE o.price > 0 GROUP BY n.nname"
     )
@@ -36,6 +39,7 @@ def test_classify_join_agg_shapes():
     assert p.probe_sql.startswith("SELECT n.nname AS nname FROM t.o o JOIN t.n n")
     # compound ON keys + aliased key + aggregates the MERGE path can't do
     p = classify_view_sql(
+        spark,
         "SELECT a.g AS gg, avg(b.v) AS m, stddev(b.v) AS s FROM ta a "
         "JOIN tb b ON a.k = b.k AND a.j = b.j GROUP BY a.g"
     )
@@ -44,12 +48,14 @@ def test_classify_join_agg_shapes():
     # HAVING is admitted since r13 — the affected-group recompute path
     # evaluates it (a group failing HAVING is eq-deleted, not re-appended)
     p = classify_view_sql(
+        spark,
         "SELECT a.g, sum(b.v) AS s FROM ta a JOIN tb b ON a.k = b.k GROUP BY a.g HAVING sum(b.v) > 1"
     )
     assert p is not None and p.mode == "joinN_agg"
     # the single-table key grammar holds for every n: a whitelisted
     # deterministic function key classifies, with no key source
     p = classify_view_sql(
+        spark,
         "SELECT upper(a.g) AS g2, sum(b.v) AS s FROM ta a JOIN tb b ON a.k = b.k GROUP BY upper(a.g)"
     )
     assert p is not None and p.mode == "joinN_agg" and p.key_sources == (None,)
@@ -65,11 +71,22 @@ def test_classify_join_agg_shapes():
         "SELECT a.g, sum(b.v) AS s FROM ta a JOIN ta b ON a.k = b.k GROUP BY a.g",
         "SELECT a.g, sum(b.v) AS s FROM ta a JOIN tb b ON a.k = (SELECT max(k) FROM tb) GROUP BY a.g",
     ]:
-        got = classify_view_sql(bad)
+        got = classify_view_sql(spark, bad)
         assert got is None or got.mode != "joinN_agg", bad
+    # 'left' inside a literal is no join type: the plan of the 'east' twin,
+    # whose probe carries the same WHERE
+    sql = (
+        "SELECT a.g, sum(b.v) AS s FROM ta a JOIN tb b ON a.k = b.k "
+        "WHERE a.side = '{}' GROUP BY a.g"
+    )
+    got = classify_view_sql(spark, sql.format("left"))
+    twin = classify_view_sql(spark, sql.format("east"))
+    assert got is not None and twin is not None
+    assert got.probe_sql == twin.probe_sql.replace("'east'", "'left'")
+    assert dataclasses.replace(got, probe_sql=twin.probe_sql) == twin
     # single-table shapes keep their existing classifications
-    assert classify_view_sql("SELECT k, sum(v) AS s FROM t GROUP BY k").mode == "aggregate"
-    assert classify_view_sql("SELECT a.x FROM t1 a JOIN t2 b ON a.k = b.k").mode == "joinN"
+    assert classify_view_sql(spark, "SELECT k, sum(v) AS s FROM t GROUP BY k").mode == "aggregate"
+    assert classify_view_sql(spark, "SELECT a.x FROM t1 a JOIN t2 b ON a.k = b.k").mode == "joinN"
 
 
 _SQL = (
@@ -117,6 +134,34 @@ def _check(eng, tag=""):
         for r in eng.sql(_SQL).collect()
     )
     assert got == want, (tag, got[:3], want[:3])
+
+
+def test_join_agg_mv_with_keyword_literal_refreshes_incrementally(eng, spark):
+    """A join-aggregate view filtering on the literal 'left' refreshes
+    incrementally, and its rows equal a full recompute."""
+
+    def side_rows(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"),
+            (F.col("id") % 4).alias("g"),
+            F.when(F.col("id") % 3 == 0, "left").otherwise("right").alias("side"),
+        )
+
+    def fact_rows(lo, hi):
+        return spark.range(lo, hi).select((F.col("id") % 40).alias("k"), F.col("id").alias("v"))
+
+    eng.create_table("kw.a", side_rows(0, 1).schema).append(side_rows(0, 40))
+    eng.create_table("kw.b", fact_rows(0, 1).schema).append(fact_rows(0, 200))
+    sql = (
+        "SELECT a.g, sum(b.v) AS s, count(*) AS n FROM kw.a a JOIN kw.b b ON a.k = b.k "
+        "WHERE a.side = 'left' GROUP BY a.g"
+    )
+    eng.create_materialized_view("kw.mv", sql)
+    eng.load_table("kw.b").append(fact_rows(200, 230))
+    assert eng.refresh_materialized_view("kw.mv") == "incremental-join-aggregate"
+    got, want = eng.scan_materialized_view("kw.mv"), eng.sql(sql)
+    assert got.count() == 4
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
 
 @pytest.mark.slow
@@ -232,7 +277,7 @@ def test_join3_agg_star_mv_refreshes_incrementally(eng, spark):
         "FROM q5.l l JOIN q5.o o ON l.ok = o.ok JOIN q5.c c ON o.ck = c.ck "
         "WHERE l.amt >= 0 GROUP BY c.seg"
     )
-    p = classify_view_sql(sql)
+    p = classify_view_sql(spark, sql)
     assert p is not None and p.mode == "joinN_agg"
     assert p.group_keys == ("seg",) and p.key_sources == ((2, "seg"),)
     assert dict(p.equi_keys) == {(0, 1): (("ok", "ok"),), (1, 2): (("ck", "ck"),)}
@@ -425,7 +470,7 @@ def test_join_rollup_dtrunc_key_refreshes_incrementally(eng, spark):
         "count(f.k) AS n FROM jr.f f JOIN jr.d d ON f.fk = d.dk "
         "GROUP BY date_trunc('day', f.ts), d.seg"
     )
-    p = classify_view_sql(sql)
+    p = classify_view_sql(spark, sql)
     assert p is not None and p.mode == "joinN_agg"
     assert p.key_sources == ((0, "ts", "day"), (1, "seg"))
     eng.create_materialized_view("jr.mv", sql)
@@ -471,7 +516,7 @@ def test_join_agg_having_threshold_crossings(eng, spark):
         "FROM jag.o o JOIN jag.n n ON o.nk = n.nk "
         "GROUP BY n.nname HAVING count(o.ok) >= 10"
     )
-    assert classify_view_sql(sql).mode == "joinN_agg"
+    assert classify_view_sql(spark, sql).mode == "joinN_agg"
     eng.create_materialized_view("jag.hmv", sql)
 
     def check(tag):

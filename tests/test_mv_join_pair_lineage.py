@@ -20,7 +20,7 @@ from iceberg_rust_custom_spark.views.incremental import (
     SRC_ROW_ID_A,
     SRC_ROW_ID_B,
     joinN_equi_keys,
-    joinN_lineage_sql,
+    lineage_sql,
 )
 
 
@@ -56,20 +56,41 @@ def _mv_rows(eng, name):
     return sorted((r.ak, r.bk) for r in eng.scan_materialized_view(name).collect())
 
 
-def test_joinN_lineage_sql_two_relation_shapes():
-    assert joinN_lineage_sql("SELECT a.x, b.y FROM t1 a JOIN t2 b ON a.k = b.k") == (
+def test_joinN_lineage_sql_two_relation_shapes(spark):
+    assert lineage_sql(spark, "SELECT a.x, b.y FROM t1 a JOIN t2 b ON a.k = b.k") == (
         f"SELECT a.x, b.y, a._row_id AS {SRC_ROW_ID_A}, b._row_id AS {SRC_ROW_ID_B} "
         "FROM t1 a JOIN t2 b ON a.k = b.k"
     )
+    # a predicate's text reaches back to its operand: WHERE and select
+    # items are sliced whole
+    assert lineage_sql(
+        spark, "SELECT a.x IS NULL AS n FROM t1 a JOIN t2 b ON a.k = b.k WHERE b.y IS NULL"
+    ) == (
+        f"SELECT a.x IS NULL AS n, a._row_id AS {SRC_ROW_ID_A}, b._row_id AS {SRC_ROW_ID_B} "
+        "FROM t1 a JOIN t2 b ON a.k = b.k WHERE b.y IS NULL"
+    )
+    # a parenthesized operand's span stops inside its parentheses: the
+    # slice widens to them (a ")" inside a literal does not count)
+    for where in ("(b.y + 1) IS NULL", "(a.v * 2) BETWEEN 1 AND 9", "((b.y || ')')) IN ('1)')"):
+        assert lineage_sql(
+            spark, f"SELECT a.x, (b.y) FROM t1 a JOIN t2 b ON (a.k) = b.k WHERE {where}"
+        ) == (
+            f"SELECT a.x, (b.y), a._row_id AS {SRC_ROW_ID_A}, b._row_id AS {SRC_ROW_ID_B} "
+            f"FROM t1 a JOIN t2 b ON (a.k) = b.k WHERE {where}"
+        )
     # no aliases: undotted relation names qualify
-    got = joinN_lineage_sql("SELECT x, y FROM t1 JOIN t2 ON t1.k = t2.k WHERE x > 1")
+    got = lineage_sql(spark, "SELECT x, y FROM t1 JOIN t2 ON t1.k = t2.k WHERE x > 1")
     assert got is not None and f"t1._row_id AS {SRC_ROW_ID_A}" in got and got.endswith("WHERE x > 1")
     # ruled out: SELECT *, aggregates, dotted rel without alias, self-join
-    assert joinN_lineage_sql("SELECT * FROM t1 a JOIN t2 b ON a.k = b.k") is None
-    assert joinN_lineage_sql("SELECT sum(a.x) AS s FROM t1 a JOIN t2 b ON a.k = b.k") is None
-    assert joinN_lineage_sql("SELECT x FROM ns.t1 JOIN t2 ON t1.k = t2.k") is None
-    assert joinN_lineage_sql("SELECT a.x FROM t1 a JOIN t1 b ON a.k = b.k") is None
-    assert joinN_lineage_sql("SELECT a.x FROM t1 a LEFT JOIN t2 b ON a.k = b.k") is None
+    assert lineage_sql(spark, "SELECT * FROM t1 a JOIN t2 b ON a.k = b.k") is None
+    assert lineage_sql(spark, "SELECT sum(a.x) AS s FROM t1 a JOIN t2 b ON a.k = b.k") is None
+    assert lineage_sql(spark, "SELECT x FROM ns.t1 JOIN t2 ON t1.k = t2.k") is None
+    assert lineage_sql(spark, "SELECT a.x FROM t1 a JOIN t1 b ON a.k = b.k") is None
+    # one rewrite for every join shape: a LEFT join keeps its join type
+    assert lineage_sql(spark, "SELECT a.x FROM t1 a LEFT JOIN t2 b ON a.k = b.k") == (
+        f"SELECT a.x, a._row_id AS {SRC_ROW_ID_A}, b._row_id AS {SRC_ROW_ID_B} "
+        "FROM t1 a LEFT JOIN t2 b ON a.k = b.k"
+    )
 
 
 def test_join_mv_storage_has_pair_columns_and_nonnull_rids(eng, spark):
@@ -323,8 +344,8 @@ def test_unhealable_lineage_stamps_unavailable_and_never_pingpongs(eng, spark, m
         "uh.mv", "SELECT a.ak, b.bk FROM uh.a a JOIN uh.b b ON a.k = b.k"
     )
     # lineage becomes underivable from now on
-    monkeypatch.setattr(Engine, "_sql_with_join_lineage", lambda self, sql: None)
-    monkeypatch.setattr(Engine, "_mv_lineage_join_sql", lambda self, sql, plan=None: None)
+    monkeypatch.setattr(Engine, "_sql_with_lineage", lambda self, sql: None)
+    monkeypatch.setattr(Engine, "_mv_lineage_sql", lambda self, sql: None)
     b.append(spark.createDataFrame([(100, "b100")], "k long, bk string"))
     assert eng.refresh_materialized_view("uh.mv", mode="full") == "full"
     storage = eng.load_table("uh.mv__storage")
@@ -402,9 +423,9 @@ def test_join_mv_storage_is_changelog_followable(eng, spark):
     assert want.exceptAll(feed).count() == 0
 
 
-def test_joinN_equi_keys_two_relation_parsing():
+def test_joinN_equi_keys_two_relation_parsing(spark):
     def keys(sql):
-        got = joinN_equi_keys(sql)
+        got = joinN_equi_keys(spark, sql)
         return None if got is None else got[(0, 1)]
 
     assert keys("SELECT a.x FROM t1 a JOIN t2 b ON a.k = b.fk") == [("k", "fk")]
@@ -424,9 +445,15 @@ def test_joinN_equi_keys_two_relation_parsing():
     ) == [("k", "k")]
     # pure theta: no pruning keys
     assert keys("SELECT a.x FROM t1 a JOIN t2 b ON a.k < b.k") is None
-    # OR / parenthesized conditions could join outside any conjunct's set
+    # an OR'd condition could join outside any conjunct's set, with or
+    # without parentheses; parentheses alone only group the parsed plan
     assert keys("SELECT a.x FROM t1 a JOIN t2 b ON a.k = b.k OR a.j = b.j") is None
-    assert keys("SELECT a.x FROM t1 a JOIN t2 b ON (a.k = b.k)") is None
+    assert keys("SELECT a.x FROM t1 a JOIN t2 b ON a.j = b.j AND (a.k = b.k OR a.m = b.m)") is None
+    assert keys("SELECT a.x FROM t1 a JOIN t2 b ON (a.k = b.k)") == [("k", "k")]
+    # a word inside a string literal is no keyword or column
+    assert keys("SELECT a.x FROM t1 a JOIN t2 b ON a.k = b.k AND a.s <> 'a.k = b.j or'") == [
+        ("k", "k")
+    ]
     # one-sided equalities carry no cross-relation key
     assert keys("SELECT a.x FROM t1 a JOIN t2 b ON a.k = a.j") is None
 

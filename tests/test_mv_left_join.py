@@ -20,7 +20,7 @@ from iceberg_rust_custom_spark.views.incremental import (
     SRC_ROW_ID_A,
     SRC_ROW_ID_B,
     classify_view_sql,
-    left_join_lineage_sql,
+    lineage_sql,
 )
 
 
@@ -29,18 +29,19 @@ def eng(spark, tmp_path):
     return Engine(spark, warehouse=str(tmp_path / "wh"))
 
 
-def test_left_join_classifier_and_lineage_shapes():
+def test_left_join_classifier_and_lineage_shapes(spark):
     sql = "SELECT a.k, a.v, b.w FROM t a LEFT JOIN u b ON a.fk = b.bk WHERE a.v >= 0"
-    p = classify_view_sql(sql)
+    p = classify_view_sql(spark, sql)
     assert p is not None and p.mode == "left_join"
     assert p.relations == ("t", "u")
     assert p.equi_keys == (("fk", "bk"),)
-    lsql = left_join_lineage_sql(sql)
+    lsql = lineage_sql(spark, sql)
     assert f"a._row_id AS {SRC_ROW_ID_A}" in lsql
     assert f"b._row_id AS {SRC_ROW_ID_B}" in lsql
     assert "LEFT JOIN" in lsql and lsql.endswith("WHERE a.v >= 0")
     # LEFT OUTER spelling and theta extras both classify
     assert classify_view_sql(
+        spark,
         "SELECT a.k, b.w FROM t a LEFT OUTER JOIN u b ON a.fk = b.bk AND a.v < b.w"
     ).mode == "left_join"
     # ruled out: OR'd ON, theta-only ON, RIGHT/FULL, GROUP BY, 3 rels, *
@@ -53,7 +54,7 @@ def test_left_join_classifier_and_lineage_shapes():
         "SELECT a.k, b.w, c.z FROM t a LEFT JOIN u b ON a.fk = b.bk JOIN s c ON b.x = c.z",
         "SELECT * FROM t a LEFT JOIN u b ON a.fk = b.bk",
     ]:
-        got = classify_view_sql(bad)
+        got = classify_view_sql(spark, bad)
         assert got is None or got.mode != "left_join", bad
 
 

@@ -34,12 +34,14 @@ def test_current_timestamp_filter_view_matches_definition_after_time_passes(
     refresh holds exactly what the definition returns."""
     eng = Engine(spark, warehouse=str(tmp_path / "wh"))
     sql = "SELECT id, ts FROM d.t WHERE ts > current_timestamp()"
-    assert classify_view_sql(sql).mode == "append"
+    assert classify_view_sql(spark, sql).mode == "append"
     t = eng.create_table("d.t", spark.createDataFrame([], "id long, ts timestamp").schema)
     soon = _utcnow() + dt.timedelta(seconds=12)
     t.append(spark.createDataFrame([(1, soon)], "id long, ts timestamp"))
     eng.create_materialized_view("d.mv", sql)
     assert [r.id for r in eng.scan_materialized_view("d.mv").collect()] == [1]
+    # always refreshed in full: the storage carries no row-lineage column
+    assert eng.load_table("d.mv__storage").scan().columns == ["id", "ts"]
     time.sleep(max(0.0, (soon - _utcnow()).total_seconds()) + 1)
     t.append(
         spark.createDataFrame(
@@ -138,7 +140,7 @@ def tq(spark, tmp_path_factory):
 def test_time_dependent_views_refresh_full_in_every_mode(tq, spark, i):
     eng, t = tq
     mode, sql = _CASES[i]
-    assert classify_view_sql(sql).mode == mode
+    assert classify_view_sql(spark, sql).mode == mode
     eng.create_materialized_view(f"tq.mv{i}", sql)
     t.append(
         spark.createDataFrame(

@@ -88,6 +88,18 @@ def test_local_rows_df_is_jvm_local_and_value_exact(spark):
 def test_local_rows_df_empty_and_ddl_schema(spark):
     df = local_rows_df(spark, [], "a string, b long")
     assert df.count() == 0 and df.columns == ["a", "b"]
+    # no rows: the typed empty relation keeps nullability, timestamps and
+    # variants exactly, as a JVM-local plan
+    st = T.StructType(
+        [
+            T.StructField("k", T.LongType(), False),
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("v", T.VariantType()),
+        ]
+    )
+    df = local_rows_df(spark, [], st)
+    assert df.schema == st and df.collect() == []
+    assert "LocalRelation <empty>" in df._jdf.queryExecution().analyzed().toString()
 
 
 def test_local_rows_df_reads_mappings_by_name_and_rejects_short_rows(spark):

@@ -109,6 +109,30 @@ def test_incremental_append_mode(engine, spark):
     }
 
 
+def test_parenthesized_predicate_operand_views_refresh_incrementally(engine, spark):
+    """A WHERE whose top predicate has a parenthesized left operand — its
+    parse span stops inside the parentheses — still gives a balanced
+    lineage rewrite and affected-group probe: the refreshes stay
+    incremental and match the definition."""
+    t = engine.create_table("test.orders", ORDERS_SCHEMA)
+    t.append(spark.createDataFrame(BATCH1, ORDERS_SCHEMA.spark_schema()))
+    views = {
+        "test.null_mv": ("SELECT id, amount FROM test.orders WHERE (amount + 1) IS NOT NULL",
+                         "incremental-append"),
+        "test.between_mv": ("SELECT id FROM test.orders WHERE (amount * 2) BETWEEN 1 AND 4",
+                            "incremental-append"),
+        "test.avg_mv": ("SELECT customer_id, AVG(amount) AS a FROM test.orders"
+                        " WHERE (amount * 2) BETWEEN 1 AND 4 GROUP BY customer_id",
+                        "incremental-agg-recompute"),
+    }
+    for name, (sql, _) in views.items():
+        engine.create_materialized_view(name, sql)
+    t.append(spark.createDataFrame(BATCH2, ORDERS_SCHEMA.spark_schema()))
+    for name, (sql, label) in views.items():
+        assert engine.refresh_materialized_view(name) == label
+        assert _rows(engine, name) == {tuple(r) for r in engine.sql(sql).collect()}
+
+
 def test_incremental_aggregate_min_max_count(engine, spark):
     t = engine.create_table("test.orders", ORDERS_SCHEMA)
     t.append(spark.createDataFrame(BATCH1, ORDERS_SCHEMA.spark_schema()))
@@ -172,22 +196,31 @@ def test_forced_full_mode(engine, spark):
     assert _rows(engine, "test.fmv") == {(3, 3), (5, 2), (6, 3), (8, 2)}
 
 
-def test_classifier_shapes():
+def test_classifier_shapes(spark):
     from iceberg_rust_custom_spark.views.incremental import classify_view_sql
 
-    p = classify_view_sql("SELECT a, b FROM ns.t WHERE a > 1")
+    p = classify_view_sql(spark, "SELECT a, b FROM ns.t WHERE a > 1")
     assert p.mode == "append" and p.relation == "ns.t"
-    p = classify_view_sql("SELECT k, SUM(v) AS s, COUNT(*) AS n FROM ns.t GROUP BY k")
+    p = classify_view_sql(spark, "SELECT k, SUM(v) AS s, COUNT(*) AS n FROM ns.t GROUP BY k")
     assert p.mode == "aggregate" and p.group_keys == ("k",)
     assert p.merge_ops == {"s": "sum", "n": "sum"}
     # AVG routes to affected-group recompute since r13 (stale r12 pin)
-    assert classify_view_sql("SELECT k, AVG(v) AS a FROM ns.t GROUP BY k").mode == "joinN_agg"
-    p = classify_view_sql("SELECT a FROM t1 JOIN t2 ON t1.k = t2.k")
+    assert classify_view_sql(spark, "SELECT k, AVG(v) AS a FROM ns.t GROUP BY k").mode == "joinN_agg"
+    p = classify_view_sql(spark, "SELECT a FROM t1 JOIN t2 ON t1.k = t2.k")
     assert p.mode == "joinN" and p.relations == ("t1", "t2")
-    assert classify_view_sql("SELECT DISTINCT a FROM t") is None
-    assert classify_view_sql("SELECT k, SUM(v) AS s FROM t GROUP BY k ORDER BY s") is None
+    assert classify_view_sql(spark, "SELECT DISTINCT a FROM t") is None
+    assert classify_view_sql(spark, "SELECT k, SUM(v) AS s FROM t GROUP BY k ORDER BY s") is None
     # unaliased expression key still cannot name its storage column
-    assert classify_view_sql("SELECT upper(k), SUM(v) AS s FROM t GROUP BY upper(k)") is None
+    assert classify_view_sql(spark, "SELECT upper(k), SUM(v) AS s FROM t GROUP BY upper(k)") is None
+    # a word inside a string literal is no keyword: each view gets the plan
+    # of its literal-free twin
+    for word in ("order by", "distinct"):
+        for sql in (
+            "SELECT a, b FROM ns.t WHERE note = '{}'",
+            "SELECT k, SUM(v) AS s FROM ns.t WHERE note <> '{}' GROUP BY k",
+        ):
+            got = classify_view_sql(spark, sql.format(word))
+            assert got is not None and got == classify_view_sql(spark, sql.format("east")), sql
 
 
 @pytest.mark.slow
@@ -244,30 +277,65 @@ def test_incremental_two_table_join_view_refresh(engine, spark):
     assert _rows(engine, "test.join_mv") == {(10, "ann", 5), (11, "bob", 7), (12, "cal", 9)}
 
 
-def test_classify_join_view_shapes():
+def test_classify_join_view_shapes(spark):
     from iceberg_rust_custom_spark.views.incremental import classify_view_sql
 
     p = classify_view_sql(
+        spark,
         "SELECT a.x, b.y FROM ns.a a JOIN ns.b b ON a.k = b.k WHERE a.x > 0"
     )
     assert p is not None and p.mode == "joinN" and p.relations == ("ns.a", "ns.b")
     # rejected: SELECT * outer join (no lineage columns), self-join
-    assert classify_view_sql("SELECT * FROM ns.a a LEFT JOIN ns.b b ON a.k = b.k") is None
-    assert classify_view_sql("SELECT a1.x FROM ns.a a1 JOIN ns.a a2 ON a1.k = a2.k") is None
+    assert classify_view_sql(spark, "SELECT * FROM ns.a a LEFT JOIN ns.b b ON a.k = b.k") is None
+    assert classify_view_sql(spark, "SELECT a1.x FROM ns.a a1 JOIN ns.a a2 ON a1.k = a2.k") is None
     # four relations classify since the r13 generalization (stale r12 pin)
     p4 = classify_view_sql(
+        spark,
         "SELECT a.x FROM ns.a a JOIN ns.b b ON a.k = b.k "
         "JOIN ns.c c ON b.j = c.j JOIN ns.d d ON c.z = d.z"
     )
     assert p4 is not None and p4.mode == "joinN" and len(p4.relations) == 4
     # 2-table aggregate join → joinN_agg; 3 relations → joinN
-    p = classify_view_sql("SELECT b.g, SUM(a.x) AS s FROM ns.a a JOIN ns.b b ON a.k = b.k GROUP BY b.g")
+    p = classify_view_sql(spark, "SELECT b.g, SUM(a.x) AS s FROM ns.a a JOIN ns.b b ON a.k = b.k GROUP BY b.g")
     assert p is not None and p.mode == "joinN_agg"
-    assert classify_view_sql("SELECT SUM(a.x) AS s FROM ns.a a JOIN ns.b b ON a.k = b.k") is None
+    assert classify_view_sql(spark, "SELECT SUM(a.x) AS s FROM ns.a a JOIN ns.b b ON a.k = b.k") is None
     p = classify_view_sql(
+        spark,
         "SELECT a.x FROM ns.a a JOIN ns.b b ON a.k = b.k JOIN ns.c c ON b.j = c.j"
     )
     assert p is not None and p.mode == "joinN" and p.relations[2] == "ns.c"
+    # 'full' inside a literal is no join type: same plan as the twin
+    sql = "SELECT a.x, b.y FROM ns.a a JOIN ns.b b ON a.k = b.k WHERE a.note <> '{}'"
+    got = classify_view_sql(spark, sql.format("full"))
+    assert got is not None and got == classify_view_sql(spark, sql.format("east"))
+
+
+def test_global_aggregate_view_refreshes_to_its_definition(engine, spark):
+    """A single-table aggregate without GROUP BY is one row over the whole
+    source. The parser reads it as a select-project-filter view, so an
+    append refresh stored one more aggregate row per delta; the refresh
+    gate sees the Aggregate in the analyzed plan and refreshes in full —
+    for an aggregate outside the classifier's whitelists (``count_if``,
+    ``bool_and``) too. The same check at creation keeps the row-lineage
+    column out of the storage."""
+    from iceberg_rust_custom_spark.views.incremental import classify_view_sql
+
+    t = engine.create_table("test.ga", ORDERS_SCHEMA)
+    t.append(spark.createDataFrame(BATCH1, ORDERS_SCHEMA.spark_schema()))
+    views = {
+        "test.ga_mv": "SELECT COUNT(*) AS n, SUM(amount) AS q FROM test.ga",
+        "test.ga_if_mv": "SELECT count_if(amount > 1) AS c, bool_and(amount > 0) AS b FROM test.ga",
+    }
+    for name, sql in views.items():
+        assert classify_view_sql(spark, sql).mode == "append"
+        engine.create_materialized_view(name, sql)
+        # never maintained row by row, so its storage carries no lineage
+        storage_cols = engine.load_table(name + "__storage").scan().columns
+        assert not any(c.startswith("__sg_src_row_id") for c in storage_cols)
+    t.append(spark.createDataFrame(BATCH2, ORDERS_SCHEMA.spark_schema()))
+    for name, sql in views.items():
+        assert engine.refresh_materialized_view(name) == "full"
+        assert _rows(engine, name) == {tuple(r) for r in engine.sql(sql).collect()}
 
 
 def test_multi_dialect_view_representations(engine, spark):

@@ -23,7 +23,9 @@ outside the first four:
   ``(0, c)``, ``("dtrunc", c, u)`` → ``(0, c, u)``, ``("opaque",)`` →
   ``None``;
 * ``newly-classified`` — None before, a plan after;
-* ``other`` — anything else, including a plan that became None."""
+* ``other`` — anything else, including a plan that became None.
+
+A classifier that reads Spark's parsed plan runs under a local session."""
 
 from __future__ import annotations
 
@@ -66,11 +68,20 @@ def _literals(root: str) -> list[str]:
 
 
 def classify(root: str) -> None:
+    import inspect
+
     from iceberg_rust_custom_spark.views.incremental import classify_view_sql
 
+    # a classifier that reads Spark's parsed plan takes the session first;
+    # an older text-only one takes the SQL alone
+    session = ()
+    if "spark" in inspect.signature(classify_view_sql).parameters:
+        from iceberg_rust_custom_spark.session import get_spark
+
+        session = (get_spark("view_classes", shuffle_partitions=1),)
     for sql in _literals(root):
         try:
-            plan = classify_view_sql(sql)
+            plan = classify_view_sql(*session, sql)
         except Exception as e:  # a literal that is not a view SQL
             plan = {"error": type(e).__name__}
         if dataclasses.is_dataclass(plan):
