@@ -164,14 +164,14 @@ class GlueCatalog(Catalog):
     def load(self, identifier: Identifier) -> tuple[str, str]:
         t = self._get(identifier)
         if t is None:
-            raise KeyError(f"{identifier} not found")
+            raise FileNotFoundError(f"no such tabular: {identifier}")
         params = t.get("Parameters", {})
         return params[_METADATA_LOCATION], params.get(_KIND, "table")
 
     def swap(self, identifier: Identifier, expected_location: str, new_location: str) -> None:
         t = self._get(identifier)
         if t is None:
-            raise KeyError(f"{identifier} not found")
+            raise FileNotFoundError(f"no such tabular: {identifier}")
         params = dict(t.get("Parameters", {}))
         if params.get(_METADATA_LOCATION) != expected_location:
             raise CommitFailed(

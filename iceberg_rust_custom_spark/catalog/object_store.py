@@ -4,12 +4,13 @@ The reference commits through ``object_store``'s ``copy_if_not_exists`` on
 any backend (iceberg-file-catalog/src/lib.rs:306-361). The equivalent
 primitive here is ``put_if_absent``: whoever creates the next pointer
 version first wins; the loser gets ``CommitFailed`` and retries on fresh
-metadata. ``ObjectStoreCatalog`` implements the same pointer protocol as
-FileCatalog over any ``ObjectStore``, so an S3/GCS backend (conditional PUT
-``If-None-Match: *``) is a subclass + config change, not a redesign.
+metadata. ``ObjectStoreCatalog`` is the one implementation of that pointer
+protocol; the local warehouse (``FileCatalog``), the in-memory double and
+S3 (conditional PUT ``If-None-Match: *``) differ only in their store.
 
 ``InMemoryObjectStore`` is the conditional-put test double (S3-semantics:
-atomic create-if-absent, last-write-loses on conflict).
+atomic create-if-absent, last-write-loses on conflict). Every store raises
+``KeyError`` from ``get`` for a missing key.
 """
 
 from __future__ import annotations
@@ -97,18 +98,30 @@ class LocalFSObjectStore(ObjectStore):
             os.unlink(tmp)
 
     def get(self, key: str) -> bytes:
-        with open(self._path(key), "rb") as f:
-            return f.read()
+        try:
+            with open(self._path(key), "rb") as f:
+                return f.read()
+        except FileNotFoundError:
+            raise KeyError(key) from None
 
     def list(self, prefix: str) -> list[str]:
-        base = self._path(prefix)
+        # Scan only the directory the prefix names: keep the entries that
+        # start with its last component, and take matching subdirectories
+        # whole (everything below them starts with the prefix).
+        head, _, stem = prefix.rpartition("/")
+        try:
+            entries = os.scandir(self._path(head))
+        except (FileNotFoundError, NotADirectoryError):
+            return []
         out = []
-        for dirpath, _dirs, files in os.walk(os.path.dirname(base) or self.root):
-            for fname in files:
-                full = os.path.join(dirpath, fname)
-                key = os.path.relpath(full, self.root)
-                if key.startswith(prefix):
-                    out.append(key)
+        with entries:
+            for e in entries:
+                if e.name.startswith(stem):
+                    key = f"{head}/{e.name}" if head else e.name
+                    if e.is_dir():
+                        out.extend(self.list(key + "/"))
+                    else:
+                        out.append(key)
         return sorted(out)
 
     def delete_prefix(self, prefix: str) -> None:
@@ -117,9 +130,11 @@ class LocalFSObjectStore(ObjectStore):
 
 
 class ObjectStoreCatalog(Catalog):
-    """FileCatalog's pointer protocol over any ObjectStore: each commit
-    creates ``<ns>/<name>/pointer.v{N}.json`` with put-if-absent; version
-    N+1's creator wins the CAS race (lib.rs:306-361 analogue)."""
+    """The pointer protocol over any ObjectStore: each commit creates
+    ``_catalog/<ns>/<name>/pointer.v{N}.json`` with put-if-absent; version
+    N+1's creator wins the CAS race (lib.rs:306-361 analogue). Namespace
+    properties are ``_catalog/<ns>/.nsprops.v{N}.json`` under the same CAS;
+    v0 also marks an empty namespace as existing."""
 
     def __init__(self, store: ObjectStore, warehouse: str | None = None):
         self.store = store
@@ -131,10 +146,20 @@ class ObjectStoreCatalog(Catalog):
     def _ns_prefix(self, namespace: tuple) -> str:
         return "/".join(("_catalog", *namespace)) + "/"
 
+    def _newest(self, prefix: str) -> tuple[int, dict | None]:
+        """(N, object) of the highest ``<prefix>{N}.json`` key; (-1, None)
+        when there is none, also when it is deleted between list and get."""
+        keys = [k for k in self.store.list(prefix) if k.endswith(".json")]
+        if keys:
+            n = max(int(k[len(prefix) : -len(".json")]) for k in keys)
+            try:
+                data = self.store.get(f"{prefix}{n}.json")
+            except KeyError:
+                return -1, None  # deleted between the listing and the read
+            return n, json.loads(data)
+        return -1, None
+
     def create_namespace(self, namespace: tuple, properties: dict | None = None) -> None:
-        # namespaces are implicit prefixes on object stores; an explicitly
-        # created one gets a (versioned, CAS'd) marker object so it exists
-        # even while empty — the properties live in the same object
         try:
             self.store.put_if_absent(
                 self._ns_prefix(namespace) + ".nsprops.v0.json",
@@ -144,41 +169,28 @@ class ObjectStoreCatalog(Catalog):
             if properties:
                 self.update_namespace(namespace, updates=properties)
 
-    def _ns_prop_versions(self, namespace: tuple) -> list[int]:
-        prefix = self._ns_prefix(namespace) + ".nsprops.v"
-        return sorted(
-            int(k[len(prefix) : -len(".json")])
-            for k in self.store.list(prefix)
-            if k.endswith(".json")
-        )
-
     def namespace_exists(self, namespace: tuple) -> bool:
         return bool(self.store.list(self._ns_prefix(namespace)))
 
     def load_namespace(self, namespace: tuple) -> dict:
-        versions = self._ns_prop_versions(namespace)
-        if versions:
-            return json.loads(
-                self.store.get(self._ns_prefix(namespace) + f".nsprops.v{versions[-1]}.json")
-            )
-        if not self.namespace_exists(namespace):
+        _, props = self._newest(self._ns_prefix(namespace) + ".nsprops.v")
+        if props is None and not self.namespace_exists(namespace):
             raise FileNotFoundError(f"no such namespace: {'.'.join(namespace)}")
-        return {}  # implicit namespace, no properties set yet
+        return props or {}  # {}: implicit namespace, no properties set yet
 
     def update_namespace(
         self, namespace: tuple, updates: dict | None = None, removals: list | None = None
     ) -> dict:
-        # versioned put-if-absent: same optimistic CAS as pointer commits
-        for _ in range(10):
-            versions = self._ns_prop_versions(namespace)
-            props = self.load_namespace(namespace)
+        # versioned put-if-absent: the same optimistic CAS as pointer commits
+        for _ in range(16):
+            n, props = self._newest(self._ns_prefix(namespace) + ".nsprops.v")
+            props = self.load_namespace(namespace) if props is None else props
             for k in removals or ():
                 props.pop(k, None)
             props.update(updates or {})
-            nxt = (versions[-1] + 1) if versions else 0
             try:
                 self.store.put_if_absent(
-                    self._ns_prefix(namespace) + f".nsprops.v{nxt}.json",
+                    self._ns_prefix(namespace) + f".nsprops.v{n + 1}.json",
                     json.dumps(props).encode(),
                 )
                 return props
@@ -190,7 +202,7 @@ class ObjectStoreCatalog(Catalog):
         if not self.namespace_exists(namespace):
             raise FileNotFoundError(f"no such namespace: {'.'.join(namespace)}")
         self._ensure_namespace_empty(namespace)
-        self.store.delete_prefix(self._ns_prefix(namespace))
+        self.store.delete_prefix(self._ns_prefix(namespace) + ".nsprops.v")
 
     def list_namespaces(self) -> list[tuple]:
         seen = set()
@@ -203,7 +215,7 @@ class ObjectStoreCatalog(Catalog):
         return sorted(p for p in seen if p)
 
     def list_tabulars(self, namespace: tuple) -> list[Identifier]:
-        prefix = "/".join(("_catalog", *namespace)) + "/"
+        prefix = self._ns_prefix(namespace)
         names = set()
         for key in self.store.list(prefix):
             rest = key[len(prefix) :].split("/")
@@ -214,11 +226,12 @@ class ObjectStoreCatalog(Catalog):
     def tabular_exists(self, identifier: Identifier) -> bool:
         return bool(self.store.list(self._prefix(identifier) + "pointer.v"))
 
-    def _versions(self, identifier: Identifier) -> list[int]:
-        prefix = self._prefix(identifier) + "pointer.v"
-        return sorted(
-            int(k[len(prefix) : -len(".json")]) for k in self.store.list(prefix) if k.endswith(".json")
-        )
+    def _pointer(self, identifier: Identifier) -> tuple[int, str, str]:
+        """(N, metadata location, kind) of the newest pointer."""
+        n, payload = self._newest(self._prefix(identifier) + "pointer.v")
+        if payload is None:
+            raise FileNotFoundError(f"no such tabular: {identifier}")
+        return n, payload["metadata_location"], payload.get("kind", "table")
 
     def register(self, identifier: Identifier, metadata_location: str, kind: str = "table") -> None:
         payload = json.dumps({"metadata_location": metadata_location, "kind": kind}).encode()
@@ -228,33 +241,26 @@ class ObjectStoreCatalog(Catalog):
             raise CommitFailed(f"{identifier} already exists") from None
 
     def load(self, identifier: Identifier) -> tuple[str, str]:
-        versions = self._versions(identifier)
-        if not versions:
-            raise FileNotFoundError(f"no such tabular: {identifier}")
-        payload = json.loads(self.store.get(self._prefix(identifier) + f"pointer.v{versions[-1]}.json"))
-        return payload["metadata_location"], payload.get("kind", "table")
+        return self._pointer(identifier)[1:]
 
     def swap(self, identifier: Identifier, expected_location: str, new_location: str) -> None:
-        versions = self._versions(identifier)
-        if not versions:
-            raise FileNotFoundError(f"no such tabular: {identifier}")
-        current, kind = self.load(identifier)
+        # one listing: a concurrent writer that takes v{N+1} after it
+        # makes the put-if-absent below fail
+        n, current, kind = self._pointer(identifier)
         if current != expected_location:
             raise CommitFailed(f"{identifier}: expected {expected_location}, found {current}")
-        payload = json.dumps({"metadata_location": new_location, "kind": kind}).encode()
+        new = json.dumps({"metadata_location": new_location, "kind": kind}).encode()
         try:
-            self.store.put_if_absent(
-                self._prefix(identifier) + f"pointer.v{versions[-1] + 1}.json", payload
-            )
+            self.store.put_if_absent(self._prefix(identifier) + f"pointer.v{n + 1}.json", new)
         except AlreadyExists:
-            raise CommitFailed(
-                f"{identifier}: concurrent commit won version {versions[-1] + 1}"
-            ) from None
+            raise CommitFailed(f"{identifier}: concurrent commit won version {n + 1}") from None
 
     def drop(self, identifier: Identifier) -> None:
+        # only the tabular's own pointers: the prefix is also namespace
+        # ``<ns>.<name>``, whose tabulars and properties must survive
         if not self.tabular_exists(identifier):
             raise FileNotFoundError(f"no such tabular: {identifier}")
-        self.store.delete_prefix(self._prefix(identifier))
+        self.store.delete_prefix(self._prefix(identifier) + "pointer.v")
 
 
 class S3ObjectStore(ObjectStore):

@@ -140,8 +140,10 @@ class SqlCatalog(Catalog):
                 "WHERE namespace = ? AND name = ? AND metadata_location = ?",
                 (new_location, ".".join(identifier.namespace), identifier.name, expected_location),
             )
-            if cur.rowcount != 1:
-                raise CommitFailed(f"{identifier}: concurrent commit (CAS matched 0 rows)")
+        if cur.rowcount != 1:
+            if not self.tabular_exists(identifier):
+                raise FileNotFoundError(f"no such tabular: {identifier}")
+            raise CommitFailed(f"{identifier}: concurrent commit (CAS matched 0 rows)")
 
     def drop(self, identifier: Identifier) -> None:
         with self._conn() as c:

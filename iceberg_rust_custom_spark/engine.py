@@ -66,6 +66,7 @@ class Engine:
             if warehouse is None:
                 raise ValueError("pass a catalog, a catalogs dict, or a warehouse path")
             catalog = FileCatalog(warehouse)
+            warehouse = catalog.warehouse
         self.spark = spark
         self.catalog = catalog
         self.warehouse = warehouse or getattr(catalog, "warehouse", None)
@@ -192,7 +193,10 @@ class Engine:
         """The catalog kind of ``name`` ("table", "view",
         "materialized-view"), or None when nothing is registered under it."""
         catalog, ident = self.resolve(name)
-        return catalog.load(ident)[1] if catalog.tabular_exists(ident) else None
+        try:
+            return catalog.load(ident)[1]
+        except FileNotFoundError:
+            return None
 
     # --------------------------------------------------------------- queries
     def table(self, name: str, **scan_kwargs) -> DataFrame:

@@ -107,9 +107,42 @@ def test_drop_refuses_child_namespaces(catalog):
     catalog.drop_namespace(("a",))
 
 
+@pytest.mark.parametrize("catalog", BACKENDS, indirect=True)
+def test_drop_keeps_the_namespace_of_the_same_name(catalog, tmp_path):
+    """Table ``ns.t`` and namespace ``ns.t`` share a name: dropping the
+    table leaves the namespace's properties and its tabulars alone."""
+    loc = str(tmp_path / "m.metadata.json")
+    with open(loc, "w") as f:
+        f.write("{}")
+    catalog.create_namespace(("ns",))
+    catalog.create_namespace(("ns", "t"), {"k": "v"})
+    table, inner = Identifier(("ns",), "t"), Identifier(("ns", "t"), "x")
+    catalog.register(table, loc)
+    catalog.register(inner, loc)
+    catalog.drop(table)
+    assert not catalog.tabular_exists(table)
+    assert catalog.tabular_exists(inner) and catalog.load(inner)[0] == loc
+    assert catalog.list_tabulars(("ns", "t")) == [inner]
+    assert catalog.load_namespace(("ns", "t")) == {"k": "v"}
+
+
+@pytest.mark.parametrize("catalog", BACKENDS, indirect=True)
+def test_missing_tabular_raises_file_not_found(catalog):
+    """One contract for an absent tabular: load and swap raise
+    FileNotFoundError on every backend."""
+    catalog.create_namespace(("ns",))
+    ghost = Identifier(("ns",), "ghost")
+    assert not catalog.tabular_exists(ghost)
+    with pytest.raises(FileNotFoundError):
+        catalog.load(ghost)
+    with pytest.raises(FileNotFoundError):
+        catalog.swap(ghost, "a.json", "b.json")
+
+
 def test_file_catalog_concurrent_property_updates_merge(tmp_path):
-    """The versioned O_EXCL property protocol must not lose a concurrent
-    writer's update (ADVICE r6: the old read-modify-write os.replace did)."""
+    """The default catalog's versioned put-if-absent property protocol
+    must not lose a concurrent writer's update (ADVICE r6: the old
+    read-modify-write os.replace did)."""
     import threading
 
     cat = FileCatalog(str(tmp_path / "wh"))
