@@ -91,11 +91,15 @@ def test_file_catalog_loads_never_see_a_torn_pointer(swaps, tmp_path):
     assert loads[0] > 0 and not torn
 
 
-def test_staged_publish_is_no_pointer(tmp_path, monkeypatch):
+@pytest.mark.parametrize(
+    "make", [FileCatalog, lambda wh: ObjectStoreCatalog(LocalFSObjectStore(wh))]
+)
+def test_staged_publish_is_no_pointer(make, tmp_path, monkeypatch):
     """put_if_absent stages the payload in a temp file, then links it to
-    its name. While it is staged, the catalog does not count the temp
-    file as a pointer: the tabular does not exist yet."""
-    cat = FileCatalog(str(tmp_path / "wh"))
+    its name. While it is staged, neither the warehouse-rooted catalog nor
+    a bare store catalog counts the temp file as a pointer: the tabular
+    does not exist yet."""
+    cat = make(str(tmp_path / "wh"))
     ident = Identifier(("ns",), "t")
     staged, link = [], os.link
 
